@@ -1,6 +1,9 @@
 package graft
 import org.apache.spark.sql.SparkSession
 object Bench {
+  /** (wall sec, stage run ms, stage cpu ms, compiled classes) of a line. */
+  type Timing = (Double, Long, Long, Long)
+
   /** Best-effort recursive delete of a bench-scoped temp directory (the
     * snapshot / stream-source dirs are consumed within their section —
     * loads pin eagerly — so leaving them accumulated parquet across runs).
@@ -51,9 +54,16 @@ object Bench {
     // work-proportional observables that survive a noisy draw and make
     // round-over-round comparison mechanical.
     val stageAgg = new StageLog.QueryStageAgg(spark.sparkContext)
-    // (wall sec, stage run ms, stage cpu ms) for one execution of f
-    def timed(name: String)(f: => Unit): (Double, Long, Long) = {
+    // Classes Spark's codegen compiled: its cache holds 100 generated
+    // classes (spark.sql.codegen.cache.maxEntries), and every miss is a
+    // Janino compile the line pays for.
+    def compiles: Long =
+      org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    // (wall sec, stage run ms, stage cpu ms, compiled classes) for one
+    // execution of f
+    def timed(name: String)(f: => Unit): Timing = {
       stageAgg.start(name)
+      val c0 = compiles
       val t0 = System.nanoTime()
       try f
       catch { case e: Throwable =>
@@ -61,14 +71,16 @@ object Bench {
       }
       val wall = (System.nanoTime() - t0) / 1e9
       val (runMs, cpuMs) = stageAgg.finish()
-      (wall, runMs, cpuMs)
+      (wall, runMs, cpuMs, compiles - c0)
     }
     // Per-metric min over the runs: min wall is the steady-state clock a
     // quiet machine would show; min stage/cpu is the same estimator on the
     // work-proportional axis (stage time varies only a few % run-to-run,
-    // which is the point of carrying it).
-    def minEach(runs: Seq[(Double, Long, Long)]): (Double, Long, Long) =
-      (runs.map(_._1).min, runs.map(_._2).min, runs.map(_._3).min)
+    // which is the point of carrying it); min compiles is the warm run's
+    // count, what the line costs once its classes are cached.
+    def minEach(runs: Seq[Timing]): Timing =
+      (runs.map(_._1).min, runs.map(_._2).min, runs.map(_._3).min,
+        runs.map(_._4).min)
     // Optional comma-separated query-name filter for local iteration
     // (SPARK_GRAFT_ONLY=doc_pagerank,bpe_pairs); the driver never sets it.
     val only = sys.env.get("SPARK_GRAFT_ONLY")
@@ -240,7 +252,7 @@ object Bench {
     // values are spec-identical to the trained artifacts —
     // ArtifactPersistenceSpec). Skipped when the train lines were filtered
     // out (nothing warm to snapshot).
-    val reloadLines: Seq[(String, (Double, Long, Long))] =
+    val reloadLines: Seq[(String, Timing)] =
       if (!only.forall(_.contains("reload_artifacts"))) Seq.empty
       else {
         val idxKey = s"$sfDir#dedup_idx:documents"
@@ -304,7 +316,7 @@ object Bench {
     // hence the scoped ingest conf below and 500-doc batches, with real
     // crawl batch sizes amortizing the remainder. Own key namespace: the
     // standard artifacts are untouched.
-    val streamLines: Seq[(String, (Double, Long, Long))] =
+    val streamLines: Seq[(String, Timing)] =
       if (!only.forall(_.contains("stream_admit"))) Seq.empty
       else {
         import org.apache.spark.sql.functions.col
@@ -424,7 +436,7 @@ object Bench {
         // contention and any shared-cache races (correctness under this
         // exact shape is spec-locked in ServingPathSpec). Wall for the
         // 16-request batch: throughput = 16 / value. One untimed batch
-        // absorbs the per-dataset warm memos (queryLocal, columnCount).
+        // absorbs the per-dataset warm memo (Sketches.queryRows).
         val qids = Tables.sketchTables
         def mtBatch(): Unit = {
           val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
@@ -462,22 +474,23 @@ object Bench {
     val results =
       (trained ++ queryLines ++ reloadLines ++ streamLines ++
         steadyLines).toMap
-    def jmap(f: ((String, (Double, Long, Long))) => String): String =
+    def jmap(f: ((String, Timing)) => String): String =
       results.map { case (k, v) => s""""$k":${f((k, v))}""" }
         .mkString("{", ",", "}")
-    val qs = jmap { case (k, (wall, _, _)) =>
+    val qs = jmap { case (k, (wall, _, _, _)) =>
       // failed queries get a negative sentinel so the JSON can't read green
       (if (failed.contains(k)) -wall else wall).toString
     }
-    val stage = jmap { case (_, (_, runMs, _)) => runMs.toString }
-    val cpu = jmap { case (_, (_, _, cpuMs)) => cpuMs.toString }
+    val stage = jmap { case (_, (_, runMs, _, _)) => runMs.toString }
+    val cpu = jmap { case (_, (_, _, cpuMs, _)) => cpuMs.toString }
+    val compiled = jmap { case (_, (_, _, _, n)) => n.toString }
     val errs = failed.distinct.map(n => s"\"$n\"").mkString("[", ",", "]")
     val total = if (results.nonEmpty) results.values.map(_._1).sum else 0.0
     // A filtered (partial) run is marked in the JSON so it can never be
     // mistaken for a full-run BENCH.json.
     val onlyKey = only.map(s =>
       s""","only":${s.toSeq.sorted.map(n => s"\"$n\"").mkString("[", ",", "]")}""").getOrElse("")
-    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"stage_ms":$stage,"cpu_ms":$cpu,"errors":$errs,"runs_per_query":$runsPerQuery,"sf":"$sfDir"$onlyKey}"""
+    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"stage_ms":$stage,"cpu_ms":$cpu,"compiles":$compiled,"errors":$errs,"runs_per_query":$runsPerQuery,"sf":"$sfDir"$onlyKey}"""
     // Truncation-proof emission (VERDICT r15 What's wrong #4): the driver
     // captures only stdout's TAIL (~2 KB), and the full line is ~10 KB at
     // 143 queries — so BENCH_r{N}.json kept landing head-truncated with

@@ -120,10 +120,15 @@ object Caching {
   def memoLocked[K, V](cache: scala.collection.concurrent.TrieMap[K, V],
                        locks: scala.collection.concurrent.TrieMap[K, Object],
                        k: K)(build: => V): V =
-    cache.get(k).getOrElse(
-      locks.getOrElseUpdate(k, new Object).synchronized {
-        cache.getOrElseUpdate(k, build)
-      })
+    memoLockedOn(cache, locks.getOrElseUpdate(k, new Object), k)(build)
+
+  /** [[memoLocked]] under a caller-chosen lock, for a family of memos that
+    * must build and invalidate under ONE lock (the metadata corpus and the
+    * artifacts derived from it).
+    */
+  def memoLockedOn[K, V](cache: scala.collection.concurrent.TrieMap[K, V],
+                         lock: Object, k: K)(build: => V): V =
+    cache.get(k).getOrElse(lock.synchronized { cache.getOrElseUpdate(k, build) })
 
   /** Unpersist every frame registered on THIS thread (non-blocking). Call
     * after the query's action completes.

@@ -1,8 +1,8 @@
 package graft
 
-import graft.search.{Bm25, CombinedScorer, DistanceJoin, Matcher, Sketches}
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import graft.search.{CombinedScorer, DistanceJoin, Matcher, Sketches}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.{DoubleType, StringType, StructField, StructType}
 
 /** User-facing facade — the one-session replacement for danae's four
   * services. A reference user's workflow maps 1:1:
@@ -55,10 +55,30 @@ object Engine {
 
   /** Full similarity search honoring per-column and per-field weights.
     * Response rows mirror combined_search.py:152-155: result id, content /
-    * metadata / overall scores, and the column-matching payload.
+    * metadata / overall scores, and the column-matching payload. The
+    * metadata fields are scored in name order.
     */
-  def search(spark: SparkSession, dir: String, req: SearchRequest): DataFrame = {
-    val (wc, wm) = normalizeSplit(req)
+  def search(spark: SparkSession, dir: String, req: SearchRequest): DataFrame =
+    search(spark, dir, req, req.metadata.fields.keys.toSeq.sorted)
+
+  /** [[search]] with the metadata fields scored, and their weighted scores
+    * summed, in `fieldOrder` (the keys of `req.metadata.fields`).
+    *
+    * A warm request runs three Spark jobs and nothing else: the kNN ranked
+    * lists, the BM25 sums and the content matching, each collected as the
+    * request-bounded driver value it is. The query dataset's sketch rows,
+    * its metadata row and the corpus statistics are session memos; kth, the
+    * candidate ids and the metadata scores pass between the stages as
+    * driver values; the combine runs on the driver
+    * ([[CombinedScorer.combineRows]]). The answer is a LocalRelation, so
+    * the caller's collect runs no job. No request value (query id, split,
+    * M/L, column count, candidate ids, query terms) is inlined into
+    * generated code, so every request reuses the same compiled classes —
+    * Spark's codegen cache holds only 100 of them.
+    */
+  def search(spark: SparkSession, dir: String, req: SearchRequest,
+             fieldOrder: Seq[String]): DataFrame = {
+    val (wc, _) = normalizeSplit(req)
     val sketch = Sketches.cachedAll(spark, dir)
     // Column selection restricts the QUERY projection only; the index side is
     // never filtered — the reference trains on every column, so rank/kth are
@@ -66,12 +86,9 @@ object Engine {
     val queryCols =
       if (req.content.columns.isEmpty) None
       else Some(req.content.columns.keys.toSeq)
-    // request-bounded ranked list, materialized once as a LocalRelation
-    // (DistanceJoin.localRanked): its two consumers (candidate ids, kth)
-    // then broadcast without a job each
-    val qLocal = Some(Sketches.queryLocal(spark, dir, req.queryId))
-    val ranked = DistanceJoin.localRanked(DistanceJoin.knn(sketch,
-      req.queryId, req.m, req.l, queryCols = queryCols, localQuery = qLocal))
+    val qRows = Sketches.queryRows(spark, dir, req.queryId)
+    val ranked = DistanceJoin.knnLocal(sketch, req.queryId, qRows,
+      req.m, req.l, queryCols = queryCols).collect().toSeq
 
     // per-field query text: each selected metadata field is matched against
     // the query dataset's own value for that field (metadata_search.py:14-24),
@@ -82,54 +99,46 @@ object Engine {
       "title" -> qTitle,
       "keywords" -> qKeywords,
       "description" -> qDesc)
-    val fieldSpecs = normalize(req.metadata.fields).toSeq.sortBy(_._1).map {
-      case (f, w) =>
-        (f, w, fieldText(f).toLowerCase.split(" ").filter(_.nonEmpty).distinct.toSeq)
+    val fieldWeights = normalize(req.metadata.fields)
+    val fieldSpecs = fieldOrder.map { f =>
+      (f, fieldWeights(f),
+        fieldText(f).toLowerCase.split(" ").filter(_.nonEmpty).distinct.toSeq)
     }
-    // same stats-artifact serving path as CombinedScorer.search (exact
-    // integer adjustment for the excluded query dataset): literal-map stats
-    // + driver tail inside the budget (LocalRelation, candidate ids as
-    // literals — the fused 5-job request shape), DF path past it
-    val qtfReq = CombinedScorer.metaTermFreqs(spark, dir)
-      .filter(col("doc_id") =!= req.queryId && Bm25.isQueryTerm(fieldSpecs))
-    val (metaScoresP, metaIdsLocal) =
-      CombinedScorer.metaStatsLocal(spark, dir, req.queryId, fieldSpecs) match {
-        case Some((dlL, corpusL, dfreqL)) =>
-          val served = Bm25.multiFieldServed(qtfReq, dlL, corpusL, dfreqL,
-              fieldSpecs)
-            .select(col("doc_id").as("c_dataset"),
-              col("score").as("metadata_score"))
-          (served, Some(served.collect().map(_.getString(0)).toSeq))
-        case None =>
-          val (bmDl, bmCorpus, bmDfreq) =
-            CombinedScorer.metaStatsFor(spark, dir, req.queryId, fieldSpecs)
-          // pinned: consumed by candidateEdges (extra candidates) AND the
-          // final combine — one BM25 pass instead of two
-          (Caching.temp(Bm25.multiFieldWithStats(qtfReq,
-              bmDl, bmCorpus, bmDfreq, fieldSpecs)
-            .select(col("doc_id").as("c_dataset"),
-              col("score").as("metadata_score"))), None)
-      }
+    val metadata = CombinedScorer.metadataScores(spark, dir, req.queryId, fieldSpecs)
 
-    val edges = DistanceJoin.candidateEdges(sketch, req.queryId, ranked,
-      extraCandidates =
-        if (metaIdsLocal.isDefined) None
-        else Some(metaScoresP.select("c_dataset")),
-      queryCols = queryCols, localQuery = qLocal,
-      extraCandidateIds = metaIdsLocal)
+    // Complete the bipartite edges for every discovered candidate — content
+    // AND metadata hits — mirroring the reference's random access
+    // (content_search.py:358-405; combined_search.py:87-93 computes content
+    // scores for metadata-only candidates rather than zero-filling).
+    // Deliberate divergence: search_missing divides its score by the query
+    // column count (content_search.py:403 `score / r_len`) while the main
+    // content path's scale() is identity (content_search.py:434-438,
+    // normalization commented out) — an internal inconsistency; we score
+    // every candidate UNnormalized, consistently.
+    val edges = DistanceJoin.candidateEdgesLocal(sketch, req.queryId, ranked,
+      metadata.map(_._1), qRows, queryCols)
     // Exact integer-micro matching on both branches (the oracle-coverable
     // path): uniform weights apply AFTER the argmax (contentScoresExact),
     // non-uniform weights multiply the edge micros BEFORE it.
     val content =
-      if (req.content.columns.isEmpty) {
-        val nQueryCols = Sketches.columnCount(spark, dir, req.queryId)
-        Matcher.contentScoresExact(edges, nQueryCols)
-      } else {
-        Matcher.contentScoresExactWeighted(edges, microWeights(req.content.columns))
-      }
-
-    CombinedScorer.combineExact(content, metaScoresP,
+      if (req.content.columns.isEmpty)
+        Matcher.contentScoresExact(edges, qRows.size.toLong)
+      else Matcher.contentScoresExactWeighted(edges, microWeights(req.content.columns))
+    // combineExact's arithmetic, not a float round(wc·c + wm·m, 6): both
+    // inputs are 6-decimal values, and the float form lands on half-micro
+    // boundaries where Spark (half-up) and DuckDB (banker's) disagree —
+    // first observed at the sf1.0 decade probe. Integer micros + truncating
+    // DIV are engine-exact for any split (the lmScore discipline).
+    val rows = CombinedScorer.combineRows(content.collect().toSeq, metadata,
       wcMicro = math.round(wc * 1e6), k = req.k)
-      .withColumn("query_id", lit(req.queryId))
+    spark.createDataFrame(
+      java.util.Arrays.asList(rows.map(r => Row.fromSeq(r.toSeq :+ req.queryId)): _*),
+      StructType(Seq(
+        StructField("c_dataset", StringType),
+        StructField("content_score", DoubleType),
+        StructField("matching", content.schema("matching").dataType),
+        StructField("metadata_score", DoubleType),
+        StructField("overall_score", DoubleType),
+        StructField("query_id", StringType, nullable = false))))
   }
 }

@@ -27,37 +27,12 @@ object PhaseProf {
       Caching.release()
     }
     for (run <- 1 to 3) {
-      t(s"numericTemporal(string keys) buckets=$buckets run=$run") {
-        val loaded = Tables.sketchTables.map(t => t -> Tables.load(spark, sfDir, t))
-        val stream = loaded.map { case (tb, df) =>
-          ingest.Profiler.sketchValueStream(ingest.Profiler.spreadSketchCols(df), tb)
-        }.reduce(_.unionAll(_))
-        val types = loaded.flatMap { case (tb, df) =>
-          ingest.Profiler.sketchCols(df).map { case (c, ty) => (tb, c) -> ty }
-        }.toMap
-        ingest.Profiler.assembleSketchVectors(
-          ingest.Profiler.histogramQuantiles(stream, cumsumBuckets = buckets), types)
-          .write.mode("overwrite").format("noop").save()
-      }
-      t(s"numericTemporal(int cid keys) buckets=$buckets run=$run") {
-        // the round-17 production shape (Sketches.numericTemporal)
-        val loaded = Tables.sketchTables.map(t => t -> Tables.load(spark, sfDir, t))
-        val colIds = {
-          var next = -1
-          loaded.map { case (tb, df) =>
-            (tb, ingest.Profiler.sketchCols(df).map { case (c, ty) =>
-              next += 1; (c, ty, next) })
-          }
-        }
-        val stream = loaded.zip(colIds).map { case ((_, df), (_, cols)) =>
-          ingest.Profiler.valueStreamById(
-            ingest.Profiler.spreadSketchCols(df), cols)
-        }.reduce(_.unionAll(_))
-        val info = colIds.flatMap { case (tb, cols) =>
-          cols.map { case (c, ty, i) => i -> ((tb, c, ty)) } }.toMap
-        ingest.Profiler.assembleSketchVectorsById(
-          ingest.Profiler.histogramQuantilesById(stream, cumsumBuckets = buckets),
-          info)
+      t(s"numericTemporal buckets=$buckets run=$run") {
+        // the production shape (Sketches.numericTemporal) at a chosen
+        // bucket count
+        ingest.Profiler.quantileSketches(Tables.sketchTables.map { tb =>
+          tb -> ingest.Profiler.spreadSketchCols(Tables.load(spark, sfDir, tb))
+        }, cumsumBuckets = buckets)
           .write.mode("overwrite").format("noop").save()
       }
       t(s"categorical run=$run") {

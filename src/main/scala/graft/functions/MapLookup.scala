@@ -1,9 +1,11 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, GraftShim}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.types.{DataType, DoubleType, LongType}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.expressions.{Expression, LeafExpression, UnaryExpression}
+import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** O(1) hash probe of a STRING key against a DRIVER-SUPPLIED literal map —
@@ -66,6 +68,30 @@ case class LiteralMapLookup(child: Expression,
     copy(child = newChild)
 }
 
+/** A driver value that generated code reads from the class's references
+  * array instead of inlining it as a Java literal.
+  *
+  * Spark's codegen cache is keyed by generated SOURCE and holds
+  * `spark.sql.codegen.cache.maxEntries` classes (100 by default). A
+  * numeric `Literal` becomes part of that source, so a plan that differs
+  * only in a per-request number (a top-m bound, a rank) compiles classes
+  * of its own and pushes others out of the cache. The held value keeps
+  * the source identical across requests. Never foldable: ConstantFolding
+  * would turn it back into an inlined Literal.
+  */
+case class HeldValue(value: Int) extends LeafExpression {
+  override def dataType: DataType = IntegerType
+  override def foldable: Boolean = false
+  override def nullable: Boolean = false
+  override def eval(input: InternalRow): Any = value
+
+  override protected def doGenCode(ctx: CodegenContext,
+                                   ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("held", value, "java.lang.Integer")
+    ev.copy(code = code"int ${ev.value} = $ref.intValue();", isNull = FalseLiteral)
+  }
+}
+
 object MapLookup {
   /** Column-layer helpers for the two stat shapes. */
   def longLookup(key: Column, entries: Map[String, Long]): Column =
@@ -74,4 +100,14 @@ object MapLookup {
   def doubleLookup(key: Column, entries: Map[String, Double]): Column =
     GraftShim.column(LiteralMapLookup(GraftShim.expression(key),
       entries.asInstanceOf[Map[String, Any]], DoubleType))
+
+  /** `key` is one of `keys`, probed through the same reference-held hash
+    * table: unlike `isin`, whose source grows with every listed value, the
+    * generated code is the same for any set (false for a NULL key).
+    */
+  def isIn(key: Column, keys: Iterable[String]): Column =
+    longLookup(key, keys.map(_ -> 1L).toMap).isNotNull
+
+  /** An Int bound held by reference ([[HeldValue]]), not inlined. */
+  def held(v: Int): Column = GraftShim.column(HeldValue(v))
 }

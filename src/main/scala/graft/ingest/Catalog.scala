@@ -127,8 +127,8 @@ object Catalog {
     * into the sketch table, then flip its status to done (error on failure).
     * Returns the new statuses.
     *
-    * Batched by design: ALL pending datasets feed the shared
-    * (dataset_id, col_name, v) value stream, so a million-dataset backlog is
+    * Batched by design: ALL pending datasets feed the shared dense-cid
+    * (cid, v) value stream, so a million-dataset backlog is
     * ONE Spark job (one shuffle through the histogram-quantile pipeline, one
     * dynamic-partition write), not a million serial jobs — the reference
     * processes its queue one ES doc at a time (profiler.py:9-41); a batch
@@ -181,12 +181,8 @@ object Catalog {
       val (ok, bad) = validatePending(spark, lakeDir, todo)(
         df => Profiler.sketchCols(df).nonEmpty)
       ok.grouped(unionChunk).foreach { chunk =>
-        val stream = chunk.map { case (id, df) => Profiler.sketchValueStream(df, id) }
-          .reduce(_.unionAll(_))
-        val types = chunk.flatMap { case (id, df) =>
-          Profiler.sketchCols(df).map { case (c, t) => (id, c) -> t }
-        }.toMap
-        Profiler.assembleSketchVectors(Profiler.histogramQuantiles(stream), types)
+        // the index build's and refresh's pipeline (Profiler.quantileSketches)
+        Profiler.quantileSketches(chunk)
           .write.mode(SaveMode.Overwrite)
           .option("partitionOverwriteMode", "dynamic")
           .partitionBy("dataset_id").parquet(sketchDir)

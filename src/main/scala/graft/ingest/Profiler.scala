@@ -440,32 +440,13 @@ object Profiler {
 
   val sketchPs: Seq[Double] = Seq(0.0, 0.05, 0.25, 0.5, 0.75, 0.95, 1.0)
 
-  /** Long-format (col_name, v) stream of every sketchable column, temporal
-    * as epoch seconds. One scan, codegen'd, null-free.
-    */
-  private def valueStream(df: DataFrame, cols: Seq[(String, String)]): DataFrame = {
-    val entries = cols.map { case (c, t) =>
-      val d = if (t == "Temporal") s"cast(cast(`$c` as timestamp) as double)"
-              else s"cast(`$c` as double)"
-      s"struct('$c' as col_name, $d as v)"
-    }
-    df.select(expr(s"explode(array(${entries.mkString(",")})) as e"))
-      .select(col("e.col_name"), col("e.v")).filter(col("v").isNotNull)
-  }
-
-  /** (dataset_id, col_name, v) stream of a dataset's sketchable columns. */
-  def sketchValueStream(df: DataFrame, datasetId: String): DataFrame =
-    valueStream(df, sketchCols(df))
-      .select(lit(datasetId).as("dataset_id"), col("col_name"), col("v"))
-
-  /** (cid, v) stream of `cols` under caller-assigned dense INT ids — the
-    * hot-path twin of [[valueStream]] (round 17, guide §2.3): the exploded
-    * per-value row carries a 4-byte key instead of the column-name string,
-    * so the corpus-sized histogram/distinct aggregations downstream hash
-    * and compare ints (the sampled hot frame was UTF8String.getBytes inside
-    * the agg fast-map) and the shuffles carry fewer bytes per row. Values
-    * are identical to [[valueStream]]'s for the 1:1 id mapping.
-    * cols: (column name, danae type, cid).
+  /** (cid, v) stream of `cols` under caller-assigned dense INT ids, temporal
+    * as epoch seconds; one scan, codegen'd, null-free (round 17, guide
+    * §2.3): the exploded per-value row carries a 4-byte key instead of the
+    * column-name string, so the corpus-sized histogram/distinct
+    * aggregations downstream hash and compare ints (the sampled hot frame
+    * was UTF8String.getBytes inside the agg fast-map) and the shuffles
+    * carry fewer bytes per row. cols: (column name, danae type, cid).
     */
   def valueStreamById(df: DataFrame, cols: Seq[(String, String, Int)]): DataFrame = {
     val entries = cols.map { case (c, t, id) =>
@@ -507,42 +488,18 @@ object Profiler {
         df.sparkSession.sessionState.conf.numShufflePartitions)
     }
 
-  /** Exact interpolated percentiles via a distributed value histogram over a
-    * (dataset_id, col_name, v) stream — MANY datasets/columns share one
-    * shuffle: groupBy(dataset,col,value) count (map-side combine shrinks to
-    * distinct values), cumulative counts per column, then each percentile
-    * position p*(n-1) picks its bracketing values and interpolates
-    * `lower + (upper - lower) * frac` — the same formula as Spark's
-    * `percentile` and DuckDB's `quantile_cont`, but with no giant
-    * per-executor value maps: the shuffle carries only distinct values, so it
-    * survives columns with billions of rows. The cumulative pass is
-    * [[cumulativeCounts]]: one window partition per column by default,
-    * `cumsumBuckets > 1` for the two-level bucketed cumsum at extreme
-    * per-column distinct cardinality — identical results.
-    * Returns (dataset_id, col_name, dim 1-based, v) with v rounded to 6.
-    */
-  /** Cumulative counts over the per-column value histogram. `buckets <= 1`
-    * is one window partition per column — parallelism = #columns, each
-    * task holding that column's distinct values (the fixture path).
-    * `buckets > 1` is the two-level bucketed cumsum for columns with
-    * extreme distinct-value cardinality: slice each column's value range
-    * into equal-width buckets, local cumsum per slice, then per-slice
-    * subtotals (#columns × buckets rows — tiny) prefix-summed and broadcast
-    * back as offsets. Parallelism becomes #columns × buckets and no task
-    * ever materializes a whole column. Output is IDENTICAL for any bucket
-    * count (bucket order follows value order and equal values share a
-    * bucket) — asserted by ProfilerSpec, including over cached input.
-    */
-  def cumulativeCounts(hist: DataFrame, buckets: Int): DataFrame =
-    cumulativeCountsKeyed(hist, buckets, Seq("dataset_id", "col_name"))
-
-  /** [[cumulativeCounts]] generic over the column-identity key set — the
-    * round-17 hot-path form keys the histogram by a dense INT `cid`
-    * instead of two strings: the per-row hash/sort work of the
-    * corpus-sized aggregation and the cumulative sort then runs on 4-byte
-    * keys (guide §2.3, narrower types), with names re-attached on the
-    * ~#columns-sized result. Values are identical — the key mapping is
-    * 1:1, and bucket boundaries never affect the cumsum result.
+  /** Cumulative counts over the per-column value histogram, keyed by the
+    * column-identity key set `keys`. `buckets <= 1` is one window
+    * partition per column — parallelism = #columns, each task holding that
+    * column's distinct values (the fixture path). `buckets > 1` is the
+    * two-level bucketed cumsum for columns with extreme distinct-value
+    * cardinality: slice each column's value range into buckets, local
+    * cumsum per slice, then per-slice subtotals (#columns × buckets rows —
+    * tiny) prefix-summed and broadcast back as offsets. Parallelism becomes
+    * #columns × buckets and no task ever materializes a whole column.
+    * Output is IDENTICAL for any bucket count (bucket order follows value
+    * order and equal values share a bucket) — asserted by ProfilerSpec,
+    * including over cached input.
     */
   private def cumulativeCountsKeyed(hist: DataFrame, buckets: Int,
                                     keys: Seq[String]): DataFrame =
@@ -633,16 +590,30 @@ object Profiler {
       .drop("pid", "lcum")
   }
 
-  def histogramQuantiles(stream: DataFrame, ps: Seq[Double] = sketchPs,
-                         cumsumBuckets: Int = 1): DataFrame =
-    histogramQuantilesKeyed(stream, ps, cumsumBuckets,
-      Seq("dataset_id", "col_name"))
+  /** Exact interpolated percentiles via a distributed value histogram over a
+    * (dataset_id, col_name, v) stream — MANY datasets/columns share one
+    * shuffle: groupBy(dataset,col,value) count (map-side combine shrinks to
+    * distinct values), cumulative counts per column, then each percentile
+    * position p*(n-1) picks its bracketing values and interpolates
+    * `lower + (upper - lower) * frac` — the same formula as Spark's
+    * `percentile` and DuckDB's `quantile_cont`, but with no giant
+    * per-executor value maps: the shuffle carries only distinct values, so it
+    * survives columns with billions of rows. The cumulative pass is
+    * [[cumulativeCountsKeyed]], one window partition per column (the
+    * two-level bucketed cumsum is [[histogramQuantilesById]]'s option).
+    * Returns (dataset_id, col_name, dim 1-based, v) with v rounded to 6.
+    */
+  def histogramQuantiles(stream: DataFrame,
+                         ps: Seq[Double] = sketchPs): DataFrame =
+    histogramQuantilesKeyed(stream, ps, 1, Seq("dataset_id", "col_name"))
 
   /** [[histogramQuantiles]] over a dense-INT-keyed (cid, v) stream — the
     * hot-path form (see [[cumulativeCountsKeyed]]): the corpus-sized
     * histogram aggregation and cumulative sort hash/compare one int
     * instead of two strings per row. Same values per key by construction
     * (the cid ↔ (dataset, column) mapping is 1:1 and driver-known).
+    * `cumsumBuckets > 1` selects the two-level bucketed cumsum for extreme
+    * per-column distinct cardinality — identical results.
     * Returns (cid, dim, v).
     */
   def histogramQuantilesById(stream: DataFrame, ps: Seq[Double] = sketchPs,
@@ -724,28 +695,11 @@ object Profiler {
         (col("outm").cast("double") / lit(1000000.0)).as("v")): _*)
   }
 
-  /** Assemble 7-dim sketch vectors from long-format quantiles, typed via the
-    * supplied (dataset/col → danae type) mapping.
-    */
-  def assembleSketchVectors(quantiles: DataFrame,
-                            types: Map[(String, String), String]): DataFrame = {
-    val typeEntries = types.flatMap { case ((d, c), t) => Seq(lit(s"$d/$c"), lit(t)) }.toSeq
-    quantiles
-      .groupBy("dataset_id", "col_name")
-      .agg(transform(
-        array_sort(collect_list(struct(col("dim"), col("v")))),
-        s => s.getField("v")).as("vector"))
-      .select(col("dataset_id"), col("col_name"),
-        element_at(map(typeEntries: _*),
-          concat_ws("/", col("dataset_id"), col("col_name"))).as("col_type"),
-        col("vector"))
-  }
-
-  /** [[assembleSketchVectors]] over [[histogramQuantilesById]] output:
-    * vectors assemble per cid, then names/types re-attach from the
-    * driver-known id mapping via literal maps — the result is ~#columns
-    * rows, so the per-row map lookups are free. Output schema and values
-    * match [[assembleSketchVectors]] exactly.
+  /** Assemble 7-dim sketch vectors (dataset_id, col_name, col_type,
+    * vector) from [[histogramQuantilesById]] output: vectors assemble per
+    * cid, then names/types re-attach from the driver-known id mapping via
+    * literal maps — the result is ~#columns rows, so the per-row map
+    * lookups are free.
     */
   def assembleSketchVectorsById(quantiles: DataFrame,
                                 info: Map[Int, (String, String, String)]): DataFrame = {
@@ -773,15 +727,38 @@ object Profiler {
     * (content_search.py:157). Exact interpolated percentiles (Spark
     * `percentile`) so the DuckDB `quantile_cont` oracle agrees; elements
     * rounded to 6 decimals on BOTH sides to absorb float noise.
-    * One aggregation pass per dataset; rows come out long via stack.
     */
   def quantileSketch(df: DataFrame, datasetId: String): DataFrame = {
-    val cols = sketchCols(df)
-    require(cols.nonEmpty, s"$datasetId has no sketchable columns")
-    val withIds = cols.zipWithIndex.map { case ((c, t), i) => (c, t, i) }
+    require(sketchCols(df).nonEmpty, s"$datasetId has no sketchable columns")
+    quantileSketches(Seq(datasetId -> df))
+  }
+
+  /** [[quantileSketch]] rows of many datasets through ONE pipeline: every
+    * sketchable column gets a dense INT id, in dataset then column order,
+    * all datasets feed one (cid, v) stream, and one histogram-quantile pass
+    * (one shuffle) serves them all. The index build, an index refresh and
+    * the catalogue's profiling queue all run this pipeline, so a publish
+    * compiles one set of classes for it (a one-dataset profile pass and
+    * that dataset's refresh share them). Datasets without sketchable
+    * columns contribute no rows. `cumsumBuckets` as in
+    * [[histogramQuantilesById]].
+    */
+  def quantileSketches(dfs: Seq[(String, DataFrame)],
+                       cumsumBuckets: Int = 1): DataFrame = {
+    val withIds = {
+      var next = -1
+      dfs.map { case (id, df) =>
+        (id, df, sketchCols(df).map { case (c, t) => next += 1; (c, t, next) })
+      }.filter(_._3.nonEmpty)
+    }
+    require(withIds.nonEmpty, "no sketchable columns")
+    val stream = withIds.map { case (_, df, cols) => valueStreamById(df, cols) }
+      .reduce(_.unionAll(_))
+    val info = withIds.flatMap { case (id, _, cols) =>
+      cols.map { case (c, t, i) => i -> ((id, c, t)) }
+    }.toMap
     assembleSketchVectorsById(
-      histogramQuantilesById(valueStreamById(df, withIds)),
-      withIds.map { case (c, t, i) => i -> ((datasetId, c, t)) }.toMap)
+      histogramQuantilesById(stream, cumsumBuckets = cumsumBuckets), info)
   }
 
   /** Spatial bounding-box sketch [x_min, y_min, x_max, y_max]

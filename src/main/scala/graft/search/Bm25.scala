@@ -144,10 +144,15 @@ object Bm25 {
     * broadcast build is a Spark JOB even over a LocalRelation —
     * tools/BcProbe — and the warm request path is driver-latency-bound, so
     * every removed broadcast is one fewer DAGScheduler round-trip), and the
-    * per-doc aggregate is the ONE job this function runs: `wide` is
-    * collected (model-sized — one row per dataset matching a query term;
-    * the caller gates this path on the dl-entry budget described below)
-    * and the boost/max-normalization/round/rank tail
+    * per-(doc, field) aggregate is the ONE job this function runs. `qtf`
+    * need not be filtered to the query terms: `dfreq` holds exactly those
+    * terms, so the df lookup misses — and drops the row — for every other
+    * term. The aggregate is keyed by (doc_id, field) rather than one
+    * conditional sum per field, so neither the query terms nor the field
+    * list enter the generated code; every request shares its classes.
+    * The collected sums are model-sized (the caller gates this path on the
+    * dl-entry budget described below) and the
+    * boost/max-normalization/round/rank tail
     * runs in driver code that mirrors the Spark expressions
     * operation-for-operation — double multiply and left-to-right add in
     * field order, HALF_UP on BigDecimal.valueOf exactly like Round's
@@ -156,8 +161,7 @@ object Bm25 {
     * sorts FIRST exactly like Spark's desc NaN-greatest ordering; Scala's
     * tuple sort on the negated double would have put it last).
     * ServingPathSpec locks the equality against [[multiFieldWithStats]].
-    * Returns a LocalRelation, so every consumer (the candidate-id filter,
-    * the final combine) embeds it without further jobs.
+    * Returns a LocalRelation over [[multiFieldServedRows]].
     *
     * SCALE ENVELOPE: each stat lookup is an O(1)
     * [[graft.functions.LiteralMapLookup]] hash probe (NOT `element_at` on
@@ -179,7 +183,28 @@ object Bm25 {
                        fields: Seq[(String, Double, Seq[String])],
                        topM: Int = 100, k1: Double = 1.2,
                        b: Double = 0.75): DataFrame = {
-    val spark = qtf.sparkSession
+    val schema = org.apache.spark.sql.types.StructType(
+      org.apache.spark.sql.types.StructField("doc_id",
+        org.apache.spark.sql.types.StringType) +:
+        fields.map { case (f, _, _) =>
+          org.apache.spark.sql.types.StructField(s"${f}_score",
+            org.apache.spark.sql.types.DoubleType) } :+
+        org.apache.spark.sql.types.StructField("score",
+          org.apache.spark.sql.types.DoubleType))
+    qtf.sparkSession.createDataFrame(java.util.Arrays.asList(
+      multiFieldServedRows(qtf, dl, corpus, dfreq, fields, topM, k1, b): _*), schema)
+  }
+
+  /** [[multiFieldServed]]'s ranked rows as driver values:
+    * (doc_id, <field>_score..., score), best first.
+    */
+  def multiFieldServedRows(qtf: DataFrame,
+                           dl: Seq[(String, String, Long)],
+                           corpus: Seq[(String, Long, Double)],
+                           dfreq: Seq[(String, String, Long)],
+                           fields: Seq[(String, Double, Seq[String])],
+                           topM: Int = 100, k1: Double = 1.2,
+                           b: Double = 0.75): Seq[org.apache.spark.sql.Row] = {
     val sep = "\u0000" // NUL: never in a field name; terms are space-split
     import graft.functions.MapLookup.{doubleLookup, longLookup}
     def pairMap(rows: Seq[(String, String, Long)]) =
@@ -204,24 +229,25 @@ object Bm25 {
       .withColumn("term_score",
         col("idf") * (col("tf") * (lit(k1) + 1.0)) /
           (col("tf") + lit(k1) * (lit(1.0) - lit(b) + lit(b) * col("dl") / col("avgdl"))))
-    val fieldAggs = fields.map { case (f, _, _) =>
-      coalesce(sum(when(col("field") === f, col("term_score"))), lit(0.0))
-        .as(s"${f}_sum")
-    }
-    val sums = scoredTerms.groupBy("doc_id")
-      .agg(fieldAggs.head, fieldAggs.tail: _*)
-      .collect() // the one per-request job; model-sized by the budget gate
+    // the one per-request job; model-sized by the budget gate. A doc's sum
+    // for one field adds the same term scores in the same order as the
+    // stats path's conditional per-field sum.
+    val sums = scoredTerms.groupBy("doc_id", "field")
+      .agg(sum("term_score").as("s"))
+      .collect()
+      .groupBy(_.getString(0))
+      .map { case (doc, rs) => doc -> rs.map(r => r.getString(1) -> r.getDouble(2)).toMap }
     // driver tail ≡ the Spark tail of multiFieldWithStats
     def round6(x: Double): Double =
       if (x.isNaN || x.isInfinite) x
       else java.math.BigDecimal.valueOf(x)
         .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
-    val scored = sums.map { r =>
-      val raws = fields.zipWithIndex.map { case ((f, w, _), i) =>
-        r.getDouble(i + 1) * w // f_sum * boost, field order
+    val scored = sums.toSeq.map { case (doc, byField) =>
+      val raws = fields.map { case (f, w, _) =>
+        byField.getOrElse(f, 0.0) * w // f_sum * boost, field order
       }
       val raw = raws.reduce(_ + _) // left-to-right, like the Column reduce
-      (r.getString(0), raws, raw)
+      (doc, raws, raw)
     }
     val maxRaw = if (scored.isEmpty) 0.0 else scored.map(_._3).max
     // (score desc, doc_id asc) via Double.compare — NaN sorts GREATEST, so
@@ -237,19 +263,10 @@ object Bm25 {
         if (c != 0) c else a.getString(0).compareTo(b.getString(0))
       }
     }
-    val out = scored.map { case (id, raws, raw) =>
+    scored.map { case (id, raws, raw) =>
       org.apache.spark.sql.Row.fromSeq(
         id +: raws.map(x => round6(x / maxRaw)) :+ round6(raw / maxRaw))
     }.sorted(byScoreDescId).take(topM)
-    val schema = org.apache.spark.sql.types.StructType(
-      org.apache.spark.sql.types.StructField("doc_id",
-        org.apache.spark.sql.types.StringType) +:
-        fields.map { case (f, _, _) =>
-          org.apache.spark.sql.types.StructField(s"${f}_score",
-            org.apache.spark.sql.types.DoubleType) } :+
-        org.apache.spark.sql.types.StructField("score",
-          org.apache.spark.sql.types.DoubleType))
-    spark.createDataFrame(java.util.Arrays.asList(out: _*), schema)
   }
 
   /** The scoring tail of [[multiFieldWithTf]] with every corpus statistic

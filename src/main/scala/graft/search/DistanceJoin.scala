@@ -1,7 +1,7 @@
 package graft.search
 
-import graft.functions.VectorOps
-import org.apache.spark.sql.DataFrame
+import graft.functions.{MapLookup, VectorOps}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -21,6 +21,14 @@ import org.apache.spark.sql.functions._
   * an LSH bucket join — same interface, the ranked-list schema is unchanged.
   */
 object DistanceJoin {
+
+  /** The literal rank bound the served kNN gives Spark's window group limit
+    * (see [[rankAndScore]]): Spark's default
+    * `spark.sql.optimizer.windowGroupLimitThreshold`, the largest bound it
+    * applies the limit to. One value for every request shape, so it adds
+    * no per-request source.
+    */
+  private[search] val ServedGroupLimit = 1000
 
   /** 6-decimal pin for LARGE-magnitude distances (epoch-scale sketch
     * dimensions put dist near 2·10⁹): an explicit ×1e6 IEEE multiply, round
@@ -46,16 +54,45 @@ object DistanceJoin {
     *                the reference trains on every column and a selection only
     *                narrows which query columns search (ui/ui.py:299-312).
     * @param localQuery the query dataset's sketch rows as a LocalRelation
-    *                ([[Sketches.queryLocal]]): with it, the query-side
-    *                broadcast builds jobless on the warm serving path
-    *                instead of paying a scan-the-index job per request.
+    *                ([[Sketches.queryLocal]]): served like [[knnLocal]].
     *                None (ad-hoc callers) filters the index as before.
     */
   def knn(sketch: DataFrame, queryId: String, m: Int = 100, l: Int = 50,
           decay: Double = 0.01, queryCols: Option[Seq[String]] = None,
-          localQuery: Option[DataFrame] = None): DataFrame = {
-    val query = queryProjection(localQuery.getOrElse(
-      sketch.filter(col("dataset_id") === queryId)), queryCols)
+          localQuery: Option[DataFrame] = None): DataFrame =
+    localQuery match {
+      case Some(q) => knnLocal(sketch, queryId, q.collect().toSeq, m, l, decay,
+        queryCols)
+      case None =>
+        val query = queryProjection(sketch.filter(col("dataset_id") === queryId),
+          queryCols)
+        knnOver(sketch, queryId, cands => cands.join(broadcast(query), "col_type"),
+          m, l, decay, spatial = true, served = false)
+    }
+
+  /** [[knn]] for the warm serving path: the query dataset's sketch rows
+    * arrive as driver values ([[Sketches.queryRows]]) and are embedded as a
+    * literal (see [[joinLocal]]), so no broadcast is built. m and l are
+    * held by reference ([[graft.functions.HeldValue]]) rather than inlined,
+    * so the UI (M100/L50) and API (M30/L10) shapes share generated classes;
+    * Spark's window group limit still prunes before the shuffle, on the
+    * fixed literal [[ServedGroupLimit]] (see [[rankAndScore]]).
+    * The query's column types are known here, so a query without Spatial
+    * columns skips the separate selection ranking: only same-type columns
+    * pair, the selection metric then equals the scoring one, and the
+    * top-m by (dist, c_dataset, c_col) is the same set.
+    */
+  def knnLocal(sketch: DataFrame, queryId: String, queryRows: Seq[Row],
+               m: Int = 100, l: Int = 50, decay: Double = 0.01,
+               queryCols: Option[Seq[String]] = None): DataFrame =
+    knnOver(sketch, queryId,
+      cands => joinLocal(cands, queryRows, queryCols), m, l, decay,
+      spatial = queryRows.exists(_.getString(2) == "Spatial"), served = true)
+
+  private def knnOver(sketch: DataFrame, queryId: String,
+                      pairWithQuery: DataFrame => DataFrame,
+                      m: Int, l: Int, decay: Double,
+                      spatial: Boolean, served: Boolean): DataFrame = {
     // The index contains the query dataset's own columns too
     // (content_search.py:215-253 trains on every dataset): they occupy rank
     // positions and can BE the kth distance (a sibling column at non-zero
@@ -69,13 +106,15 @@ object DistanceJoin {
     // (index.py:37-43) — while SCORING (dist/kth/sim) is always euclidean on
     // the sketch vector (content_search.py:58-70). For non-spatial types the
     // two coincide.
-    val joined = joinQuery(cands, query, localQuery.isDefined)
+    val withDist = pairWithQuery(cands)
       .withColumn("dist", round6micro(VectorOps.euclid(col("q_vec"), col("c_vec"))))
-      .withColumn("sel_dist", when(col("col_type") === "Spatial",
-        round6micro(VectorOps.rectMinDist(col("q_vec"), col("c_vec"))))
-        .otherwise(col("dist")))
-      .drop("q_vec", "c_vec")
-    rankAndScore(joined, m, l, decay)
+    val joined =
+      (if (!spatial) withDist
+       else withDist.withColumn("sel_dist", when(col("col_type") === "Spatial",
+         round6micro(VectorOps.rectMinDist(col("q_vec"), col("c_vec"))))
+         .otherwise(col("dist"))))
+        .drop("q_vec", "c_vec")
+    rankAndScore(joined, m, l, decay, served)
       .filter(col("c_dataset") =!= queryId)
   }
 
@@ -89,34 +128,36 @@ object DistanceJoin {
   }
 
   /** The per-type many-to-many pairing of candidate columns with query
-    * columns. Batch path (`local = false`): a broadcast hash join on
-    * col_type. Warm serving path (`local = true`, the query projection is a
-    * LocalRelation): the query rows are embedded as an exploded LITERAL —
-    * col_type → array<struct<q_col, q_vec>> — because on this runtime a
-    * broadcast build is a Spark JOB even over a LocalRelation
-    * (tools/BcProbe), and the request path is driver-latency-bound.
-    * explode(element_at(map, col_type)) yields no rows for a type with no
-    * query columns — exactly the inner join's drop — and the same
-    * (q_col, q_vec) values pair with each candidate row, so every
+    * columns that arrive as DRIVER rows (sketch-table schema): the query
+    * rows are embedded as an exploded LITERAL — col_type →
+    * array<struct<q_col, q_vec>> — because on this runtime a broadcast
+    * build is a Spark JOB even over a LocalRelation (tools/BcProbe), and
+    * the request path is driver-latency-bound. The literal folds into one
+    * reference-held map, so the generated code is the same for every query
+    * dataset. explode(element_at(map, col_type)) yields no rows for a type
+    * with no query columns — exactly the broadcast inner join's drop — and
+    * the same (q_col, q_vec) values pair with each candidate row, so every
     * downstream distance/rank/kth value is bit-identical (oracle-locked).
     */
-  private def joinQuery(cands: DataFrame, query: DataFrame,
-                        local: Boolean): DataFrame = {
-    lazy val rows = query.collect() // LocalRelation when local: jobless
-    if (!local || rows.isEmpty) cands.join(broadcast(query), "col_type")
-    else {
-      val arms = rows.groupBy(_.getString(1)).toSeq.map { case (ct, rs) =>
-        lit(ct) -> array(rs.map { r =>
-          struct(lit(r.getString(0)).as("q_col"),
-            typedLit(r.getSeq[Double](2).toSeq).as("q_vec"))
-        }: _*)
-      }
-      val qmap = map(arms.flatMap { case (k, v) => Seq(k, v) }: _*)
-      cands.withColumn("__q", explode(element_at(qmap, col("col_type"))))
-        .withColumn("q_col", col("__q.q_col"))
-        .withColumn("q_vec", col("__q.q_vec"))
-        .drop("__q")
+  private def joinLocal(cands: DataFrame, queryRows: Seq[Row],
+                        queryCols: Option[Seq[String]]): DataFrame = {
+    val rows = queryCols.fold(queryRows)(cs =>
+      queryRows.filter(r => cs.contains(r.getString(1))))
+    if (rows.isEmpty) // nothing to pair with: the join's empty result
+      return cands.filter(lit(false))
+        .withColumn("q_col", lit(null).cast("string"))
+        .withColumn("q_vec", lit(null).cast("array<double>"))
+    val arms = rows.groupBy(_.getString(2)).toSeq.map { case (ct, rs) =>
+      lit(ct) -> array(rs.map { r =>
+        struct(lit(r.getString(1)).as("q_col"),
+          typedLit(r.getSeq[Double](3)).as("q_vec"))
+      }: _*)
     }
+    val qmap = map(arms.flatMap { case (k, v) => Seq(k, v) }: _*)
+    cands.withColumn("__q", explode(element_at(qmap, col("col_type"))))
+      .withColumn("q_col", col("__q.q_col"))
+      .withColumn("q_vec", col("__q.q_vec"))
+      .drop("__q")
   }
 
   /** Shared tail of both kNN paths: rank per query column, kth-distance
@@ -126,22 +167,39 @@ object DistanceJoin {
     * survivors are picked by it, then ranks/kth/sims always follow `dist`
     * (the reference re-scores the R-tree's M nearest with euclidean,
     * content_search.py:78-96).
+    *
+    * `served` holds m and l by reference ([[MapLookup.held]]) so every
+    * request shape shares generated classes. Spark infers its window group
+    * limit (a per-partition top-k before the shuffle) only from a LITERAL
+    * rank bound, so a served rank filter also carries the fixed literal
+    * [[ServedGroupLimit]] whenever m is within it: `rank <= cap` is implied
+    * by `rank <= m` and changes no row, but keeps the pre-shuffle pruning.
+    * Measured on an 860k-row index (4 cores, m=100): a held m alone shuffled
+    * 60 MB and took 7.5 s per kNN; with the cap 0.8 MB and 1.8 s, the same
+    * as a literal m.
     */
   private[search] def rankAndScore(joined: DataFrame, m: Int, l: Int,
-                                   decay: Double): DataFrame = {
+                                   decay: Double,
+                                   served: Boolean = false): DataFrame = {
+    def withinM(rank: Column): Column =
+      if (!served) rank <= lit(m)
+      else if (m <= ServedGroupLimit)
+        rank <= MapLookup.held(m) && rank <= lit(ServedGroupLimit)
+      else rank <= MapLookup.held(m)
+    val lC = if (served) MapLookup.held(l) else lit(l)
     val selected =
       if (!joined.columns.contains("sel_dist")) joined
       else {
         val selW = Window.partitionBy("q_col")
           .orderBy(col("sel_dist").asc, col("c_dataset").asc, col("c_col").asc)
         joined.withColumn("sel_rank", row_number().over(selW))
-          .filter(col("sel_rank") <= m)
+          .filter(withinM(col("sel_rank")))
           .drop("sel_rank", "sel_dist")
       }
     val rankW = Window.partitionBy("q_col")
       .orderBy(col("dist").asc, col("c_dataset").asc, col("c_col").asc)
     val ranked = selected.withColumn("rank", row_number().over(rankW))
-      .filter(col("rank") <= m)
+      .filter(withinM(col("rank")))
 
     // kth (content_search.py:88-96): take the sorted distance at position
     // min(L, n) COUNTING ZEROS, then advance past zeros — equivalently the
@@ -158,7 +216,7 @@ object DistanceJoin {
     ranked
       .withColumn("n_cand", count(lit(1)).over(part))
       .withColumn("kth", coalesce(
-        min(when(col("rank") >= least(lit(l), col("n_cand")) && col("dist") > 0,
+        min(when(col("rank") >= least(lC, col("n_cand")) && col("dist") > 0,
           col("dist"))).over(part),
         lit(1e-12)))
       .drop("n_cand")
@@ -231,61 +289,37 @@ object DistanceJoin {
       .filter(col("c_dataset") =!= queryId)
   }
 
-  /** Complete bipartite edge set for the candidate datasets the kNN step
-    * discovered — the reference's "random access": for every discovered
-    * candidate, edges cover ALL same-type (query col, candidate col) pairs,
-    * computing distances directly for pairs that never made a ranked list
-    * (content_search.py:300-333 + search_missing 358-405). kth comes from
-    * the ranked lists. This is a join against the sketch table restricted to
-    * candidate datasets — a broadcast of candidate ids at scale.
-    */
   /** Materialize a ranked list as a LocalRelation. Ranked lists are
     * REQUEST-bounded by construction (≤ m rows per query column — the same
     * driver-side object the reference's TA combiner iterates,
     * combined_search.py:44-111), so the collect is m·#query-columns rows
-    * regardless of lake scale. One collect replaces the query-scoped
-    * persist whose cached plan each consumer (the kth table, the candidate
-    * ids) re-scanned as its own broadcast-build JOB — with a LocalRelation
-    * every downstream join embeds the list as a LocalTableScan that
-    * broadcasts without a job, cutting per-request driver latency on the
-    * warm serving path.
+    * regardless of lake scale.
     */
   def localRanked(ranked: DataFrame): DataFrame =
     ranked.sparkSession.createDataFrame(
       java.util.Arrays.asList(ranked.collect(): _*), ranked.schema)
 
+  /** Complete bipartite edge set for the candidate datasets the kNN step
+    * discovered — the reference's "random access": for every discovered
+    * candidate, edges cover ALL same-type (query col, candidate col) pairs,
+    * computing distances directly for pairs that never made a ranked list
+    * (content_search.py:300-333 + search_missing 358-405). kth comes from
+    * the ranked lists. Extra (metadata) candidates arrive either as a
+    * DataFrame, joined LEFT SEMI, or as driver ids (`extraCandidateIds`),
+    * probed like [[candidateEdgesLocal]]; with `localQuery` the query side
+    * is served like [[knnLocal]].
+    */
   def candidateEdges(sketch: DataFrame, queryId: String, ranked: DataFrame,
                      decay: Double = 0.01,
                      extraCandidates: Option[DataFrame] = None,
                      queryCols: Option[Seq[String]] = None,
                      localQuery: Option[DataFrame] = None,
                      extraCandidateIds: Option[Seq[String]] = None): DataFrame = {
-    // ranked is request-bounded (a LocalRelation from [[localRanked]] on
-    // the serving path), so the per-q_col kth is DRIVER-resident: serve it
-    // as a literal MAP lookup compiled into the edge stream instead of a
-    // broadcast join — a broadcast build is a Spark JOB even over a
-    // LocalRelation on this runtime (tools/BcProbe), and the request path
-    // is driver-latency-bound. The isNotNull filter replicates the former
-    // INNER join: edges whose q_col never made a ranked list drop.
-    val kthRows = ranked.select("q_col", "kth").collect().distinct
-    val kthM =
-      if (kthRows.isEmpty) map()
-      else map(kthRows.flatMap(r =>
-        Seq(lit(r.getString(0)), lit(r.getDouble(1)))).toSeq: _*)
-    val query = queryProjection(localQuery.getOrElse(
-      sketch.filter(col("dataset_id") === queryId)), queryCols)
+    val rankedRows = ranked.select("q_col", "kth", "c_dataset").collect()
+    val kth = kthOf(rankedRows)
     val candCols = extraCandidateIds match {
       case Some(extraIds) =>
-        // serving path: ranked is a LocalRelation (jobless collect) and the
-        // extra (metadata) candidates arrived as driver values, so the
-        // whole candidate id set compiles into the sketch scan as an isin
-        // predicate — no broadcast exchange, no per-request job
-        val ids = (ranked.select("c_dataset").collect().map(_.getString(0))
-          ++ extraIds).distinct.filterNot(_ == queryId).toSeq
-        sketch.filter(col("dataset_id").isin(ids: _*))
-          .select(col("dataset_id").as("c_dataset"),
-            col("col_name").as("c_col"), col("col_type"),
-            col("vector").as("c_vec"))
+        probeCandidates(sketch, queryId, rankedRows.map(_.getString(2)) ++ extraIds)
       case None =>
         val rankedIds = ranked.select(col("c_dataset").as("dataset_id"))
         // LEFT SEMI against the candidate ids: a semi join needs no
@@ -301,7 +335,64 @@ object DistanceJoin {
             col("col_name").as("c_col"), col("col_type"),
             col("vector").as("c_vec"))
     }
-    joinQuery(candCols, query, localQuery.isDefined)
+    val paired = localQuery match {
+      case Some(q) => joinLocal(candCols, q.collect().toSeq, queryCols)
+      case None => candCols.join(broadcast(queryProjection(
+        sketch.filter(col("dataset_id") === queryId), queryCols)), "col_type")
+    }
+    scoreEdges(paired, kth, decay)
+  }
+
+  /** [[candidateEdges]] for the warm serving path, over driver values only:
+    * the collected ranked list (its per-q_col kth and its candidate ids),
+    * the metadata candidates' ids and the query dataset's sketch rows.
+    * Nothing request-specific enters the generated code: the candidate ids
+    * are probed through a reference-held hash set
+    * ([[graft.functions.MapLookup.isIn]]; an `isin` list compiles every id
+    * into the source), and kth and the query rows fold into reference-held
+    * map literals.
+    */
+  def candidateEdgesLocal(sketch: DataFrame, queryId: String,
+                          ranked: Seq[Row], extraIds: Seq[String],
+                          queryRows: Seq[Row],
+                          queryCols: Option[Seq[String]] = None,
+                          decay: Double = 0.01): DataFrame = {
+    val rankedRows = ranked.map(r =>
+      Row(r.getAs[String]("q_col"), r.getAs[Double]("kth"), r.getAs[String]("c_dataset")))
+    val candCols = probeCandidates(sketch, queryId,
+      rankedRows.map(_.getString(2)) ++ extraIds)
+    scoreEdges(joinLocal(candCols, queryRows, queryCols),
+      kthOf(rankedRows), decay)
+  }
+
+  /** Per-q_col kth of a ranked list's (q_col, kth, ...) rows. */
+  private def kthOf(rows: Seq[Row]): Map[String, Double] =
+    rows.map(r => r.getString(0) -> r.getDouble(1)).toMap
+
+  /** The sketch rows of the candidate datasets `ids` (the query dataset
+    * excluded) as (c_dataset, c_col, col_type, c_vec).
+    */
+  private def probeCandidates(sketch: DataFrame, queryId: String,
+                              ids: Seq[String]): DataFrame =
+    sketch.filter(MapLookup.isIn(col("dataset_id"), ids.toSet - queryId))
+      .select(col("dataset_id").as("c_dataset"),
+        col("col_name").as("c_col"), col("col_type"),
+        col("vector").as("c_vec"))
+
+  /** Distances and sims of paired (candidate, query) columns, normalized
+    * by the ranked lists' per-q_col kth. kth is request-bounded and
+    * driver-resident, so it is served as a map literal instead of a
+    * broadcast join (a broadcast build is a Spark JOB even over a
+    * LocalRelation on this runtime — tools/BcProbe). The isNotNull filter
+    * replicates the former INNER join: edges whose q_col never made a
+    * ranked list drop.
+    */
+  private def scoreEdges(paired: DataFrame, kth: Map[String, Double],
+                         decay: Double): DataFrame = {
+    val kthM =
+      if (kth.isEmpty) map()
+      else map(kth.toSeq.flatMap { case (q, v) => Seq(lit(q), lit(v)) }: _*)
+    paired
       .withColumn("dist", round6micro(VectorOps.euclid(col("q_vec"), col("c_vec"))))
       .drop("q_vec", "c_vec")
       .withColumn("kth", element_at(kthM, col("q_col")))

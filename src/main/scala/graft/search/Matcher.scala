@@ -87,32 +87,35 @@ object Matcher {
     (total, assign)
   }
 
-  /** Content score per candidate dataset: group the weighted ranked lists by
-    * candidate, build the bipartite edge set (q_col ↔ c_col, weight = w*sim),
-    * and sum the max-weight matching (content_search.py:335-345). Returns
-    * (c_dataset, content_score, matching array<struct(q_col,c_col,weight)>).
-    * The score is deliberately NOT normalized by column count — the
-    * reference's scaling is commented out (content_search.py:434-438).
+  /** Max-weight matching of one candidate's edges (q_col, c_col, w), each
+    * weight multiplied by its query column's `colWeight`: the total and
+    * the matched (q_col, c_col, weight) edges with weight > 0.
     */
-  def contentScores(weightedRanked: DataFrame): DataFrame = {
-    val matchUdf = udf { (edges: Seq[Row]) =>
-      val qCols = edges.map(_.getString(0)).distinct.sorted
-      val cCols = edges.map(_.getString(1)).distinct.sorted
-      val qIdx = qCols.zipWithIndex.toMap
-      val cIdx = cCols.zipWithIndex.toMap
-      val w = Array.ofDim[Double](qCols.size, cCols.size)
-      edges.foreach { e =>
-        val i = qIdx(e.getString(0)); val j = cIdx(e.getString(1))
-        w(i)(j) = math.max(w(i)(j), e.getDouble(2))
-      }
-      val (score, assign) = maxWeight(w)
-      val matched = for {
-        i <- qCols.indices
-        j = assign(i) if j >= 0 && w(i)(j) > 0
-      } yield (qCols(i), cCols(j), w(i)(j))
-      (BigDecimal(score).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble,
-        matched)
+  private def matchEdges(edges: Seq[Row], colWeight: String => Double)
+  : (Double, Seq[(String, String, Double)]) = {
+    val qCols = edges.map(_.getString(0)).distinct.sorted
+    val cCols = edges.map(_.getString(1)).distinct.sorted
+    val qIdx = qCols.zipWithIndex.toMap
+    val cIdx = cCols.zipWithIndex.toMap
+    val w = Array.ofDim[Double](qCols.size, cCols.size)
+    edges.foreach { e =>
+      val i = qIdx(e.getString(0)); val j = cIdx(e.getString(1))
+      w(i)(j) = math.max(w(i)(j), colWeight(e.getString(0)) * e.getDouble(2))
     }
+    val (score, assign) = maxWeight(w)
+    val matched = for {
+      i <- qCols.indices
+      j = assign(i) if j >= 0 && w(i)(j) > 0
+    } yield (qCols(i), cCols(j), w(i)(j))
+    (score, matched)
+  }
+
+  /** Per-candidate edge lists of (q_col, c_col, w_sim) rows, scored by
+    * `score` inside the executor-local matching UDF.
+    */
+  private def matchPerCandidate(weightedRanked: DataFrame)
+                               (score: Seq[Row] => (Double, Seq[MatchedEdge])): DataFrame = {
+    val matchUdf = udf(score)
     weightedRanked
       .groupBy(col("c_dataset"))
       .agg(collect_list(struct(col("q_col"), col("c_col"), col("w_sim"))).as("edges"))
@@ -120,6 +123,20 @@ object Matcher {
       .select(col("c_dataset"), col("m._1").as("content_score"),
         col("m._2").as("matching"))
   }
+
+  /** Content score per candidate dataset: group the weighted ranked lists by
+    * candidate, build the bipartite edge set (q_col ↔ c_col, weight = w*sim),
+    * and sum the max-weight matching (content_search.py:335-345). Returns
+    * (c_dataset, content_score, matching array<struct(q_col,c_col,weight)>).
+    * The score is deliberately NOT normalized by column count — the
+    * reference's scaling is commented out (content_search.py:434-438).
+    */
+  def contentScores(weightedRanked: DataFrame): DataFrame =
+    matchPerCandidate(weightedRanked) { edges =>
+      val (score, matched) = matchEdges(edges, _ => 1.0)
+      (BigDecimal(score).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble,
+        matched.map { case (q, c, w) => MatchedEdge(q, c, w) })
+    }
 
   /** Content scores with EXACT cross-engine-reproducible arithmetic: the
     * matching runs on integer micro-weights `round(sim * 1e6)` (sims are
@@ -136,17 +153,8 @@ object Matcher {
     * positive integer division is identical in every engine.
     * Matching payload weights are rescaled back to w*sim.
     */
-  def contentScoresExact(edges: DataFrame, totalQueryCols: Long): DataFrame = {
-    val scored = contentScores(
-      edges.withColumn("w_sim", round(col("sim") * 1e6)))
-    val n = totalQueryCols
-    scored.select(
-      col("c_dataset"),
-      (expr(s"CAST(content_score AS BIGINT) DIV $n").cast("double") / 1e6)
-        .as("content_score"),
-      expr(s"transform(matching, e -> struct(e._1 AS q_col, e._2 AS c_col, " +
-        s"CAST(CAST(e._3 AS BIGINT) DIV $n AS DOUBLE) / 1e6 AS weight))").as("matching"))
-  }
+  def contentScoresExact(edges: DataFrame, totalQueryCols: Long): DataFrame =
+    exactScores(edges, _ => 1.0, totalQueryCols)
 
   /** Exact content scores under NON-UNIFORM per-query-column weights. The
     * weights arrive as integer micro-numerators (normalized to sum exactly
@@ -161,19 +169,31 @@ object Matcher {
     * deselected it but an edge slipped through — defensive).
     */
   def contentScoresExactWeighted(edges: DataFrame,
-                                 microWeights: Map[String, Long]): DataFrame = {
-    val entries = microWeights.flatMap { case (k, v) =>
-      Seq(lit(k), lit(v)) }.toSeq
-    val scored = contentScores(
-      edges.withColumn("w_sim",
-        coalesce(element_at(map(entries: _*), col("q_col")), lit(0L)).cast("double")
-          * round(col("sim") * 1e6)))
-    scored.select(
-      col("c_dataset"),
-      (expr("CAST(content_score AS BIGINT) DIV 1000000").cast("double") / 1e6)
-        .as("content_score"),
-      expr("transform(matching, e -> struct(e._1 AS q_col, e._2 AS c_col, " +
-        "CAST(CAST(e._3 AS BIGINT) DIV 1000000 AS DOUBLE) / 1e6 AS weight))")
-        .as("matching"))
+                                 microWeights: Map[String, Long]): DataFrame =
+    exactScores(edges, q => microWeights.getOrElse(q, 0L).toDouble, 1000000L)
+
+  /** The exact form both entry points share, with the column weights and
+    * the divisor applied inside the matching closure: the edge micros
+    * `round(sim * 1e6)` are multiplied by their query column's weight (1
+    * in the uniform case, which leaves them unchanged), and the integer
+    * total and each matched weight are truncating-divided by `divisor`,
+    * then scaled to 1e-6 units — the former SQL tail's
+    * `CAST(x AS BIGINT) DIV n`, cast back to DOUBLE, divided by 1e6 (the
+    * totals are integer-valued doubles, so the former 6-decimal round
+    * before the cast was the identity). Neither the weights nor the
+    * divisor — the query dataset's column count in the uniform case —
+    * enter generated code, so uniform and weighted requests over every
+    * query dataset share one set of compiled classes.
+    */
+  private def exactScores(edges: DataFrame, colWeight: String => Double,
+                          divisor: Long): DataFrame = {
+    def scaled(x: Double): Double = (x.toLong / divisor).toDouble / 1e6
+    matchPerCandidate(edges.withColumn("w_sim", round(col("sim") * 1e6))) { es =>
+      val (score, matched) = matchEdges(es, colWeight)
+      (scaled(score), matched.map { case (q, c, w) => MatchedEdge(q, c, scaled(w)) })
+    }
   }
 }
+
+/** One matched (query column, candidate column) edge of a content score. */
+case class MatchedEdge(q_col: String, c_col: String, weight: Double)

@@ -2,7 +2,7 @@ package graft.search
 
 import graft.Tables
 import graft.ingest.{Embedder, Profiler, TermStats}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Builds the central column-sketch table — the Spark replacement for both
@@ -60,24 +60,11 @@ object Sketches {
     // (round 17, guide §2.3): the per-value rows and the histogram
     // aggregation/cumsum keys are a 4-byte cid instead of two strings —
     // the sampled hot frame of the build was UTF8String hashing inside the
-    // agg fast-map. Names/types re-attach on the ~#columns result
-    // (assembleSketchVectorsById); values are identical (1:1 mapping).
-    val colIds = {
-      var next = -1
-      loaded.map { case (t, df) =>
-        (t, Profiler.sketchCols(df).map { case (c, ty) =>
-          next += 1; (c, ty, next) })
-      }
-    }
-    val stream = loaded.zip(colIds).map { case ((_, df), (_, cols)) =>
-      Profiler.valueStreamById(Profiler.spreadSketchCols(df), cols)
-    }.reduce(_.unionAll(_))
-    val info = colIds.flatMap { case (t, cols) =>
-      cols.map { case (c, ty, i) => i -> ((t, c, ty)) }
-    }.toMap
-    Profiler.assembleSketchVectorsById(
-      Profiler.histogramQuantilesById(stream, cumsumBuckets = buckets),
-      info)
+    // agg fast-map. The spread keeps exactly the sketch columns, so the
+    // ids and values match an unspread build.
+    Profiler.quantileSketches(
+      loaded.map { case (t, df) => t -> Profiler.spreadSketchCols(df) },
+      cumsumBuckets = buckets)
   }
 
   /** Categorical sketches: per string column, top-10 TF terms of the cell
@@ -271,56 +258,54 @@ object Sketches {
     */
   def reset(spark: SparkSession, dir: String): Unit = {
     val appId = spark.sparkContext.applicationId
-    cache.remove((appId, dir)).foreach(_.unpersist(blocking = false))
-    colCountCache.keys.filter(k => k._1 == appId && k._2 == dir)
-      .foreach(colCountCache.remove)
-    queryRowsCache.keys.filter(k => k._1 == appId && k._2 == dir)
-      .foreach(queryRowsCache.remove)
+    memoSwap.synchronized {
+      cache.remove((appId, dir)).foreach(_.unpersist(blocking = false))
+      queryRowsCache.keys.filter(k => k._1 == appId && k._2 == dir)
+        .foreach(queryRowsCache.remove)
+    }
   }
 
-  private val colCountCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String, String), Long]
-
-  /** Number of index rows (= profiled columns) of one dataset, memoized per
-    * (session, dir, dataset). Every search request needs its query's column
-    * count for the uniform matching weight; without the memo each request
-    * pays a count JOB over the pinned index — pure driver/scheduling
-    * latency on the warm serving path. The memo is demand-filled, so its
-    * footprint is bounded by the QUERIED working set (never #datasets — at
-    * lake scale the index has ~10^8 rows and an eager per-dataset count
-    * map would not be catalog-sized). Entries drop on [[reset]] and on
-    * [[refreshDataset]] for the refreshed dataset (a refresh can change a
-    * dataset's column set).
-    */
-  def columnCount(spark: SparkSession, dir: String, datasetId: String): Long =
-    colCountCache.getOrElseUpdate(
-      (spark.sparkContext.applicationId, dir, datasetId),
-      cachedAll(spark, dir)
-        .filter(org.apache.spark.sql.functions.col("dataset_id") === datasetId)
-        .count())
-
   private val queryRowsCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String, String), DataFrame]
+    scala.collection.concurrent.TrieMap.empty[(String, String, String), Seq[Row]]
 
-  /** ONE dataset's sketch rows as a LocalRelation, memoized per (session,
-    * dir, dataset) — the query side of every search. As a filter on the
-    * pinned index, each of its broadcasts (the kNN join and the
-    * candidate-edges join both consume it) pays a broadcast-BUILD job per
-    * request — pure driver/scheduling latency on the warm serving path; a
-    * LocalRelation broadcasts jobless (BroadcastExchange collects a
-    * LocalTableScan driver-side). Request-bounded by construction: one
-    * dataset's columns, the same rows the reference loads into memory per
-    * query (content_search.py:72-96). Demand-filled like [[columnCount]],
-    * and invalidated with it on [[reset]]/[[refreshDataset]].
+  /** Orders index swaps and [[queryRowsCache]] updates (see [[queryRows]]). */
+  private val memoSwap = new Object
+
+  /** ONE dataset's sketch rows as driver values, memoized per (session,
+    * dir, dataset) — the query side of every search. Request-bounded by
+    * construction: one dataset's columns, the same rows the reference loads
+    * into memory per query (content_search.py:72-96). The memo is
+    * demand-filled, so its footprint is bounded by the QUERIED working set
+    * (never #datasets — at lake scale the index has ~10^8 rows).
+    *
+    * A fill publishes its rows only if the index it read is still the live
+    * one, checked under the lock [[refreshDataset]] swaps the index and
+    * drops the refreshed dataset's entry under ([[memoSwap]]; held for a
+    * reference check and a map update, never for a Spark job, so a fill
+    * does not wait for a running refresh). Without the check, a
+    * request that read the index just before a refresh would re-insert
+    * the old version's rows just after the refresh dropped them, and every
+    * later request would search with the old version as its query.
     */
+  def queryRows(spark: SparkSession, dir: String, datasetId: String): Seq[Row] = {
+    val key = (spark.sparkContext.applicationId, dir)
+    val k = (key._1, dir, datasetId)
+    queryRowsCache.getOrElse(k, {
+      val index = cachedAll(spark, dir)
+      val rows = index
+        .filter(org.apache.spark.sql.functions.col("dataset_id") === datasetId)
+        .collect().toSeq
+      memoSwap.synchronized {
+        if (cache.get(key).exists(_ eq index)) queryRowsCache.putIfAbsent(k, rows)
+      }
+      rows
+    })
+  }
+
+  /** [[queryRows]] as a LocalRelation (sketch-table schema). */
   def queryLocal(spark: SparkSession, dir: String, datasetId: String): DataFrame =
-    queryRowsCache.getOrElseUpdate(
-      (spark.sparkContext.applicationId, dir, datasetId), {
-        val q = cachedAll(spark, dir)
-          .filter(org.apache.spark.sql.functions.col("dataset_id") === datasetId)
-        spark.createDataFrame(
-          java.util.Arrays.asList(q.collect(): _*), q.schema)
-      })
+    spark.createDataFrame(java.util.Arrays.asList(queryRows(spark, dir, datasetId): _*),
+      cachedAll(spark, dir).schema)
 
   def cachedNumericTemporal(spark: SparkSession, dir: String): DataFrame =
     cachedAll(spark, dir).filter(org.apache.spark.sql.functions.col("col_type")
@@ -368,16 +353,17 @@ object Sketches {
         .unionAll(fresh.select(old.columns.map(org.apache.spark.sql.functions.col): _*))
         .repartition(1)
       val updatedPinned = graft.Caching.pinArtifact(updated)
-      cache.put(key, updatedPinned)
+      memoSwap.synchronized {
+        cache.put(key, updatedPinned)
+        queryRowsCache.remove((key._1, dir, datasetId))
+      }
       val oldIsCheckpoint = old.queryExecution.analyzed.collectFirst {
         case _: org.apache.spark.sql.execution.LogicalRDD => ()
       }.isDefined
       if (!oldIsCheckpoint) old.unpersist(blocking = false)
-      colCountCache.remove((key._1, dir, datasetId))
-      queryRowsCache.remove((key._1, dir, datasetId))
-      // the metadata corpus is derived from table schemas, which a refresh
-      // can change — rebuild the BM25 artifacts on next use
-      CombinedScorer.invalidateMetadata(spark, dir)
+      // the metadata corpus is derived from table schemas: its BM25
+      // artifacts rebuild on next use only if this version's columns differ
+      CombinedScorer.refreshMetadata(spark, dir, datasetId, df.columns.toSeq)
       // same family: the table's TF artifact is derived from its rows
       graft.ingest.TermStats.resetTermFreqs(spark, s"$dir#tf:$datasetId")
       // ... as are the dedup-family artifacts built over the table under

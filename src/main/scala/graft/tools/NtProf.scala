@@ -18,15 +18,23 @@ object NtProf {
     def gcMs: Long = java.lang.management.ManagementFactory
       .getGarbageCollectorMXBeans.asScala.map(_.getCollectionTime).sum
     spark.range(1000000).selectExpr("sum(id)").collect()
+    // dense column ids across the tables, as Profiler.quantileSketches
+    // assigns them
+    def withIds(loaded: Seq[(String, org.apache.spark.sql.DataFrame)]) = {
+      var next = -1
+      loaded.map { case (_, df) =>
+        df -> Profiler.sketchCols(df).map { case (c, t) => next += 1; (c, t, next) }
+      }
+    }
     for (run <- 1 to 3) {
       val g0 = gcMs
       val smp = if (run == 2) Some(Prof.sampler(60)) else None
       Prof.time(s"valueStream+hist(spread) run=$run") {
         val loaded = Tables.sketchTables.map(t => t -> Tables.load(spark, dir, t))
-        val stream = loaded.map { case (tb, df) =>
-          Profiler.sketchValueStream(Profiler.spreadSketchCols(df), tb)
+        val stream = withIds(loaded).map { case (df, cols) =>
+          Profiler.valueStreamById(Profiler.spreadSketchCols(df), cols)
         }.reduce(_.unionAll(_))
-        stream.groupBy("dataset_id", "col_name", "v")
+        stream.groupBy("cid", "v")
           .agg(count(lit(1)).as("cnt"))
           .write.mode("overwrite").format("noop").save()
       }
@@ -34,10 +42,10 @@ object NtProf {
         // A/B: columnar-scan-fused explode+agg straight off the parquet
         // tasks vs the repartitioned form above
         val loaded = Tables.sketchTables.map(t => t -> Tables.load(spark, dir, t))
-        val stream = loaded.map { case (tb, df) =>
-          Profiler.sketchValueStream(df, tb)
+        val stream = withIds(loaded).map { case (df, cols) =>
+          Profiler.valueStreamById(df, cols)
         }.reduce(_.unionAll(_))
-        stream.groupBy("dataset_id", "col_name", "v")
+        stream.groupBy("cid", "v")
           .agg(count(lit(1)).as("cnt"))
           .write.mode("overwrite").format("noop").save()
       }

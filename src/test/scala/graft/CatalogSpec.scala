@@ -95,6 +95,26 @@ class CatalogSpec extends AnyFunSuite {
     assert(skChunked == skWide, "sketch table must not depend on chunking")
   }
 
+  test("profilePending stores the index build's numeric/temporal sketch rows") {
+    // one quantile pipeline (Profiler.quantileSketches) serves the index
+    // build, its refresh and this queue: the stored rows must be the rows
+    // the oracle-checked index holds for the same datasets
+    val tables = Seq("nation", "customer", "orders", "lineitem")
+    val catalogDir = Files.createTempDirectory("catQ").toString + "/cat"
+    val sketchDir = Files.createTempDirectory("sketchQ").toString
+    Catalog.publish(Catalog.fixtureDescriptors(spark, SparkTestSession.sf0001, tables),
+      catalogDir)
+    Catalog.profilePending(spark, catalogDir, SparkTestSession.sf0001, sketchDir)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("dataset_id", "col_name", "col_type", "vector").collect()
+        .map(r => (r.getString(0), r.getString(1), r.getString(2),
+          r.getSeq[Double](3))).toSet
+    val stored = rows(spark.read.parquet(sketchDir))
+    assert(stored.nonEmpty)
+    assert(stored == rows(graft.search.Sketches.numericTemporal(spark,
+      SparkTestSession.sf0001, tables)))
+  }
+
   test("bounded driver pulls drain the whole backlog across iterations") {
     // pullBound=1 forces one-id-at-a-time driver pulls: the drain loop must
     // still flip every status and write every sketch, and the results must

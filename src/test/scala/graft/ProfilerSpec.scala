@@ -166,10 +166,11 @@ class ProfilerSpec extends AnyFunSuite {
   test("two-level bucketed cumsum equals the single-window path") {
     import graft.ingest.Profiler
     val li = Tables.load(spark, SparkTestSession.sf0001, "lineitem")
-    val stream = Profiler.sketchValueStream(li, "lineitem")
+    val stream = Profiler.valueStreamById(li, Profiler.sketchCols(li)
+      .zipWithIndex.map { case ((c, t), i) => (c, t, i) })
     def run(buckets: Int) =
-      Profiler.histogramQuantiles(stream, cumsumBuckets = buckets).collect()
-        .map(r => (r.getString(0), r.getString(1), r.getLong(2)) -> r.getDouble(3))
+      Profiler.histogramQuantilesById(stream, cumsumBuckets = buckets).collect()
+        .map(r => (r.getInt(0), r.getLong(1)) -> r.getDouble(2))
         .toMap
     val single = run(1)
     assert(single.nonEmpty)
@@ -184,8 +185,8 @@ class ProfilerSpec extends AnyFunSuite {
     val pinned = stream.persist()
     try {
       def runPinned(buckets: Int) =
-        Profiler.histogramQuantiles(pinned, cumsumBuckets = buckets).collect()
-          .map(r => (r.getString(0), r.getString(1), r.getLong(2)) -> r.getDouble(3))
+        Profiler.histogramQuantilesById(pinned, cumsumBuckets = buckets).collect()
+          .map(r => (r.getInt(0), r.getLong(1)) -> r.getDouble(2))
           .toMap
       Seq(8, 64).foreach { b => assert(runPinned(b) == single, s"pinned buckets=$b") }
     } finally pinned.unpersist(blocking = false)

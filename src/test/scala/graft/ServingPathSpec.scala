@@ -2,7 +2,7 @@ package graft
 
 import graft.extra.Dedup
 import graft.search.{Bm25, CombinedScorer}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -397,4 +397,311 @@ class ServingPathSpec extends AnyFunSuite {
       graft.Caching.release()
     }
   }
+
+  // ---- compile-stable serving path ----
+
+  /** A private copy of the sf0.001 lake: its own (session, dir) artifacts,
+    * so a spec can build them cold and replace files without touching the
+    * shared fixture's.
+    */
+  private def lakeCopy(prefix: String): String = {
+    val tmp = java.nio.file.Files.createTempDirectory(prefix).toString
+    java.nio.file.Files.list(java.nio.file.Paths.get(SparkTestSession.sf0001))
+      .forEach { p =>
+        java.nio.file.Files.copy(p, java.nio.file.Paths.get(tmp, p.getFileName.toString))
+      }
+    tmp
+  }
+
+  /** Replace `table` of `lake` with `df`, the way a publisher does: write a
+    * new file, move it over the old one, drop the load memo.
+    */
+  private def replaceTable(lake: String, table: String, df: DataFrame): Unit = {
+    val out = java.nio.file.Files.createTempDirectory("version").toString + "/v"
+    df.coalesce(1).write.parquet(out)
+    val part = new java.io.File(out).listFiles().find(_.getName.endsWith(".parquet")).get
+    java.nio.file.Files.move(part.toPath, java.nio.file.Paths.get(lake, s"$table.parquet"),
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    Tables.invalidate(spark, lake, table)
+  }
+
+  private def compiledClasses: Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
+  private def answer(df: => DataFrame): Seq[Seq[Any]] =
+    try df.collect().map(_.toSeq).toSeq finally Caching.release()
+
+  test("compile budget: after one warm request, ui, api and weighted " +
+    "requests over every dataset and split compile no new classes") {
+    val lake = lakeCopy("compile-budget")
+    val cols = graft.search.Sketches.cachedAll(spark, lake)
+      .select("dataset_id", "col_name").collect()
+      .groupBy(_.getString(0)).map { case (d, rs) => d -> rs.map(_.getString(1)).sorted }
+    // the session artifacts first, as a serving session's set-up builds
+    // them: their one-off build classes would otherwise share the codegen
+    // cache's segments (four LRU segments of 25) with the warm request's
+    CombinedScorer.metaStats(spark, lake)
+    answer(CombinedScorer.search(spark, lake, "customer"))
+    val compiledBy = for (d <- Tables.sketchTables;
+         (wc, wm) <- Seq((1.0, 1.0), (2.0, 1.0), (1.0, 3.0), (3.0, 2.0));
+         (kind, request) <- Seq[(String, () => DataFrame)](
+           "ui" -> (() => CombinedScorer.search(spark, lake, d, 100, 50, 15, wc, wm)),
+           "api" -> (() => CombinedScorer.search(spark, lake, d, 30, 10, 5, wc, wm)),
+           "weighted" -> (() => Engine.search(spark, lake, Engine.SearchRequest(d,
+             Engine.ContentSpec(cols(d).take(3).zipWithIndex
+               .map { case (c, i) => c -> (i + 1.0) }.toMap, wc),
+             Engine.MetadataSpec(Map("title" -> 2.0, "description" -> wc), wm)))))) yield {
+      val before = compiledClasses
+      answer(request())
+      s"$kind $d $wc:$wm" -> (compiledClasses - before)
+    }
+    assert(compiledBy.forall(_._2 == 0),
+      "warm requests compiled classes of their own (a request value reached " +
+        s"generated code): ${compiledBy.filter(_._2 != 0).mkString(", ")}")
+  }
+
+  test("the served kNN keeps Spark's window group limit with a held m " +
+    "and answers as the literal-bound kNN") {
+    val dir = SparkTestSession.sf0001
+    val sketch = graft.search.Sketches.cachedAll(spark, dir)
+    val qRows = graft.search.Sketches.queryRows(spark, dir, "customer")
+    for ((m, l) <- Seq((100, 50), (30, 10))) {
+      val served = graft.search.DistanceJoin.knnLocal(sketch, "customer", qRows, m, l)
+      assert(served.queryExecution.optimizedPlan.find(
+        _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.WindowGroupLimit]).nonEmpty,
+        s"M$m/L$l: the served rank filter lost its pre-shuffle group limit")
+      def rows(df: DataFrame) =
+        df.select(df.columns.sorted.map(col): _*).collect().map(_.toString).toSet
+      assert(rows(served) == rows(graft.search.DistanceJoin.knn(sketch, "customer", m, l)))
+    }
+  }
+
+  test("action budget: a warm request runs at most 4 Spark actions, " +
+    "its caller's collect included") {
+    val dir = SparkTestSession.sf0001
+    answer(CombinedScorer.search(spark, dir, "orders"))
+    val actions = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                    ns: Long): Unit = actions.incrementAndGet()
+      def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                    e: Exception): Unit = actions.incrementAndGet()
+    }
+    def actionsOf(request: => DataFrame): Int = {
+      org.apache.spark.graft.ListenerDrain.drain(spark.sparkContext)
+      actions.set(0)
+      answer(request)
+      org.apache.spark.graft.ListenerDrain.drain(spark.sparkContext)
+      actions.get
+    }
+    spark.listenerManager.register(listener)
+    try {
+      assert(actionsOf(CombinedScorer.search(spark, dir, "orders")) <= 4)
+      assert(actionsOf(CombinedScorer.search(spark, dir, "orders", 30, 10, 5)) <= 4)
+      assert(actionsOf(Engine.search(spark, dir, Engine.SearchRequest("orders",
+        Engine.ContentSpec(Map("o_totalprice" -> 2.0, "o_orderdate" -> 1.0), 3.0),
+        Engine.MetadataSpec(Map("title" -> 1.0), 1.0)))) <= 4)
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  test("multiFieldServed over the query-excluded corpus without the " +
+    "query-term filter ≡ the filtered form") {
+    val dir = SparkTestSession.sf0001
+    def terms(s: String) = s.toLowerCase.split(" ").filter(_.nonEmpty).distinct.toSeq
+    for (queryId <- Seq("customer", "lineitem", "region")) {
+      val (t, k, d) = CombinedScorer.queryMetaRow(spark, dir, queryId)
+      for (fields <- Seq(
+        Seq(("title", 1.0 / 3, terms(t)), ("keywords", 1.0 / 3, terms(k)),
+          ("description", 1.0 / 3, terms(d))),
+        Seq(("description", 0.25, terms(d)), ("title", 0.75, terms(t))))) {
+        val (dl, corpus, dfreq) =
+          CombinedScorer.metaStatsLocal(spark, dir, queryId, fields).get
+        val excluded = CombinedScorer.metaTermFreqs(spark, dir)
+          .filter(col("doc_id") =!= queryId)
+        val unfiltered = Bm25.multiFieldServedRows(excluded, dl, corpus, dfreq, fields)
+        val filtered = Bm25.multiFieldServedRows(
+          excluded.filter(Bm25.isQueryTerm(fields)), dl, corpus, dfreq, fields)
+        assert(unfiltered.nonEmpty)
+        assert(unfiltered.map(_.toSeq) == filtered.map(_.toSeq),
+          s"dropping the query-term filter moved $queryId's BM25 scores")
+      }
+    }
+  }
+
+  test("candidateEdgesLocal (driver values, set probe) ≡ the DF semi-join") {
+    val dir = SparkTestSession.sf0001
+    val sketch = graft.search.Sketches.cachedAll(spark, dir)
+    for (queryId <- Seq("customer", "orders")) {
+      val qRows = graft.search.Sketches.queryRows(spark, dir, queryId)
+      val ranked = graft.search.DistanceJoin.knnLocal(sketch, queryId, qRows, 30, 10)
+        .collect().toSeq
+      val extraIds = Seq("nation", "supplier", queryId)
+      val viaDf = graft.search.DistanceJoin.candidateEdges(sketch, queryId,
+        graft.search.DistanceJoin.knn(sketch, queryId, 30, 10),
+        extraCandidates = Some(extraIds.toDF("dataset_id")))
+      val viaLocal = graft.search.DistanceJoin.candidateEdgesLocal(sketch, queryId,
+        ranked, extraIds, qRows)
+      def keyed(df: DataFrame) = df.collect().map { r =>
+        (r.getAs[String]("c_dataset"), r.getAs[String]("c_col"),
+          r.getAs[String]("q_col")) ->
+          (r.getAs[Double]("dist"), r.getAs[Double]("kth"), r.getAs[Double]("sim"))
+      }.toMap
+      val local = keyed(viaLocal)
+      assert(local.nonEmpty && local == keyed(viaDf),
+        s"driver-value candidate edges diverged for $queryId")
+      Caching.release()
+    }
+  }
+
+  test("combineRows (driver combine) ≡ combineExact on splits 1:1, 2:1, " +
+    "1:3 and 3:2, ties on overall_score included") {
+    val matching = Seq(Row("q1", "c1", 0.25))
+    val content = Seq(
+      Row("A", 0.8, matching), Row("B", 0.4, Seq.empty[Row]),
+      Row("D", 0.3, matching), Row("E", 0.6, matching),
+      Row("F", 0.123457, matching), Row("G", 0.6, matching),
+      Row("J", 0.4, matching))
+    // B/J and E/G tie on overall_score at every split, and k = 4 cuts
+    // through a tie; C and H are metadata-only, A content-only; F's and
+    // I's weighted micros are not multiples of 1e6
+    val metadata = Seq("B" -> 0.4, "C" -> 0.4, "E" -> 0.2, "G" -> 0.2,
+      "H" -> 0.3, "I" -> 0.246913, "D" -> 0.3, "J" -> 0.4)
+    val contentDf = spark.createDataFrame(java.util.Arrays.asList(content: _*),
+      org.apache.spark.sql.types.StructType(Seq(
+        org.apache.spark.sql.types.StructField("c_dataset",
+          org.apache.spark.sql.types.StringType),
+        org.apache.spark.sql.types.StructField("content_score",
+          org.apache.spark.sql.types.DoubleType),
+        org.apache.spark.sql.types.StructField("matching",
+          org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.StructType(Seq(
+            org.apache.spark.sql.types.StructField("q_col",
+              org.apache.spark.sql.types.StringType),
+            org.apache.spark.sql.types.StructField("c_col",
+              org.apache.spark.sql.types.StringType),
+            org.apache.spark.sql.types.StructField("weight",
+              org.apache.spark.sql.types.DoubleType))))))))
+    val metaDf = metadata.toDF("c_dataset", "metadata_score")
+    for ((wc, wm) <- Seq((1.0, 1.0), (2.0, 1.0), (1.0, 3.0), (3.0, 2.0)); k <- Seq(4, 15)) {
+      val wcMicro = math.round(wc / (wc + wm) * 1e6)
+      val viaSql = CombinedScorer.combineExact(contentDf, metaDf, wcMicro, k)
+        .select("c_dataset", "content_score", "matching", "metadata_score",
+          "overall_score").collect().map(_.toSeq).toSeq
+      val viaDriver = CombinedScorer.combineRows(content, metadata, wcMicro, k)
+        .map(_.toSeq)
+      assert(viaDriver == viaSql, s"driver combine diverged at split $wc:$wm, k=$k")
+    }
+  }
+
+  /** Run `fill` on its own thread, hold it at its first Spark query (after
+    * it has read whatever memo source it reads, before it can publish what
+    * it derives), run `refresh` to completion, then let `fill` finish. A
+    * fill that runs no query is not held.
+    */
+  private def fillAcrossRefresh(fill: => Unit)(refresh: => Unit): Unit = {
+    val entered = new java.util.concurrent.CountDownLatch(1)
+    val release = new java.util.concurrent.CountDownLatch(1)
+    @volatile var filler: Thread = null
+    val hold = new org.apache.spark.sql.catalyst.rules.Rule[
+        org.apache.spark.sql.catalyst.plans.logical.LogicalPlan] {
+      def apply(plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan) = {
+        if (Thread.currentThread() eq filler) {
+          if (entered.getCount > 0) { entered.countDown(); release.await() }
+        }
+        plan
+      }
+    }
+    val extra0 = spark.experimental.extraOptimizations
+    spark.experimental.extraOptimizations = extra0 :+ hold
+    try {
+      val t = new Thread(() => try fill finally Caching.release())
+      filler = t
+      t.start()
+      while (entered.getCount > 0 && t.isAlive) Thread.sleep(10)
+      try refresh finally release.countDown()
+      t.join(120000)
+      assert(!t.isAlive, "the held fill did not finish")
+    } finally spark.experimental.extraOptimizations = extra0
+  }
+
+  test("a query-rows memo fill that read the index before a refresh does " +
+    "not publish the old version's rows") {
+    val lake = lakeCopy("memo-race")
+    val index = graft.search.Sketches.cachedAll(spark, lake)
+    replaceTable(lake, "customer",
+      Tables.load(spark, SparkTestSession.sf0001, "customer")
+        .withColumn("c_acctbal", col("c_acctbal") * 3))
+    fillAcrossRefresh(graft.search.Sketches.queryRows(spark, lake, "customer")) {
+      graft.search.Sketches.refreshDataset(spark, lake, "customer")
+    }
+    assert(!(graft.search.Sketches.cachedAll(spark, lake) eq index))
+    val live = graft.search.Sketches.cachedAll(spark, lake)
+      .filter(col("dataset_id") === "customer").collect().map(_.toString).toSet
+    assert(graft.search.Sketches.queryRows(spark, lake, "customer")
+      .map(_.toString).toSet == live,
+      "the memo kept the pre-refresh version's rows")
+  }
+
+  test("a metadata-row fill that read the corpus before a column-changing " +
+    "refresh does not publish the old description") {
+    val lake = lakeCopy("meta-race")
+    CombinedScorer.metaStats(spark, lake)
+    replaceTable(lake, "customer",
+      Tables.load(spark, SparkTestSession.sf0001, "customer")
+        .withColumn("freshly_added", lit(1)))
+    fillAcrossRefresh(CombinedScorer.queryMetaRow(spark, lake, "customer")) {
+      graft.search.Sketches.refreshDataset(spark, lake, "customer")
+    }
+    assert(CombinedScorer.queryMetaRow(spark, lake, "customer")._3.contains("freshly added"),
+      "the row memo kept the pre-refresh description")
+  }
+
+  test("metadata artifacts survive a same-schema refresh and rebuild after " +
+    "a column change, judged against the corpus, not the replaced file") {
+    val lake = lakeCopy("meta-refresh")
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    def jobsOf(request: => DataFrame): (Int, Seq[Seq[Any]]) = {
+      org.apache.spark.graft.ListenerDrain.drain(spark.sparkContext)
+      jobs.set(0)
+      val a = answer(request)
+      org.apache.spark.graft.ListenerDrain.drain(spark.sparkContext)
+      (jobs.get, a)
+    }
+    val source = Tables.load(spark, SparkTestSession.sf0001, "customer")
+    answer(CombinedScorer.search(spark, lake, "orders"))
+    val tf0 = CombinedScorer.metaTermFreqs(spark, lake)
+    val stats0 = CombinedScorer.metaStats(spark, lake)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val (warmJobs, _) = jobsOf(CombinedScorer.search(spark, lake, "orders"))
+      // same columns, new values
+      replaceTable(lake, "customer", source.withColumn("c_acctbal", col("c_acctbal") * 2))
+      graft.search.Sketches.refreshDataset(spark, lake, "customer")
+      assert(CombinedScorer.metaTermFreqs(spark, lake) eq tf0,
+        "a same-schema refresh dropped the metadata TF artifact")
+      assert(CombinedScorer.metaStats(spark, lake) eq stats0)
+      val (jobsAfter, _) = jobsOf(CombinedScorer.search(spark, lake, "orders"))
+      assert(jobsAfter == warmJobs,
+        s"the request after a same-schema refresh ran $jobsAfter jobs, warm ran $warmJobs")
+      // an added column, then a renamed one: the corpus must follow
+      for ((version, word) <- Seq(
+        source.withColumn("freshly_added", lit(1)) -> "freshly added",
+        source.withColumnRenamed("c_name", "c_fullname") -> "c fullname")) {
+        val tf = CombinedScorer.metaTermFreqs(spark, lake)
+        replaceTable(lake, "customer", version)
+        graft.search.Sketches.refreshDataset(spark, lake, "customer")
+        assert(!(CombinedScorer.metaTermFreqs(spark, lake) eq tf),
+          s"a column change ($word) kept the metadata TF artifact")
+        assert(CombinedScorer.queryMetaRow(spark, lake, "customer")._3.contains(word))
+        val served = answer(CombinedScorer.search(spark, lake, "customer"))
+        CombinedScorer.invalidateMetadata(spark, lake)
+        assert(served == answer(CombinedScorer.search(spark, lake, "customer")),
+          "the answer after the refresh differs from one over a rebuilt corpus")
+      }
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
 }
+
