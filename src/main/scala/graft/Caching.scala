@@ -67,6 +67,31 @@ object Caching {
       out
     } else df.localCheckpoint()
 
+  /** Pin independent artifacts as CONCURRENT jobs (guide §2.6: one
+    * checkpoint latency instead of back-to-back driver round-trips),
+    * all-or-nothing: every pin is awaited, and if any build fails the
+    * pins that did complete are dropped before the FIRST failure's
+    * original exception is rethrown — not its CompletionException
+    * envelope, and never leaving a completed sibling pin orphaned
+    * (a reliable-checkpoint file nothing would ever reclaim).
+    */
+  def pinAll(builds: (() => DataFrame)*): Seq[DataFrame] = {
+    val futs = builds.drop(1).map(b =>
+      java.util.concurrent.CompletableFuture.supplyAsync(() => pinArtifact(b())))
+    val pins = scala.util.Try(pinArtifact(builds.head())) +:
+      futs.map(f => scala.util.Try(f.join()))
+    pins.collectFirst { case scala.util.Failure(e) => e } match {
+      case None => pins.map(_.get)
+      case Some(e) =>
+        pins.foreach(_.foreach(dropArtifact))
+        throw (e match {
+          case c: java.util.concurrent.CompletionException
+            if c.getCause != null => c.getCause
+          case other => other
+        })
+    }
+  }
+
   /** The reliable-checkpoint path backing a `checkpoint()`ed frame (None for
     * local checkpoints or plans that aren't a checkpoint scan).
     */

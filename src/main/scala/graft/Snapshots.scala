@@ -60,6 +60,8 @@ object Snapshots {
   /** Write `parts` as one committed snapshot version under `root`. Only
     * returns after the version is committed; prior committed versions and
     * any crashed partial versions are pruned afterwards (best-effort).
+    * Each part is written as [[filesFor]] files, so a small part is one
+    * file however many segments or shuffle partitions it unions.
     */
   def write(spark: SparkSession, root: String,
             parts: Seq[(String, DataFrame)]): Unit = {
@@ -69,7 +71,8 @@ object Snapshots {
     val next = (existing.map(_._1) :+ 0).max + 1
     val vdir = new Path(rootP, s"v$next")
     parts.foreach { case (name, df) =>
-      df.write.mode("overwrite").parquet(new Path(vdir, name).toString)
+      df.coalesce(filesFor(df)).write.mode("overwrite")
+        .parquet(new Path(vdir, name).toString)
     }
     fs.create(new Path(vdir, Done), true).close()
     val tmp = new Path(rootP, s"$Marker.v$next.tmp")
@@ -96,6 +99,33 @@ object Snapshots {
         && n != s"$Marker.v$next.tmp")
         try fs.delete(st.getPath, false) catch { case _: Exception => () }
     }
+  }
+
+  /** Files to write a part as: its bytes over the session's
+    * `spark.sql.files.maxPartitionBytes` — the split size a reload scans
+    * with — and at least one. Coalescing to it never shuffles, and a count
+    * above the part's own partitioning leaves the write as it was.
+    */
+  private[graft] def filesFor(df: DataFrame): Int = {
+    val target = df.sparkSession.sessionState.conf.filesMaxPartitionBytes
+    ((bytesOf(df) + target - 1) / target).max(1).min(Int.MaxValue).toInt
+  }
+
+  /** An upper bound on a part's bytes, summed over its plan's leaves: a
+    * pinned artifact (a checkpoint scan) counts the block bytes it holds,
+    * any other leaf its statistics. A part is a union or an aggregate of
+    * its leaves, so their sum bounds it; the pinned leaves' statistics
+    * would not do, since they are the estimates of the plans that built
+    * them (a join's estimate multiplies its inputs').
+    */
+  private def bytesOf(df: DataFrame): BigInt = {
+    lazy val held = df.sparkSession.sparkContext.getRDDStorageInfo
+      .map(i => i.id -> BigInt(i.memSize + i.diskSize)).toMap
+    df.queryExecution.optimizedPlan.collectLeaves().map {
+      case l: org.apache.spark.sql.execution.LogicalRDD =>
+        held.getOrElse(l.rdd.id, l.stats.sizeInBytes)
+      case leaf => leaf.stats.sizeInBytes
+    }.sum
   }
 
   /** Resolve the directory holding the committed snapshot's parts:

@@ -43,22 +43,54 @@ object Dedup {
     * jac >= t must share an indexed prefix token, so the candidate set is
     * exact-complete — while frequent tokens (stopwords) sort LAST and almost
     * never enter a prefix, bounding the inverted index: "the" can no longer
-    * pair every document with every other.
+    * pair every document with every other. Prefix matches then pass the
+    * [[sizeBand]] length filter before the distinct.
     */
   def jaccardCandidates(toks: DataFrame, sizes: DataFrame,
                         threshold: Double): DataFrame = {
+    val prefix = prefixTokens(toks, sizes, threshold)
+    prefixMatches(prefix, prefix, threshold, ordered = true)
+  }
+
+  /** Each document's prefix tokens (doc_id, term, sz) for a Jaccard join
+    * at `threshold`: its tokens ordered by document frequency over `toks`
+    * ascending (ties on term), the first `sz - ceil(t*sz) + 1` kept.
+    */
+  private def prefixTokens(toks: DataFrame, sizes: DataFrame,
+                           threshold: Double): DataFrame = {
     val dfreq = toks.groupBy("term").agg(count(lit(1)).as("df"))
-    val prefix = toks.join(dfreq, "term")
+    toks.join(dfreq, "term")
       .withColumn("rn", row_number().over(
         Window.partitionBy("doc_id").orderBy(col("df").asc, col("term").asc)))
       .join(sizes, "doc_id")
       .filter(col("rn") <= col("sz") - ceil(lit(threshold) * col("sz")) + 1)
-      .select("doc_id", "term")
-    prefix.as("a").join(prefix.as("b"), "term")
-      .filter(col("a.doc_id") < col("b.doc_id"))
+      .select("doc_id", "term", "sz")
+  }
+
+  /** Candidate (id_a, id_b) pairs of a prefix table against a (term,
+    * doc_id, sz) probe table: a shared token, inside the [[sizeBand]].
+    * `ordered` applies the a<b self-join filter, as in [[bandCandidates]].
+    */
+  private def prefixMatches(prefix: DataFrame, probe: DataFrame,
+                            threshold: Double, ordered: Boolean): DataFrame = {
+    val j = prefix.as("a").join(probe.as("b"), "term")
+      .filter(sizeBand(col("a.sz"), col("b.sz"), threshold))
+    (if (ordered) j.filter(col("a.doc_id") < col("b.doc_id")) else j)
       .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
       .distinct()
   }
+
+  /** The PPJoin/All-Pairs length filter on two set sizes: since
+    * |A∩B| <= min and |A∪B| >= max, jac(A,B) <= min/max, so a pair whose
+    * best case misses `threshold` can never verify. The bound is
+    * [[verifyJaccard]]'s own comparison at that best case (intersection =
+    * the smaller set), in the same double arithmetic — the verify's ratio
+    * only shrinks as the intersection does, so the filter never drops a
+    * pair the verify would keep (spec-checked over every size pair).
+    */
+  private[graft] def sizeBand(szA: Column, szB: Column,
+                              threshold: Double): Column =
+    least(szA, szB).cast("double") / greatest(szA, szB) >= threshold
 
   /** Exact-Jaccard verification of candidate (id_a, id_b) pairs against the
     * per-doc UNIT-ARRAY table (doc_id, toks): two row-bounded joins fetch
@@ -69,8 +101,8 @@ object Dedup {
     * tokens and paid a per-pair groupBy exchange for the same count; the
     * array form's shuffle carries only candidate rows.
     */
-  private def verifyJaccard(candidates: DataFrame,
-                            arrs: DataFrame, threshold: Double): DataFrame =
+  private[graft] def verifyJaccard(candidates: DataFrame, arrs: DataFrame,
+                                   threshold: Double): DataFrame =
     candidates
       .join(arrs.select(col("doc_id").as("id_a"), col("toks").as("toks_a")), "id_a")
       .join(arrs.select(col("doc_id").as("id_b"), col("toks").as("toks_b")), "id_b")
@@ -422,12 +454,10 @@ object Dedup {
           // already-materialized) admitted frame — overlap them (guide
           // §2.6) so the admission-index append pays one checkpoint
           // latency, not two back-to-back driver round-trips per batch.
-          val sigFut = java.util.concurrent.CompletableFuture.supplyAsync(
-            () => graft.Caching.pinArtifact(bandSignatures(
-              admitted, idCol, textCol, numPerms, rowsPerBand)))
-          val toksPin = graft.Caching.pinArtifact(
-            tokenArraysOf(admitted, idCol, textCol))
-          val segs = segs0 :+ ((sigFut.join(), toksPin))
+          val Seq(toksPin, sigPin) = graft.Caching.pinAll(
+            () => tokenArraysOf(admitted, idCol, textCol),
+            () => bandSignatures(admitted, idCol, textCol, numPerms, rowsPerBand))
+          val segs = segs0 :+ ((sigPin, toksPin))
           val kept =
             if (segs.size <= maxSegments) segs
             else {
@@ -551,24 +581,37 @@ object Dedup {
 
   /** One segment of the maintained pair artifact: the segment's own
     * verified pairs, its documents' unit-token arrays (the verify side of
-    * any later append), and its PROBE table — full (term, doc_id) postings
-    * for the exact variant (what a batch's prefix tokens equi-join), band
-    * signatures (doc_id, band, band_sig) for the LSH variant (what a
-    * batch's signatures bucket-join). In production each is a parquet/
-    * Delta table bucketed on its probe key.
+    * any later append), and its PROBE table — full (term, doc_id, sz)
+    * postings for the exact variant (what a batch's prefix tokens
+    * equi-join), band signatures (doc_id, band, band_sig) for the LSH
+    * variant (what a batch's signatures bucket-join). The probe is a
+    * projection of `toks` ([[probeOf]]); a segment restored by
+    * [[loadPairs]] has none until the first append, which knows the
+    * variant, derives and pins it. In production each is a parquet/Delta
+    * table bucketed on its probe key.
     */
   private[graft] final case class PairSegment(pairs: DataFrame,
                                               toks: DataFrame,
-                                              probe: DataFrame)
+                                              probe: Option[DataFrame]) {
+    def pins: Seq[DataFrame] = Seq(pairs, toks) ++ probe
+  }
 
   private val pairsCache = scala.collection.concurrent.TrieMap
     .empty[(String, String), Vector[PairSegment]]
 
   /** Full posting list of a unit-array table — the exact variant's probe
-    * artifact: (term, doc_id), one row per distinct (doc, term).
+    * artifact: (term, doc_id, sz), one row per distinct (doc, term), with
+    * the document's set size for the cross probe's [[sizeBand]].
     */
   private def postingsOf(arrs: DataFrame): DataFrame =
-    arrs.select(explode(col("toks")).as("term"), col("doc_id"))
+    arrs.select(explode(col("toks")).as("term"), col("doc_id"),
+      size(col("toks")).cast("long").as("sz"))
+
+  /** The probe table of a pair segment, derived from its unit arrays:
+    * postings for the exact variant, band signatures for LSH.
+    */
+  private def probeOf(arrs: DataFrame, lsh: Boolean): DataFrame =
+    if (lsh) bandSignaturesFromArrs(arrs, 32, 4) else postingsOf(arrs)
 
   /** a<b orientation for pair rows whose sides came from different tables
     * (a cross batch×corpus candidate carries batch ids on one fixed side).
@@ -624,16 +667,10 @@ object Dedup {
       // exactly once per build.
       val arrs = graft.Caching.pinArtifact(
         tokenArraysOf(df, idCol, textCol))
-      if (lsh) {
-        val sigs = graft.Caching.pinArtifact(
-          bandSignaturesFromArrs(arrs, 32, 4))
-        Vector(PairSegment(
-          graft.Caching.pinArtifact(lshVerifiedPairs(sigs, arrs, threshold)),
-          arrs, sigs))
-      } else
-        Vector(PairSegment(
-          graft.Caching.pinArtifact(jaccardPairsFromArrs(arrs, threshold)),
-          arrs, graft.Caching.pinArtifact(postingsOf(arrs))))
+      val probe = graft.Caching.pinArtifact(probeOf(arrs, lsh))
+      Vector(PairSegment(graft.Caching.pinArtifact(
+        if (lsh) lshVerifiedPairs(probe, arrs, threshold)
+        else jaccardPairsFromArrs(arrs, threshold)), arrs, Some(probe)))
     })}}.map(_.pairs).reduce(_ unionByName _)
   }
 
@@ -661,11 +698,16 @@ object Dedup {
     *    t|A∪B|), so no ordering consistency with past batches is needed —
     *    which is what makes the append exact WITHOUT recomputing corpus
     *    prefixes as global document frequencies drift. Prefixes are
-    *    ordered by STORED-corpus df (a candidate-bounded probe of the
-    *    postings on the batch's vocabulary), so stopwords still sort out
-    *    of prefixes; batch-internal pairs run the regular two-sided
-    *    [[jaccardCandidates]] within the batch. Verification is exact
-    *    either way, so the grown pair set equals a fresh
+    *    ordered by the BATCH's df, so stopwords still sort out of
+    *    prefixes, and the same prefix table is the regular two-sided
+    *    filter for batch-internal pairs (the former stored-corpus df order
+    *    cost a corpus postings scan, an aggregate and a second window per
+    *    batch for about 7% fewer candidates). Each prefix match must also
+    *    pass the [[sizeBand]] length filter (postings carry the corpus
+    *    doc's set size), so a corpus doc that shares a rare token but
+    *    could never reach the threshold is no candidate — without it the
+    *    candidates grew about 7x faster with the corpus. Verification is
+    *    exact either way, so the grown pair set equals a fresh
     *    [[jaccardPairs]] over corpus ∪ batch (spec-locked).
     *
     * Same segment discipline as [[appendAdmitted]]: only the batch's own
@@ -687,9 +729,15 @@ object Dedup {
     lock.synchronized {
       pairsCache.get(k) match {
         case None => false
-        case Some(segs0) =>
+        case Some(loaded) =>
+          // a restored segment gets its probe on the first append (the
+          // variant is the caller's); stored at once, so a failure below
+          // never orphans it
+          val segs0 = loaded.map(s => if (s.probe.isDefined) s else
+            s.copy(probe = Some(graft.Caching.pinArtifact(probeOf(s.toks, lsh)))))
+          if (segs0 != loaded) pairsCache.put(k, segs0)
           val corpusToks = segs0.map(_.toks).reduce(_ unionByName _)
-          val corpusProbe = segs0.map(_.probe).reduce(_ unionByName _)
+          val corpusProbe = segs0.flatMap(_.probe).reduce(_ unionByName _)
           // REPLAY GUARD (at-least-once micro-batch retries re-deliver
           // docs): drop batch docs the artifact already holds — re-pairing
           // a present doc would fabricate (d, d) self-pairs via the cross
@@ -709,49 +757,44 @@ object Dedup {
           if (batchArrs.isEmpty) { graft.Caching.dropArtifact(batchArrs); true }
           else {
           val allArrs = corpusToks.unionByName(batchArrs)
-          val (newPairs, batchProbe) =
+          def verified(cands: DataFrame) =
+            orientPairs(verifyJaccard(cands, allArrs, threshold))
+          // a failed pin must not orphan the batch pin either: pinAll drops
+          // its own completed siblings, this drops the batch arrays
+          val Seq(newPairs, batchProbe) = try {
             if (lsh) {
               val batchSigs = graft.Caching.pinArtifact(
                 bandSignaturesFromArrs(batchArrs, 32, 4))
               val cross = bandCandidates(batchSigs, corpusProbe, ordered = false)
               val within = bandCandidates(batchSigs, batchSigs, ordered = true)
-              (graft.Caching.pinArtifact(orientPairs(verifyJaccard(
-                cross.unionByName(within), allArrs, threshold))), batchSigs)
+              try Seq(graft.Caching.pinArtifact(
+                verified(cross.unionByName(within))), batchSigs)
+              catch { case e: Throwable =>
+                graft.Caching.dropArtifact(batchSigs); throw e }
             } else {
-              val btoks = batchArrs.select(col("doc_id"),
-                explode(col("toks")).as("term"))
-              val bsizes = batchArrs.select(col("doc_id"),
-                size(col("toks")).cast("long").as("sz"))
-              // stored-corpus df of the batch's vocabulary only (the probe
-              // is bounded by batch vocab; terms unseen in the corpus sort
-              // FIRST — the rarest possible prefix tokens)
-              val cdf = corpusProbe
-                .join(btoks.select("term").distinct(), "term")
-                .groupBy("term").agg(count(lit(1)).as("df"))
-              val prefix = btoks.join(cdf, Seq("term"), "left")
-                .withColumn("df", coalesce(col("df"), lit(0L)))
-                .withColumn("rn", row_number().over(
-                  Window.partitionBy("doc_id")
-                    .orderBy(col("df").asc, col("term").asc)))
-                .join(bsizes, "doc_id")
-                .filter(col("rn") <= col("sz") - ceil(lit(threshold) * col("sz")) + 1)
-                .select("doc_id", "term")
-              val cross = prefix.as("a").join(corpusProbe.as("b"), "term")
-                .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-                .distinct()
-              val within = jaccardCandidates(btoks, bsizes, threshold)
+              // ONE prefix table serves both pair classes: ordered by the
+              // batch's own df it is the two-sided filter's consistent
+              // order within the batch, and any order will do for the
+              // one-sided cross probe
+              val prefix = prefixTokens(
+                batchArrs.select(col("doc_id"), explode(col("toks")).as("term")),
+                batchArrs.select(col("doc_id"),
+                  size(col("toks")).cast("long").as("sz")), threshold)
+              val cross = prefixMatches(prefix, corpusProbe, threshold,
+                ordered = false)
+              val within = prefixMatches(prefix, prefix, threshold,
+                ordered = true)
               // the probe-postings pin is a cheap projection of the
               // already-materialized batchArrs pin, independent of the
-              // verify pipeline — overlap the two checkpoints (guide §2.6)
-              // so the append's critical path pays the verify job only
-              val postFut = java.util.concurrent.CompletableFuture
-                .supplyAsync(() =>
-                  graft.Caching.pinArtifact(postingsOf(batchArrs)))
-              (graft.Caching.pinArtifact(orientPairs(verifyJaccard(
-                cross.unionByName(within), allArrs, threshold))),
-                postFut.join())
+              // verify pipeline — overlap the two checkpoints so the
+              // append's critical path pays the verify job only
+              graft.Caching.pinAll(
+                () => verified(cross.unionByName(within)),
+                () => postingsOf(batchArrs))
             }
-          val segs = segs0 :+ PairSegment(newPairs, batchArrs, batchProbe)
+          } catch { case e: Throwable =>
+            graft.Caching.dropArtifact(batchArrs); throw e }
+          val segs = segs0 :+ PairSegment(newPairs, batchArrs, Some(batchProbe))
           val kept =
             if (segs.size <= maxSegments) segs
             else Vector(PairSegment(
@@ -759,14 +802,11 @@ object Dedup {
                 segs.map(_.pairs).reduce(_ unionByName _)),
               graft.Caching.pinArtifact(
                 segs.map(_.toks).reduce(_ unionByName _)),
-              graft.Caching.pinArtifact(
-                segs.map(_.probe).reduce(_ unionByName _))))
+              Some(graft.Caching.pinArtifact(
+                segs.flatMap(_.probe).reduce(_ unionByName _)))))
           pairsCache.put(k, kept)
-          if (kept ne segs) segs.foreach { s =>
-            graft.Caching.dropArtifact(s.pairs)
-            graft.Caching.dropArtifact(s.toks)
-            graft.Caching.dropArtifact(s.probe)
-          }
+          if (kept ne segs)
+            segs.foreach(_.pins.foreach(graft.Caching.dropArtifact))
           true
           }
       }
@@ -786,10 +826,6 @@ object Dedup {
     pairsCache.getOrElse(
       (spark.sparkContext.applicationId, cacheKey), Vector.empty)
 
-  /** Drop memoized pair artifacts whose key starts with `cacheKeyPrefix`
-    * (the bench's TRUE-rebuild discipline for its `train_pairs` line);
-    * reliable-checkpoint files are reclaimed like [[resetIndex]]'s.
-    */
   /** Persist the admission index under `cacheKey` to `path` — both
     * maintenance tables (band signatures + unit-token arrays), compacted
     * on write. Same restart rationale as [[savePairs]]. Returns false when
@@ -890,13 +926,13 @@ object Dedup {
     * parquet/Delta form [[trainedPairs]]'s scaladoc promises, and the
     * restart story the in-session memo lacks: a maintained pair table that
     * took hours of appends reloads with [[loadPairs]] instead of
-    * re-pairing the corpus. All three maintenance tables are written
-    * (pairs + the unit arrays + the probe table — an append must verify
-    * and bucket/prefix-join exactly as before the restart), each compacted
-    * on write (unions are disjoint-exact, the compaction argument). The
-    * exact/LSH caller contract is unchanged: keys encode variant and
-    * threshold, as with [[trainedPairs]]/[[appendPairs]]. Returns false
-    * when nothing is memoized under the key.
+    * re-pairing the corpus. Two tables are written — the pairs and the
+    * unit arrays an append verifies against — each compacted on write
+    * (unions are disjoint-exact, the compaction argument). The probe table
+    * is NOT written: it is a projection of the arrays, derived again after
+    * [[loadPairs]]. The exact/LSH caller contract is unchanged: keys
+    * encode variant and threshold, as with [[trainedPairs]]/
+    * [[appendPairs]]. Returns false when nothing is memoized under the key.
     */
   def savePairs(spark: org.apache.spark.sql.SparkSession,
                 cacheKey: String, path: String): Boolean = {
@@ -905,13 +941,12 @@ object Dedup {
       pairsCache.get(k) match {
         case None => false
         case Some(segs) =>
-          // three maintenance tables, ONE atomic snapshot version: mixed
-          // part versions would verify candidates against one corpus state
-          // and bucket/prefix-probe against another
+          // pairs and arrays, ONE atomic snapshot version: mixed part
+          // versions would verify candidates against one corpus state
+          // while serving pairs of another
           graft.Snapshots.write(spark, path, Seq(
             "pairs" -> segs.map(_.pairs).reduce(_ unionByName _),
-            "toks" -> segs.map(_.toks).reduce(_ unionByName _),
-            "probe" -> segs.map(_.probe).reduce(_ unionByName _)))
+            "toks" -> segs.map(_.toks).reduce(_ unionByName _)))
           true
       }
     }
@@ -919,7 +954,10 @@ object Dedup {
 
   /** Restore a [[savePairs]] artifact under `cacheKey` as ONE pinned
     * segment (decoupled from the files), serving consumers and accepting
-    * [[appendPairs]] exactly as the pre-restart artifact did. Refuses to
+    * [[appendPairs]] exactly as the pre-restart artifact did. The probe
+    * table is not read: the next append derives it from the loaded arrays
+    * for its variant, so a snapshot that still holds a stored `probe`
+    * part (the former three-part layout) loads the same way. Refuses to
     * shadow a live in-session artifact — reset first if replacement is
     * intended.
     */
@@ -933,13 +971,16 @@ object Dedup {
       val base = graft.Snapshots.resolveDir(spark, path)
       val seg = PairSegment(
         graft.Caching.pinArtifact(spark.read.parquet(s"$base/pairs")),
-        graft.Caching.pinArtifact(spark.read.parquet(s"$base/toks")),
-        graft.Caching.pinArtifact(spark.read.parquet(s"$base/probe")))
+        graft.Caching.pinArtifact(spark.read.parquet(s"$base/toks")), None)
       pairsCache.put(k, Vector(seg))
       seg.pairs
     }
   }
 
+  /** Drop memoized pair artifacts whose key starts with `cacheKeyPrefix`
+    * (the bench's TRUE-rebuild discipline for its `train_pairs` line);
+    * reliable-checkpoint files are reclaimed like [[resetIndex]]'s.
+    */
   def resetPairs(spark: org.apache.spark.sql.SparkSession,
                  cacheKeyPrefix: String): Unit = {
     val appId = spark.sparkContext.applicationId
@@ -951,11 +992,8 @@ object Dedup {
       .filter(k => k._1 == appId && k._2.startsWith(cacheKeyPrefix))
       .foreach { k =>
         indexLocks.getOrElseUpdate(k, new Object).synchronized {
-          pairsCache.remove(k).foreach(_.foreach { s =>
-            graft.Caching.dropArtifact(s.pairs)
-            graft.Caching.dropArtifact(s.toks)
-            graft.Caching.dropArtifact(s.probe)
-          })
+          pairsCache.remove(k)
+            .foreach(_.foreach(_.pins.foreach(graft.Caching.dropArtifact)))
         }
       }
   }

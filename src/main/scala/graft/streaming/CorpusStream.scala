@@ -273,6 +273,35 @@ object CorpusStream {
     }
   }
 
+  /** Run independent maintenance `tasks` (appends or saves of distinct
+    * families) as concurrent jobs from a small pool, and return only when
+    * EVERY task has finished: the outer finally releases the admitted pin,
+    * and a sibling still running would lazily recompute the batch-scan +
+    * verdict join from scratch (ADVICE r17). The first failure is then
+    * rethrown as the ORIGINAL exception, not its ExecutionException
+    * envelope, so the stream surfaces the family that failed.
+    */
+  private def inParallel(tasks: Seq[() => Unit]): Unit =
+    if (tasks.size <= 1) tasks.foreach(_())
+    else {
+      val pool = java.util.concurrent.Executors
+        .newFixedThreadPool(math.min(4, tasks.size))
+      try {
+        val futs = tasks.map(t =>
+          pool.submit(new java.util.concurrent.Callable[Unit] {
+            def call(): Unit = t()
+          }))
+        val failures = futs.flatMap { f =>
+          try { f.get(); None }
+          catch {
+            case e: java.util.concurrent.ExecutionException =>
+              Some(Option(e.getCause).getOrElse(e))
+          }
+        }
+        failures.headOption.foreach(e => throw e)
+      } finally pool.shutdown()
+    }
+
   def admitStreamMaintained(stream: DataFrame, corpus: DataFrame,
                             cacheKey: String,
                             idCol: String = "doc_id",
@@ -294,18 +323,22 @@ object CorpusStream {
     // completes — so a snapshot never captures a half-maintained batch,
     // and a crash mid-snapshot leaves each family's previous version
     // committed. Family ORDER mirrors the append order's replay contract:
-    // derived families first, the ADMISSION INDEX LAST — a crash between
-    // family saves then leaves an index snapshot OLDER than (or equal to)
-    // every derived snapshot, so replayed/re-submitted docs re-admit and
-    // the doc-idempotent derived appends drop what their newer snapshots
-    // already hold (and the gram ledger, committed atomically WITH its
-    // counts, no-ops its applied batch ids). The inverted order would be
-    // the self-match hole: a NEWER index makes the replayed batch's docs
-    // keep=0, so the derived families would miss them forever.
+    // the derived families save CONCURRENTLY (independent roots, each under
+    // its own key lock — the derived appends' rule), and the ADMISSION
+    // INDEX saves only once every one of them has committed — a crash
+    // between family saves then leaves an index snapshot OLDER than (or
+    // equal to) every derived snapshot, so replayed/re-submitted docs
+    // re-admit and the doc-idempotent derived appends drop what their
+    // newer snapshots already hold (and the gram ledger, committed
+    // atomically WITH its counts, no-ops its applied batch ids). The
+    // inverted order would be the self-match hole: a NEWER index makes the
+    // replayed batch's docs keep=0, so the derived families would miss
+    // them forever.
     // Each save must succeed: a configured family that is not live in the
     // session (wrong cacheKey) would otherwise silently never persist
-    // while the others do — fail the batch instead, which surfaces at the
-    // stream as a retried-then-failing batch an operator can see.
+    // while the others do — fail the batch instead (once the sibling saves
+    // are awaited), which surfaces at the stream as a retried-then-failing
+    // batch an operator can see.
     val doSnapshot: Long => Unit = snapshotEvery match {
       case None => _ => ()
       case Some((n, root)) =>
@@ -315,17 +348,18 @@ object CorpusStream {
           def must(ok: Boolean, what: String): Unit = require(ok,
             s"snapshotEvery: $what is not live in this session — check " +
               "the gate's cache keys")
-          tfCacheKeys.foreach(k => must(graft.ingest.TermStats
-            .saveTermFreqs(spark, k, snapDir(root, "tf", k)), s"TF '$k'"))
-          pairsSpecs.foreach { case (pk, _, _) =>
-            must(graft.extra.Dedup.savePairs(spark, pk,
-              snapDir(root, "pairs", pk)), s"pair artifact '$pk'") }
-          gramSpecs.foreach { case (gk, _) =>
-            must(graft.extra.Dedup.saveGramIndex(spark, gk,
-              snapDir(root, "gram", gk)), s"gram artifact '$gk'") }
-          featureCacheKeys.foreach(k => must(graft.extra.Multimodal
-            .saveFeatures(spark, k, snapDir(root, "feat", k)),
-            s"feature artifact '$k'"))
+          inParallel(
+            tfCacheKeys.map(k => () => must(graft.ingest.TermStats
+              .saveTermFreqs(spark, k, snapDir(root, "tf", k)), s"TF '$k'")) ++
+            pairsSpecs.map { case (pk, _, _) => () =>
+              must(graft.extra.Dedup.savePairs(spark, pk,
+                snapDir(root, "pairs", pk)), s"pair artifact '$pk'") } ++
+            gramSpecs.map { case (gk, _) => () =>
+              must(graft.extra.Dedup.saveGramIndex(spark, gk,
+                snapDir(root, "gram", gk)), s"gram artifact '$gk'") } ++
+            featureCacheKeys.map(k => () => must(graft.extra.Multimodal
+              .saveFeatures(spark, k, snapDir(root, "feat", k)),
+              s"feature artifact '$k'")))
           must(graft.extra.Dedup.saveIndex(spark, cacheKey,
             snapDir(root, "idx", cacheKey)), s"admission index '$cacheKey'")
         }
@@ -369,7 +403,7 @@ object CorpusStream {
         // tasks) instead of ~5 sequential action round-trips. The replay
         // contract only orders DERIVED-before-INDEX; joining the pool
         // before the admission-index append preserves it exactly.
-        val derived: Seq[() => Unit] =
+        inParallel(
           tfCacheKeys.map(k => () => {
             graft.ingest.TermStats.appendTermFreqs(admitted, idCol, textCol, k)
             ()
@@ -392,33 +426,7 @@ object CorpusStream {
             graft.extra.Dedup.appendGramAdmitted(admitted, idCol, textCol, gk,
               minLen = gMinLen, batchId = Some(id), writerId = writerId)
             ()
-          } }
-        if (derived.size <= 1) derived.foreach(_())
-        else {
-          val pool = java.util.concurrent.Executors
-            .newFixedThreadPool(math.min(4, derived.size))
-          val futs = derived.map(t =>
-            pool.submit(new java.util.concurrent.Callable[Unit] {
-              def call(): Unit = t()
-            }))
-          try futs.foreach { f =>
-            // unwrap so the stream surfaces the ORIGINAL family failure,
-            // not the ExecutionException envelope (ADVICE r17)
-            try f.get()
-            catch {
-              case e: java.util.concurrent.ExecutionException =>
-                throw Option(e.getCause).getOrElse(e)
-            }
-          } finally {
-            // Cancel-then-AWAIT before leaving: the outer finally releases
-            // the admitted pin, and an orphaned sibling append still
-            // running would lazily recompute the batch-scan + verdict join
-            // from scratch (ADVICE r17). Idempotence keeps a replay
-            // correct either way — this bounds the failure path's cost.
-            pool.shutdownNow()
-            pool.awaitTermination(60, java.util.concurrent.TimeUnit.SECONDS)
-          }
-        }
+          } })
         graft.extra.Dedup.appendAdmitted(
           admitted, idCol, textCol, cacheKey)
         doSnapshot(id)

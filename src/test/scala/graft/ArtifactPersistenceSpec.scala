@@ -120,6 +120,72 @@ class ArtifactPersistenceSpec extends AnyFunSuite {
     }
   }
 
+  test("pair snapshots hold pairs + arrays only; a snapshot in the former " +
+    "three-part layout (postings without set sizes) loads and appends like " +
+    "a fresh build") {
+    import org.apache.spark.sql.functions.{col, explode}
+    val corpus = df(corpusRows)
+    val all = df(corpusRows ++ b1Rows ++ b2Rows)
+    for (lsh <- Seq(false, true)) {
+      val key = s"persist-pairs-layout-$lsh"
+      Dedup.resetPairs(spark, key)
+      try {
+        Dedup.trainedPairs(corpus, "doc_id", "text", 0.8, key, lsh)
+        assert(Dedup.appendPairs(df(b1Rows), "doc_id", "text", 0.8, key, lsh))
+        val segs = Dedup.pairSegmentsOf(spark, key)
+        val pairs = segs.map(_.pairs).reduce(_ unionByName _)
+        val toks = segs.map(_.toks).reduce(_ unionByName _)
+        // today's layout: the probe is derivable, so it is not written
+        val path = tmp("pairlayout")
+        assert(Dedup.savePairs(spark, key, path))
+        val parts = new java.io.File(Snapshots.resolveDir(spark, path))
+          .listFiles().filter(_.isDirectory).map(_.getName).toSet
+        assert(parts == Set("pairs", "toks"), s"snapshot parts: $parts")
+        // the former layout: a stored probe part, postings as (term, doc_id)
+        val legacy = tmp("pairlayout-legacy")
+        Snapshots.write(spark, legacy, Seq("pairs" -> pairs, "toks" -> toks,
+          "probe" -> (
+            if (lsh) segs.flatMap(_.probe).reduce(_ unionByName _)
+            else toks.select(explode(col("toks")).as("term"), col("doc_id")))))
+        for (p <- Seq(path, legacy)) {
+          Dedup.resetPairs(spark, key)
+          Dedup.loadPairs(spark, p, key)
+          assert(Dedup.appendPairs(df(b2Rows), "doc_id", "text", 0.8, key, lsh))
+          val fresh = pairSet(
+            if (lsh) Dedup.minhashLshPairs(all, "doc_id", "text", 0.8)
+            else Dedup.jaccardPairs(all, "doc_id", "text", 0.8))
+          assert(pairSet(Dedup.trainedPairs(corpus, "doc_id", "text", 0.8,
+            key, lsh)) == fresh, s"lsh=$lsh: append after loading $p diverged")
+        }
+      } finally Dedup.resetPairs(spark, key)
+    }
+  }
+
+  test("snapshot parts are sized by their data: a part unioning many pinned " +
+    "segments is written as one file below the split size") {
+    val key = "persist-tf-files"
+    TermStats.resetTermFreqs(spark, key)
+    try {
+      TermStats.trainedTermFreqs(df(corpusRows), "doc_id", "text", key)
+      for ((id, text) <- b1Rows ++ b2Rows)
+        assert(TermStats.appendTermFreqs(df(Seq(id -> text)), "doc_id", "text", key))
+      val tf = TermStats.tfSegmentsOf(spark, key).reduce(_ unionByName _)
+      assert(tf.rdd.getNumPartitions > 1, "the union must span partitions")
+      assert(Snapshots.filesFor(tf) == 1)
+      // the split size is the target: a tiny one leaves every partition
+      // its own file (coalescing never splits)
+      val split0 = spark.conf.get("spark.sql.files.maxPartitionBytes")
+      spark.conf.set("spark.sql.files.maxPartitionBytes", "16")
+      try assert(Snapshots.filesFor(tf) >= tf.rdd.getNumPartitions)
+      finally spark.conf.set("spark.sql.files.maxPartitionBytes", split0)
+      val path = tmp("tffiles")
+      assert(TermStats.saveTermFreqs(spark, key, path))
+      val files = new java.io.File(Snapshots.resolveDir(spark, path), "tf")
+        .list().filter(_.endsWith(".parquet"))
+      assert(files.length == 1, s"tf part written as ${files.length} files")
+    } finally TermStats.resetTermFreqs(spark, key)
+  }
+
   private def rowSet(d: org.apache.spark.sql.DataFrame) =
     d.collect().map(_.toSeq).toSet
 

@@ -21,6 +21,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class CheckpointPinSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
+  import spark.implicits._
 
   private def fs(p: Path) =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -198,6 +199,74 @@ class CheckpointPinSpec extends AnyFunSuite {
       graft.ingest.TermStats.resetTermFreqs(spark, tk)
       Dedup.resetIndex(spark, ik)
       graft.extra.Multimodal.resetFeatures(spark, mk)
+      val orphans = allFiles()
+      assert(orphans.isEmpty,
+        s"${orphans.size} orphan checkpoint files, e.g. ${orphans.take(3)}")
+    }
+  }
+
+  test("a failed append drops the pins its siblings completed and surfaces " +
+    "the original error — admission index and pair artifact") {
+    withCheckpointDir { dir =>
+      import scala.jdk.CollectionConverters._
+      def allFiles(): Seq[String] = {
+        val s = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+        try s.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
+          .map(_.toString).toList
+        finally s.close()
+      }
+      // a pin that failed fast must not leave its sibling's job running
+      // past the check below
+      def quiesce(): Unit = {
+        Thread.sleep(1000)
+        while (spark.sparkContext.statusTracker.getActiveJobIds.nonEmpty)
+          Thread.sleep(50)
+      }
+      def causes(e: Throwable): Seq[Throwable] =
+        Iterator.iterate(e)(_.getCause).takeWhile(_ != null).toSeq
+      def assertOriginal(e: Throwable, what: String): Unit = {
+        assert(!e.isInstanceOf[java.util.concurrent.CompletionException],
+          s"$what surfaced the CompletionException envelope")
+        assert(causes(e).exists(c => String.valueOf(c.getMessage).contains(what)),
+          s"the error does not name the injected failure: $e")
+      }
+      val docs = Tables.load(spark, SparkTestSession.sf0001, "documents")
+      val corpus = docs.filter(col("doc_id") < 60).select("doc_id", "text")
+      val batch = docs.filter(col("doc_id") >= 60 && col("doc_id") < 80)
+        .select((col("doc_id") + 10000).as("doc_id"), col("text"))
+      val ik = "spec#ckpt_fail_idx"
+      val pk = "spec#ckpt_fail_pairs"
+      Dedup.trainedIndex(corpus, "doc_id", "text", ik)
+      Dedup.trainedPairs(corpus, "doc_id", "text", 0.9, pk)
+      try {
+        // admission index: the token-array pin projects doc_id for EVERY
+        // row, the signature pin only for docs with tokens (its empty-doc
+        // filter runs first) — so a doc_id that fails on an empty text
+        // fails one pin while its sibling completes
+        val boom = udf { (id: Long, text: String) =>
+          if (text.trim.isEmpty) throw new IllegalStateException("injected-empty")
+          id
+        }
+        val admitted = batch.unionByName(Seq(99999L -> " ").toDF("doc_id", "text"))
+          .select(boom(col("doc_id"), col("text")).as("doc_id"), col("text"))
+        assertOriginal(intercept[Throwable](
+          Dedup.appendAdmitted(admitted, "doc_id", "text", ik)), "injected-empty")
+        assert(Dedup.segmentCount(spark, ik) == 1)
+        // pair artifact: the corpus probe's files vanish, so the verify
+        // fails after the batch arrays are pinned and while the batch
+        // postings pin completes
+        val probe = Dedup.pairSegmentsOf(spark, pk).head.probe.get
+        val probeFile = new Path(Caching.checkpointFileOf(probe).get)
+        fs(probeFile).delete(probeFile, true)
+        val e = intercept[Throwable](
+          Dedup.appendPairs(batch, "doc_id", "text", 0.9, pk))
+        assert(!e.isInstanceOf[java.util.concurrent.CompletionException])
+        assert(Dedup.pairSegmentCount(spark, pk) == 1)
+        quiesce()
+      } finally {
+        Dedup.resetIndex(spark, ik)
+        Dedup.resetPairs(spark, pk)
+      }
       val orphans = allFiles()
       assert(orphans.isEmpty,
         s"${orphans.size} orphan checkpoint files, e.g. ${orphans.take(3)}")

@@ -174,6 +174,76 @@ class PairMaintainSpec extends AnyFunSuite {
     Dedup.resetPairs(spark, key)
   }
 
+  // ---- the size band (Dedup.sizeBand, the PPJoin/All-Pairs length
+  // filter) must be exactly as conservative as the verify: it may never
+  // drop a pair verifyJaccard's double arithmetic keeps.
+
+  /** Nested token sets: doc k holds tokens w1..wk (plus a shift so two
+    * families overlap partially), so a pair of sizes (a, b) with a < b has
+    * Jaccard exactly a/b — every size-band edge is a real document pair.
+    */
+  private def nested(k: Int, shift: Int = 0) =
+    doc((1 + shift to k + shift).map(i => s"w$i"))
+
+  test("size band never rejects a pair whose best case passes the verify — " +
+    "every size pair 1..200") {
+    val n = 200
+    // doc k = w1..wk: for a < b the intersection IS the smaller set, so
+    // the verify's ratio on the pair is its best case min/max
+    val arrs = Dedup.tokenArraysOf(
+      (1 to n).map(k => k.toLong -> nested(k)).toDF("doc_id", "text"),
+      "doc_id", "text")
+    val all = (for (a <- 1 to n; b <- a + 1 to n) yield (a.toLong, b.toLong))
+      .toDF("id_a", "id_b")
+    for (t <- Seq(0.8, 0.9, 0.95, 2.0 / 3, 0.7, 0.99)) {
+      val verified = Dedup.verifyJaccard(all, arrs, t)
+        .select("id_a", "id_b").collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSet
+      // doc_id = size, so the band is judged on the ids directly
+      val banded = all.filter(Dedup.sizeBand(col("id_a"), col("id_b"), t))
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert((verified -- banded).isEmpty,
+        s"t=$t: the band rejects verified pairs ${(verified -- banded).take(5)}")
+      // and it is tight: on nested sets the best case is the actual ratio
+      assert(verified == banded, s"t=$t: band keeps pairs no verify could")
+    }
+  }
+
+  test("brute-force all-pairs Jaccard ≡ jaccardPairs ≡ grown artifact on " +
+    "documents whose sizes sit on every size-band edge") {
+    // two nested families, one shifted by a token: within a family every
+    // (a, b) size pair up to 40 occurs (4/5, 8/10, 9/10, 16/20, 18/20,
+    // 19/20, 38/40 … — each threshold's edges, both sides), across them
+    // the overlaps are partial
+    val docs = (1 to 40).map(k => k.toLong -> nested(k)) ++
+      (1 to 40).map(k => (100L + k) -> nested(k, shift = 1))
+    val sets = docs.map { case (id, t) => id -> t.split(" ").toSet }.toMap
+    def round6(d: Double) = BigDecimal(d)
+      .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+    for (t <- Seq(0.8, 0.9, 0.95)) {
+      // no prefix filter, no length filter: every pair, the verify's ratio
+      val brute = (for {
+        (a, sa) <- sets; (b, sb) <- sets if a < b
+        inter = (sa & sb).size.toLong
+        jac = inter.toDouble / (sa.size + sb.size - inter) if jac >= t
+      } yield (a, b, round6(jac))).toSet
+      assert(brute.nonEmpty)
+      assert(pairSet(Dedup.jaccardPairs(df(docs), "doc_id", "text", t)) == brute,
+        s"t=$t: jaccardPairs differs from brute force")
+      val key = s"pairspec-edges-$t"
+      Dedup.resetPairs(spark, key)
+      try {
+        val (seed, rest) = docs.partition(_._1 % 3 == 0)
+        Dedup.trainedPairs(df(seed), "doc_id", "text", t, key)
+        val (b1, b2) = rest.partition(_._1 % 2 == 0)
+        assert(Dedup.appendPairs(df(b1), "doc_id", "text", t, key))
+        assert(Dedup.appendPairs(df(b2), "doc_id", "text", t, key))
+        assert(pairSet(Dedup.trainedPairs(df(seed), "doc_id", "text", t, key))
+          == brute, s"t=$t: the grown artifact differs from brute force")
+      } finally Dedup.resetPairs(spark, key)
+    }
+  }
+
   test("appendPairs is a no-op without a memoized artifact") {
     assert(!Dedup.appendPairs(df(batchRows), "doc_id", "text", 0.8,
       "pairspec-unbuilt"))
@@ -293,8 +363,22 @@ class PairMaintainSpec extends AnyFunSuite {
   } yield toks.mkString(" ")
 
   private def genDocs(ids: Range): org.scalacheck.Gen[Seq[(Long, String)]] =
-    org.scalacheck.Gen.listOfN(ids.size, genDoc)
+    genDocsOf(ids, genDoc)
+
+  private def genDocsOf(ids: Range, g: org.scalacheck.Gen[String])
+  : org.scalacheck.Gen[Seq[(Long, String)]] =
+    org.scalacheck.Gen.listOfN(ids.size, g)
       .map(ds => ids.map(_.toLong).zip(ds))
+
+  /** Sizes on the size-band edges of t = 0.8/0.9/0.95 (4/5, 8/10, 9/10,
+    * 16/20, 18/20, 19/20) and one past them, as nested token sets.
+    */
+  private val edgeSizes = Seq(4, 5, 6, 8, 9, 10, 11, 16, 18, 19, 20, 21)
+  private def genEdgeDoc: org.scalacheck.Gen[String] = for {
+    k <- org.scalacheck.Gen.oneOf(edgeSizes)
+    shift <- org.scalacheck.Gen.oneOf(0, 1)
+  } yield nested(k, shift)
+  private def genPairDoc = org.scalacheck.Gen.frequency(2 -> genDoc, 1 -> genEdgeDoc)
 
   private def checkProp(name: String, trials: Int,
                         prop: org.scalacheck.Prop): Unit = {
@@ -310,18 +394,22 @@ class PairMaintainSpec extends AnyFunSuite {
   test("property: grown pair artifact ≡ fresh build — random corpora, unicode, " +
     "overlaps, empty batches, replays, ceil-boundary thresholds, both variants") {
     val genCase = for {
-      corpus <- genDocs(1 to 4)
-      b1 <- genDocs(11 to 13)
-      b2 <- genDocs(21 to 22)
-      // threshold: either anywhere in (0.5, 0.95) or EXACTLY k/s for a doc
-      // size s in range — the ceil(t·|A|) boundary the prefix lemma must
-      // survive (rn <= sz - ceil(t·sz) + 1 with t·sz integral)
+      // random docs mixed with nested docs whose sizes sit on the size-band
+      // edges (the length filter's boundary, see genEdgeDoc)
+      corpus <- genDocsOf(1 to 4, genPairDoc)
+      b1 <- genDocsOf(11 to 13, genPairDoc)
+      b2 <- genDocsOf(21 to 22, genPairDoc)
+      // threshold: anywhere in (0.5, 0.95), EXACTLY k/s for a doc size s in
+      // range — the ceil(t·|A|) boundary the prefix lemma must survive
+      // (rn <= sz - ceil(t·sz) + 1 with t·sz integral) — or one whose band
+      // edges the nested docs sit on
       t <- org.scalacheck.Gen.oneOf(
         org.scalacheck.Gen.chooseNum(0.5, 0.95),
         for {
           s <- org.scalacheck.Gen.chooseNum(4, 10)
           k <- org.scalacheck.Gen.chooseNum(2, s)
-        } yield k.toDouble / s)
+        } yield k.toDouble / s,
+        org.scalacheck.Gen.oneOf(0.8, 0.9, 0.95))
       lsh <- org.scalacheck.Gen.oneOf(false, true)
       overlap <- org.scalacheck.Gen.oneOf(true, false) // b2 re-delivers a corpus doc
       emptyBatch <- org.scalacheck.Gen.oneOf(true, false)
