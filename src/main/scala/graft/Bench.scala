@@ -1,8 +1,10 @@
 package graft
 import org.apache.spark.sql.SparkSession
 object Bench {
-  /** (wall sec, stage run ms, stage cpu ms, compiled classes) of a line. */
-  type Timing = (Double, Long, Long, Long)
+  /** (wall sec, stage run ms, stage cpu ms, compiled classes, driver
+    * planning ms by phase) of a line.
+    */
+  type Timing = (Double, Long, Long, Long, Map[String, Long])
 
   /** Best-effort recursive delete of a bench-scoped temp directory (the
     * snapshot / stream-source dirs are consumed within their section —
@@ -54,15 +56,19 @@ object Bench {
     // work-proportional observables that survive a noisy draw and make
     // round-over-round comparison mechanical.
     val stageAgg = new StageLog.QueryStageAgg(spark.sparkContext)
+    // Driver planning time of the line's queries (analysis, optimization,
+    // physical planning), the driver-side share stage times do not see.
+    val planAgg = new StageLog.QueryPlanAgg(spark)
     // Classes Spark's codegen compiled: its cache holds 100 generated
     // classes (spark.sql.codegen.cache.maxEntries), and every miss is a
     // Janino compile the line pays for.
     def compiles: Long =
       org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-    // (wall sec, stage run ms, stage cpu ms, compiled classes) for one
-    // execution of f
+    // (wall sec, stage run ms, stage cpu ms, compiled classes, planning ms)
+    // for one execution of f
     def timed(name: String)(f: => Unit): Timing = {
       stageAgg.start(name)
+      planAgg.start()
       val c0 = compiles
       val t0 = System.nanoTime()
       try f
@@ -71,16 +77,19 @@ object Bench {
       }
       val wall = (System.nanoTime() - t0) / 1e9
       val (runMs, cpuMs) = stageAgg.finish()
-      (wall, runMs, cpuMs, compiles - c0)
+      (wall, runMs, cpuMs, compiles - c0, planAgg.finish())
     }
     // Per-metric min over the runs: min wall is the steady-state clock a
     // quiet machine would show; min stage/cpu is the same estimator on the
     // work-proportional axis (stage time varies only a few % run-to-run,
     // which is the point of carrying it); min compiles is the warm run's
-    // count, what the line costs once its classes are cached.
+    // count, what the line costs once its classes are cached; min planning
+    // ms, per phase, likewise.
     def minEach(runs: Seq[Timing]): Timing =
       (runs.map(_._1).min, runs.map(_._2).min, runs.map(_._3).min,
-        runs.map(_._4).min)
+        runs.map(_._4).min,
+        runs.flatMap(_._5.keys).distinct.map(p =>
+          p -> runs.map(_._5.getOrElse(p, 0L)).min).toMap)
     // Optional comma-separated query-name filter for local iteration
     // (SPARK_GRAFT_ONLY=doc_pagerank,bpe_pairs); the driver never sets it.
     val only = sys.env.get("SPARK_GRAFT_ONLY")
@@ -477,20 +486,23 @@ object Bench {
     def jmap(f: ((String, Timing)) => String): String =
       results.map { case (k, v) => s""""$k":${f((k, v))}""" }
         .mkString("{", ",", "}")
-    val qs = jmap { case (k, (wall, _, _, _)) =>
+    val qs = jmap { case (k, (wall, _, _, _, _)) =>
       // failed queries get a negative sentinel so the JSON can't read green
       (if (failed.contains(k)) -wall else wall).toString
     }
-    val stage = jmap { case (_, (_, runMs, _, _)) => runMs.toString }
-    val cpu = jmap { case (_, (_, _, cpuMs, _)) => cpuMs.toString }
-    val compiled = jmap { case (_, (_, _, _, n)) => n.toString }
+    val stage = jmap { case (_, (_, runMs, _, _, _)) => runMs.toString }
+    val cpu = jmap { case (_, (_, _, cpuMs, _, _)) => cpuMs.toString }
+    val compiled = jmap { case (_, (_, _, _, n, _)) => n.toString }
+    val planMs = jmap { case (_, (_, _, _, _, ms)) =>
+      ms.toSeq.sorted.map { case (p, v) => s""""$p":$v""" }.mkString("{", ",", "}")
+    }
     val errs = failed.distinct.map(n => s"\"$n\"").mkString("[", ",", "]")
     val total = if (results.nonEmpty) results.values.map(_._1).sum else 0.0
     // A filtered (partial) run is marked in the JSON so it can never be
     // mistaken for a full-run BENCH.json.
     val onlyKey = only.map(s =>
       s""","only":${s.toSeq.sorted.map(n => s"\"$n\"").mkString("[", ",", "]")}""").getOrElse("")
-    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"stage_ms":$stage,"cpu_ms":$cpu,"compiles":$compiled,"errors":$errs,"runs_per_query":$runsPerQuery,"sf":"$sfDir"$onlyKey}"""
+    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"stage_ms":$stage,"cpu_ms":$cpu,"compiles":$compiled,"plan_ms":$planMs,"errors":$errs,"runs_per_query":$runsPerQuery,"sf":"$sfDir"$onlyKey}"""
     // Truncation-proof emission (VERDICT r15 What's wrong #4): the driver
     // captures only stdout's TAIL (~2 KB), and the full line is ~10 KB at
     // 143 queries — so BENCH_r{N}.json kept landing head-truncated with

@@ -66,8 +66,12 @@ object Engine {
     *
     * A warm request runs three Spark jobs and nothing else: the kNN ranked
     * lists, the BM25 sums and the content matching, each collected as the
-    * request-bounded driver value it is. The query dataset's sketch rows,
-    * its metadata row and the corpus statistics are session memos; kth, the
+    * request-bounded driver value it is. Each of the three is a prepared
+    * plan ([[search.Prepared]]): its analyzed template is built by the
+    * first request of its shape over the current artifact, and every
+    * request binds its own values into a fresh copy. The query dataset's
+    * sketch rows, its metadata row and the corpus statistics are session
+    * memos; kth, the
     * candidate ids and the metadata scores pass between the stages as
     * driver values; the combine runs on the driver
     * ([[CombinedScorer.combineRows]]). The answer is a LocalRelation, so
@@ -115,15 +119,13 @@ object Engine {
     // content path's scale() is identity (content_search.py:434-438,
     // normalization commented out) — an internal inconsistency; we score
     // every candidate UNnormalized, consistently.
-    val edges = DistanceJoin.candidateEdgesLocal(sketch, req.queryId, ranked,
-      metadata.map(_._1), qRows, queryCols)
     // Exact integer-micro matching on both branches (the oracle-coverable
     // path): uniform weights apply AFTER the argmax (contentScoresExact),
     // non-uniform weights multiply the edge micros BEFORE it.
-    val content =
-      if (req.content.columns.isEmpty)
-        Matcher.contentScoresExact(edges, qRows.size.toLong)
-      else Matcher.contentScoresExactWeighted(edges, microWeights(req.content.columns))
+    val content = Matcher.contentScoresLocal(sketch, req.queryId, ranked,
+      metadata.map(_._1), qRows, queryCols,
+      if (req.content.columns.isEmpty) Map.empty
+      else microWeights(req.content.columns))
     // combineExact's arithmetic, not a float round(wc·c + wm·m, 6): both
     // inputs are 6-decimal values, and the float form lands on half-micro
     // boundaries where Spark (half-up) and DuckDB (banker's) disagree —

@@ -47,6 +47,42 @@ object StageLog {
     }
   }
 
+  /** Driver planning milliseconds per bench line: the analysis,
+    * optimization and planning phases Spark's `QueryPlanningTracker`
+    * records for every query the line executes, summed over them. Reported
+    * by a `QueryExecutionListener`, which Spark calls from the listener bus
+    * like the stage events above. Only executed queries report: the eager
+    * analyses of intermediate DataFrames, built on the way to the executed
+    * one, are not in any tracker this sees.
+    */
+  final class QueryPlanAgg(spark: org.apache.spark.sql.SparkSession)
+      extends org.apache.spark.sql.util.QueryExecutionListener {
+    import org.apache.spark.sql.catalyst.QueryPlanningTracker._
+    private val phases = Seq(ANALYSIS, OPTIMIZATION, PLANNING)
+    private val ms = scala.collection.mutable.Map.empty[String, Long]
+    private var on = false
+    spark.listenerManager.register(this)
+    private def record(qe: org.apache.spark.sql.execution.QueryExecution): Unit =
+      synchronized {
+        if (on) for (p <- phases; s <- qe.tracker.phases.get(p))
+          ms(p) = ms.getOrElse(p, 0L) + s.durationMs
+      }
+    override def onSuccess(f: String,
+                           qe: org.apache.spark.sql.execution.QueryExecution,
+                           ns: Long): Unit = record(qe)
+    override def onFailure(f: String,
+                           qe: org.apache.spark.sql.execution.QueryExecution,
+                           e: Exception): Unit = record(qe)
+    def start(): Unit = {
+      org.apache.spark.graft.ListenerDrain.drain(spark.sparkContext)
+      synchronized { ms.clear(); phases.foreach(ms(_) = 0L); on = true }
+    }
+    def finish(): Map[String, Long] = {
+      org.apache.spark.graft.ListenerDrain.drain(spark.sparkContext)
+      synchronized { on = false; ms.toMap }
+    }
+  }
+
   def attachIfEnabled(sc: SparkContext): Unit =
     if (sys.env.contains("GRAFT_STAGES"))
       sc.addSparkListener(new SparkListener {

@@ -4,12 +4,12 @@ import org.apache.spark.sql.{Column, GraftShim}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-import org.apache.spark.sql.catalyst.expressions.{Expression, LeafExpression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, IsNotNull, LeafExpression, UnaryExpression}
 import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** O(1) hash probe of a STRING key against a DRIVER-SUPPLIED literal map —
-  * the served-BM25 stat lookup ([[graft.search.Bm25.multiFieldServed]]).
+  * the served-BM25 stat lookup ([[graft.search.Bm25.multiFieldServedRows]]).
   *
   * Why not `element_at` on a map literal: Spark's GetMapValue over a
   * literal `ArrayBasedMapData` does a per-row LINEAR scan of the key
@@ -105,8 +105,8 @@ object MapLookup {
     * table: unlike `isin`, whose source grows with every listed value, the
     * generated code is the same for any set (false for a NULL key).
     */
-  def isIn(key: Column, keys: Iterable[String]): Column =
-    longLookup(key, keys.map(_ -> 1L).toMap).isNotNull
+  def isIn(key: Expression, keys: Iterable[String]): Expression =
+    IsNotNull(LiteralMapLookup(key, keys.map(_ -> 1L).toMap, LongType))
 
   /** An Int bound held by reference ([[HeldValue]]), not inlined. */
   def held(v: Int): Column = GraftShim.column(HeldValue(v))

@@ -1,8 +1,11 @@
 package graft.search
 
+import graft.functions.LiteralMapLookup
 import graft.ingest.TermStats
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, DoubleType, LongType}
 
 /** BM25 full-text scoring — the Spark replacement for danae's ES/Lucene
   * metadata search (search/metadata_search.py:12-46: bool/should `match` over
@@ -196,7 +199,11 @@ object Bm25 {
   }
 
   /** [[multiFieldServed]]'s ranked rows as driver values:
-    * (doc_id, <field>_score..., score), best first.
+    * (doc_id, <field>_score..., score), best first. The per-(doc, field)
+    * aggregate is a prepared plan over `qtf` ([[Prepared]]): one template
+    * per TF artifact, the four stat tables bound per request. A document
+    * with no `dl` entry drops, so the serving path passes the TF artifact
+    * itself and excludes the query document by leaving it out of `dl`.
     */
   def multiFieldServedRows(qtf: DataFrame,
                            dl: Seq[(String, String, Long)],
@@ -206,34 +213,40 @@ object Bm25 {
                            topM: Int = 100, k1: Double = 1.2,
                            b: Double = 0.75): Seq[org.apache.spark.sql.Row] = {
     val sep = "\u0000" // NUL: never in a field name; terms are space-split
-    import graft.functions.MapLookup.{doubleLookup, longLookup}
     def pairMap(rows: Seq[(String, String, Long)]) =
       rows.map { case (a, c, v) => (a + sep + c) -> v }.toMap
-    val dfreqM = pairMap(dfreq)
-    val dlM = pairMap(dl)
-    val ndocsM = corpus.map { case (f, n, _) => f -> n }.toMap
-    val avgdlM = corpus.map { case (f, _, a) => f -> a }.toMap
-    val scoredTerms = qtf
-      .withColumn("df",
-        longLookup(concat(col("field"), lit(sep), col("term")), dfreqM))
-      .withColumn("dl",
-        longLookup(concat(col("doc_id"), lit(sep), col("field")), dlM))
-      .withColumn("n_docs", longLookup(col("field"), ndocsM))
-      .withColumn("avgdl", doubleLookup(col("field"), avgdlM))
-      // a lookup miss (null) drops the row — the literal-map mirror of the
-      // former INNER joins on (field, term), (doc_id, field), (field)
-      .filter(col("df").isNotNull && col("dl").isNotNull &&
-        col("n_docs").isNotNull && col("avgdl").isNotNull)
-      .withColumn("idf",
-        log(lit(1.0) + (col("n_docs") - col("df") + lit(0.5)) / (col("df") + lit(0.5))))
-      .withColumn("term_score",
-        col("idf") * (col("tf") * (lit(k1) + 1.0)) /
-          (col("tf") + lit(k1) * (lit(1.0) - lit(b) + lit(b) * col("dl") / col("avgdl"))))
+    def lookup(name: String, entries: Map[String, _], t: DataType)
+    : (String, Seq[Expression] => Expression) =
+      name -> (key => LiteralMapLookup(key.head, entries.asInstanceOf[Map[String, Any]], t))
     // the one per-request job; model-sized by the budget gate. A doc's sum
     // for one field adds the same term scores in the same order as the
     // stats path's conditional per-field sum.
-    val sums = scoredTerms.groupBy("doc_id", "field")
-      .agg(sum("term_score").as("s"))
+    val sums = Prepared.of(qtf, ("bm25", k1, b)) {
+      def stat(name: String, t: DataType, key: Column) =
+        Prepared.slot(name, t, nullable = true, children = Seq(key))
+      qtf
+        .withColumn("df",
+          stat("df", LongType, concat(col("field"), lit(sep), col("term"))))
+        .withColumn("dl",
+          stat("dl", LongType, concat(col("doc_id"), lit(sep), col("field"))))
+        .withColumn("n_docs", stat("n_docs", LongType, col("field")))
+        .withColumn("avgdl", stat("avgdl", DoubleType, col("field")))
+        // a lookup miss (null) drops the row — the literal-map mirror of the
+        // former INNER joins on (field, term), (doc_id, field), (field)
+        .filter(col("df").isNotNull && col("dl").isNotNull &&
+          col("n_docs").isNotNull && col("avgdl").isNotNull)
+        .withColumn("idf",
+          log(lit(1.0) + (col("n_docs") - col("df") + lit(0.5)) / (col("df") + lit(0.5))))
+        .withColumn("term_score",
+          col("idf") * (col("tf") * (lit(k1) + 1.0)) /
+            (col("tf") + lit(k1) * (lit(1.0) - lit(b) + lit(b) * col("dl") / col("avgdl"))))
+        .groupBy("doc_id", "field")
+        .agg(sum("term_score").as("s"))
+    }.bind(
+      lookup("df", pairMap(dfreq), LongType),
+      lookup("dl", pairMap(dl), LongType),
+      lookup("n_docs", corpus.map { case (f, n, _) => f -> n }.toMap, LongType),
+      lookup("avgdl", corpus.map { case (f, _, a) => f -> a }.toMap, DoubleType))
       .collect()
       .groupBy(_.getString(0))
       .map { case (doc, rs) => doc -> rs.map(r => r.getString(1) -> r.getDouble(2)).toMap }

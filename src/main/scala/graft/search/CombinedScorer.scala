@@ -192,6 +192,7 @@ object CombinedScorer {
         datasetMetadata(spark, dir).withColumnRenamed("dataset_id", "doc_id"),
         "doc_id", metaFields)
         .transform(graft.Caching.pinArtifact)
+        .transform(Prepared.open)
     }
 
   private val metaFields = Seq("title", "keywords", "description")
@@ -247,7 +248,8 @@ object CombinedScorer {
   }
 
   /** Drop every metadata-corpus artifact for (session, dir): the cached
-    * catalogue corpus, the BM25 TF artifact and its driver-held stats. The
+    * catalogue corpus, the BM25 TF artifact with its prepared plans, and
+    * its driver-held stats. The
     * metadata corpus is derived from table SCHEMAS (column names), so a
     * dataset refresh that changes a dataset's column set must drop them
     * ([[refreshMetadata]]); without it the serving path would keep scoring
@@ -258,7 +260,10 @@ object CombinedScorer {
       val appId = spark.sparkContext.applicationId
       metaCache.keys.filter(k => k._1 == appId && k._2.startsWith(dir + "|"))
         .foreach(k => metaCache.remove(k).foreach(_.df.unpersist(blocking = false)))
-      metaTfCache.remove((appId, dir)).foreach(graft.Caching.dropArtifact)
+      metaTfCache.remove((appId, dir)).foreach { tf =>
+        Prepared.drop(tf)
+        graft.Caching.dropArtifact(tf)
+      }
       metaStatsCache.remove((appId, dir))
     }
 
@@ -409,14 +414,17 @@ object CombinedScorer {
   def metadataScores(spark: SparkSession, dir: String, queryId: String,
                      fields: Seq[(String, Double, Seq[String])])
   : Seq[(String, Double)] = {
-    val qtf = metaTermFreqs(spark, dir).filter(col("doc_id") =!= queryId)
+    val tf = metaTermFreqs(spark, dir)
     metaStatsLocal(spark, dir, queryId, fields) match {
       case Some((dl, corpus, dfreq)) =>
-        Bm25.multiFieldServedRows(qtf, dl, corpus, dfreq, fields)
+        // the query document has no dl entry, so its rows drop in the dl
+        // lookup: the artifact itself is the prepared plan's input
+        Bm25.multiFieldServedRows(tf, dl, corpus, dfreq, fields)
           .map(r => r.getString(0) -> r.getDouble(r.length - 1))
       case None =>
         val (dl, corpus, dfreq) = metaStatsFor(spark, dir, queryId, fields)
-        Bm25.multiFieldWithStats(qtf, dl, corpus, dfreq, fields)
+        Bm25.multiFieldWithStats(tf.filter(col("doc_id") =!= queryId),
+          dl, corpus, dfreq, fields)
           .select("doc_id", "score").collect()
           .map(r => r.getString(0) -> r.getDouble(1)).toSeq
     }

@@ -1,9 +1,12 @@
 package graft.search
 
-import graft.functions.{MapLookup, VectorOps}
+import graft.functions.{HeldValue, MapLookup, VectorOps}
 import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, BooleanType, DoubleType, IntegerType,
+  MapType, StringType, StructField, StructType}
 
 /** Column-sketch kNN — the Spark version of danae's R-tree nearest-neighbor
   * search over column vectors (search/content_search.py:72-116 +
@@ -53,30 +56,24 @@ object DistanceJoin {
     *                UI's column selection). The index side is never filtered:
     *                the reference trains on every column and a selection only
     *                narrows which query columns search (ui/ui.py:299-312).
-    * @param localQuery the query dataset's sketch rows as a LocalRelation
-    *                ([[Sketches.queryLocal]]): served like [[knnLocal]].
-    *                None (ad-hoc callers) filters the index as before.
     */
   def knn(sketch: DataFrame, queryId: String, m: Int = 100, l: Int = 50,
-          decay: Double = 0.01, queryCols: Option[Seq[String]] = None,
-          localQuery: Option[DataFrame] = None): DataFrame =
-    localQuery match {
-      case Some(q) => knnLocal(sketch, queryId, q.collect().toSeq, m, l, decay,
-        queryCols)
-      case None =>
-        val query = queryProjection(sketch.filter(col("dataset_id") === queryId),
-          queryCols)
-        knnOver(sketch, queryId, cands => cands.join(broadcast(query), "col_type"),
-          m, l, decay, spatial = true, served = false)
-    }
+          decay: Double = 0.01, queryCols: Option[Seq[String]] = None): DataFrame = {
+    val query = queryProjection(sketch.filter(col("dataset_id") === queryId),
+      queryCols)
+    knnOver(sketch, cands => cands.join(broadcast(query), "col_type"),
+      lit(m), lit(l), cap = false, decay, spatial = true, lit(queryId))
+  }
 
-  /** [[knn]] for the warm serving path: the query dataset's sketch rows
-    * arrive as driver values ([[Sketches.queryRows]]) and are embedded as a
-    * literal (see [[joinLocal]]), so no broadcast is built. m and l are
-    * held by reference ([[graft.functions.HeldValue]]) rather than inlined,
-    * so the UI (M100/L50) and API (M30/L10) shapes share generated classes;
-    * Spark's window group limit still prunes before the shuffle, on the
-    * fixed literal [[ServedGroupLimit]] (see [[rankAndScore]]).
+  /** [[knn]] for the warm serving path, as a prepared plan ([[Prepared]];
+    * one template per shape over each index version): the query dataset's
+    * sketch rows arrive as driver values ([[Sketches.queryRows]]) and are
+    * bound as a literal (see [[joinLocal]]), so no broadcast is built. m
+    * and l are held by reference ([[graft.functions.HeldValue]]) rather
+    * than inlined, so the UI (M100/L50) and API (M30/L10) shapes share
+    * generated classes; Spark's window group limit still prunes before the
+    * shuffle, on the fixed literal [[ServedGroupLimit]] (see
+    * [[rankAndScore]]).
     * The query's column types are known here, so a query without Spatial
     * columns skips the separate selection ranking: only same-type columns
     * pair, the selection metric then equals the scoring one, and the
@@ -84,15 +81,25 @@ object DistanceJoin {
     */
   def knnLocal(sketch: DataFrame, queryId: String, queryRows: Seq[Row],
                m: Int = 100, l: Int = 50, decay: Double = 0.01,
-               queryCols: Option[Seq[String]] = None): DataFrame =
-    knnOver(sketch, queryId,
-      cands => joinLocal(cands, queryRows, queryCols), m, l, decay,
-      spatial = queryRows.exists(_.getString(2) == "Spatial"), served = true)
+               queryCols: Option[Seq[String]] = None): DataFrame = {
+    val rows = selected(queryRows, queryCols)
+    val spatial = queryRows.exists(_.getString(2) == "Spatial")
+    val cap = m <= ServedGroupLimit
+    Prepared.of(sketch, ("knn", spatial, rows.isEmpty, cap, decay)) {
+      knnOver(sketch, joinLocal(_, rows.isEmpty),
+        Prepared.slot("m", IntegerType), Prepared.slot("l", IntegerType), cap,
+        decay, spatial, Prepared.slot("query_id", StringType))
+    }.bind(
+      "m" -> Prepared.value(HeldValue(m)),
+      "l" -> Prepared.value(HeldValue(l)),
+      "query_id" -> Prepared.value(Literal(queryId)),
+      "query" -> Prepared.value(queryMap(rows)))
+  }
 
-  private def knnOver(sketch: DataFrame, queryId: String,
+  private def knnOver(sketch: DataFrame,
                       pairWithQuery: DataFrame => DataFrame,
-                      m: Int, l: Int, decay: Double,
-                      spatial: Boolean, served: Boolean): DataFrame = {
+                      m: Column, l: Column, cap: Boolean, decay: Double,
+                      spatial: Boolean, queryId: Column): DataFrame = {
     // The index contains the query dataset's own columns too
     // (content_search.py:215-253 trains on every dataset): they occupy rank
     // positions and can BE the kth distance (a sibling column at non-zero
@@ -114,7 +121,7 @@ object DistanceJoin {
          round6micro(VectorOps.rectMinDist(col("q_vec"), col("c_vec"))))
          .otherwise(col("dist"))))
         .drop("q_vec", "c_vec")
-    rankAndScore(joined, m, l, decay, served)
+    rankAndScore(joined, m, l, cap, decay)
       .filter(col("c_dataset") =!= queryId)
   }
 
@@ -127,38 +134,50 @@ object DistanceJoin {
     sel.select(col("col_name").as("q_col"), col("col_type"), col("vector").as("q_vec"))
   }
 
+  /** The driver-held query rows restricted to a column selection. */
+  private def selected(queryRows: Seq[Row],
+                       queryCols: Option[Seq[String]]): Seq[Row] =
+    queryCols.fold(queryRows)(cs => queryRows.filter(r => cs.contains(r.getString(1))))
+
   /** The per-type many-to-many pairing of candidate columns with query
-    * columns that arrive as DRIVER rows (sketch-table schema): the query
-    * rows are embedded as an exploded LITERAL — col_type →
-    * array<struct<q_col, q_vec>> — because on this runtime a broadcast
+    * columns that arrive as DRIVER rows: the query rows are bound as an
+    * exploded LITERAL — col_type → array<struct<q_col, q_vec>>, the
+    * `query` slot ([[queryMap]]) — because on this runtime a broadcast
     * build is a Spark JOB even over a LocalRelation (tools/BcProbe), and
-    * the request path is driver-latency-bound. The literal folds into one
-    * reference-held map, so the generated code is the same for every query
+    * the request path is driver-latency-bound. A map literal is held by
+    * reference in generated code, so the code is the same for every query
     * dataset. explode(element_at(map, col_type)) yields no rows for a type
     * with no query columns — exactly the broadcast inner join's drop — and
     * the same (q_col, q_vec) values pair with each candidate row, so every
     * downstream distance/rank/kth value is bit-identical (oracle-locked).
+    * `empty` (no selected query rows) is its own shape: the join's empty
+    * result.
     */
-  private def joinLocal(cands: DataFrame, queryRows: Seq[Row],
-                        queryCols: Option[Seq[String]]): DataFrame = {
-    val rows = queryCols.fold(queryRows)(cs =>
-      queryRows.filter(r => cs.contains(r.getString(1))))
-    if (rows.isEmpty) // nothing to pair with: the join's empty result
-      return cands.filter(lit(false))
+  private def joinLocal(cands: DataFrame, empty: Boolean): DataFrame =
+    if (empty)
+      cands.filter(lit(false))
         .withColumn("q_col", lit(null).cast("string"))
         .withColumn("q_vec", lit(null).cast("array<double>"))
-    val arms = rows.groupBy(_.getString(2)).toSeq.map { case (ct, rs) =>
-      lit(ct) -> array(rs.map { r =>
-        struct(lit(r.getString(1)).as("q_col"),
-          typedLit(r.getSeq[Double](3)).as("q_vec"))
-      }: _*)
-    }
-    val qmap = map(arms.flatMap { case (k, v) => Seq(k, v) }: _*)
-    cands.withColumn("__q", explode(element_at(qmap, col("col_type"))))
-      .withColumn("q_col", col("__q.q_col"))
-      .withColumn("q_vec", col("__q.q_vec"))
-      .drop("__q")
-  }
+    else
+      cands.withColumn("__q",
+          explode(element_at(Prepared.slot("query", QueryMapType), col("col_type"))))
+        .withColumn("q_col", col("__q.q_col"))
+        .withColumn("q_vec", col("__q.q_vec"))
+        .drop("__q")
+
+  /** The `query` slot's type: what `map(lit(type) -> array(struct(
+    * lit(q_col), typedLit(q_vec))))` over the query rows resolves to.
+    */
+  private val QueryMapType = MapType(StringType, ArrayType(StructType(Seq(
+    StructField("q_col", StringType, nullable = false),
+    StructField("q_vec", ArrayType(DoubleType, containsNull = false),
+      nullable = false))), containsNull = false), valueContainsNull = false)
+
+  /** The `query` slot's value: the selected query rows grouped by type. */
+  private def queryMap(rows: Seq[Row]): Expression =
+    Literal.create(rows.groupBy(_.getString(2)).map { case (ct, rs) =>
+      ct -> rs.map(r => Row(r.getString(1), r.getSeq[Double](3)))
+    }, QueryMapType)
 
   /** Shared tail of both kNN paths: rank per query column, kth-distance
     * normalization, exp-decay similarity. Input: (q_col, c_dataset, c_col,
@@ -168,25 +187,21 @@ object DistanceJoin {
     * (the reference re-scores the R-tree's M nearest with euclidean,
     * content_search.py:78-96).
     *
-    * `served` holds m and l by reference ([[MapLookup.held]]) so every
-    * request shape shares generated classes. Spark infers its window group
-    * limit (a per-partition top-k before the shuffle) only from a LITERAL
-    * rank bound, so a served rank filter also carries the fixed literal
-    * [[ServedGroupLimit]] whenever m is within it: `rank <= cap` is implied
-    * by `rank <= m` and changes no row, but keeps the pre-shuffle pruning.
-    * Measured on an 860k-row index (4 cores, m=100): a held m alone shuffled
-    * 60 MB and took 7.5 s per kNN; with the cap 0.8 MB and 1.8 s, the same
-    * as a literal m.
+    * m and l are columns: literals on the batch paths, slots bound to held
+    * values ([[graft.functions.HeldValue]]) on the served one, so every
+    * served request shape shares generated classes. Spark infers its window group limit (a
+    * per-partition top-k before the shuffle) only from a LITERAL rank
+    * bound, so with `cap` (a served m within [[ServedGroupLimit]]) the rank
+    * filter also carries the fixed literal [[ServedGroupLimit]]:
+    * `rank <= cap` is implied by `rank <= m` and changes no row, but keeps
+    * the pre-shuffle pruning. Measured on an 860k-row index (4 cores,
+    * m=100): a held m alone shuffled 60 MB and took 7.5 s per kNN; with the
+    * cap 0.8 MB and 1.8 s, the same as a literal m.
     */
-  private[search] def rankAndScore(joined: DataFrame, m: Int, l: Int,
-                                   decay: Double,
-                                   served: Boolean = false): DataFrame = {
+  private def rankAndScore(joined: DataFrame, m: Column, l: Column,
+                           cap: Boolean, decay: Double): DataFrame = {
     def withinM(rank: Column): Column =
-      if (!served) rank <= lit(m)
-      else if (m <= ServedGroupLimit)
-        rank <= MapLookup.held(m) && rank <= lit(ServedGroupLimit)
-      else rank <= MapLookup.held(m)
-    val lC = if (served) MapLookup.held(l) else lit(l)
+      if (cap) rank <= m && rank <= lit(ServedGroupLimit) else rank <= m
     val selected =
       if (!joined.columns.contains("sel_dist")) joined
       else {
@@ -216,7 +231,7 @@ object DistanceJoin {
     ranked
       .withColumn("n_cand", count(lit(1)).over(part))
       .withColumn("kth", coalesce(
-        min(when(col("rank") >= least(lC, col("n_cand")) && col("dist") > 0,
+        min(when(col("rank") >= least(l, col("n_cand")) && col("dist") > 0,
           col("dist"))).over(part),
         lit(1e-12)))
       .drop("n_cand")
@@ -285,120 +300,112 @@ object DistanceJoin {
       .join(broadcast(qv), Seq("q_col"))
       .withColumn("dist", round6micro(VectorOps.euclid(col("q_vec"), col("c_vec"))))
       .drop("q_vec", "c_vec")
-    rankAndScore(joined, m, l, decay)
+    rankAndScore(joined, lit(m), lit(l), cap = false, decay)
       .filter(col("c_dataset") =!= queryId)
   }
-
-  /** Materialize a ranked list as a LocalRelation. Ranked lists are
-    * REQUEST-bounded by construction (≤ m rows per query column — the same
-    * driver-side object the reference's TA combiner iterates,
-    * combined_search.py:44-111), so the collect is m·#query-columns rows
-    * regardless of lake scale.
-    */
-  def localRanked(ranked: DataFrame): DataFrame =
-    ranked.sparkSession.createDataFrame(
-      java.util.Arrays.asList(ranked.collect(): _*), ranked.schema)
 
   /** Complete bipartite edge set for the candidate datasets the kNN step
     * discovered — the reference's "random access": for every discovered
     * candidate, edges cover ALL same-type (query col, candidate col) pairs,
     * computing distances directly for pairs that never made a ranked list
     * (content_search.py:300-333 + search_missing 358-405). kth comes from
-    * the ranked lists. Extra (metadata) candidates arrive either as a
-    * DataFrame, joined LEFT SEMI, or as driver ids (`extraCandidateIds`),
-    * probed like [[candidateEdgesLocal]]; with `localQuery` the query side
-    * is served like [[knnLocal]].
+    * the ranked lists. Extra (metadata) candidates arrive as a DataFrame,
+    * joined LEFT SEMI.
     */
   def candidateEdges(sketch: DataFrame, queryId: String, ranked: DataFrame,
                      decay: Double = 0.01,
                      extraCandidates: Option[DataFrame] = None,
-                     queryCols: Option[Seq[String]] = None,
-                     localQuery: Option[DataFrame] = None,
-                     extraCandidateIds: Option[Seq[String]] = None): DataFrame = {
-    val rankedRows = ranked.select("q_col", "kth", "c_dataset").collect()
-    val kth = kthOf(rankedRows)
-    val candCols = extraCandidateIds match {
-      case Some(extraIds) =>
-        probeCandidates(sketch, queryId, rankedRows.map(_.getString(2)) ++ extraIds)
-      case None =>
-        val rankedIds = ranked.select(col("c_dataset").as("dataset_id"))
-        // LEFT SEMI against the candidate ids: a semi join needs no
-        // build-side distinct (the former inner-join + .distinct() paid one
-        // more exchange inside the broadcast build), and duplicates can't
-        // fan rows out
-        val candIds = extraCandidates
-          .map(e => rankedIds.unionAll(e.toDF("dataset_id")))
-          .getOrElse(rankedIds)
-          .filter(col("dataset_id") =!= queryId)
-        sketch.join(broadcast(candIds), Seq("dataset_id"), "left_semi")
-          .select(col("dataset_id").as("c_dataset"),
-            col("col_name").as("c_col"), col("col_type"),
-            col("vector").as("c_vec"))
-    }
-    val paired = localQuery match {
-      case Some(q) => joinLocal(candCols, q.collect().toSeq, queryCols)
-      case None => candCols.join(broadcast(queryProjection(
-        sketch.filter(col("dataset_id") === queryId), queryCols)), "col_type")
-    }
-    scoreEdges(paired, kth, decay)
+                     queryCols: Option[Seq[String]] = None): DataFrame = {
+    val kth = ranked.select("q_col", "kth").collect()
+      .map(r => r.getString(0) -> r.getDouble(1)).toMap
+    val rankedIds = ranked.select(col("c_dataset").as("dataset_id"))
+    // LEFT SEMI against the candidate ids: a semi join needs no build-side
+    // distinct (the former inner-join + .distinct() paid one more exchange
+    // inside the broadcast build), and duplicates can't fan rows out
+    val candIds = extraCandidates
+      .map(e => rankedIds.unionAll(e.toDF("dataset_id")))
+      .getOrElse(rankedIds)
+      .filter(col("dataset_id") =!= queryId)
+    val candCols = sketch.join(broadcast(candIds), Seq("dataset_id"), "left_semi")
+      .select(col("dataset_id").as("c_dataset"),
+        col("col_name").as("c_col"), col("col_type"),
+        col("vector").as("c_vec"))
+    val paired = candCols.join(broadcast(queryProjection(
+      sketch.filter(col("dataset_id") === queryId), queryCols)), "col_type")
+    scoreEdges(paired,
+      if (kth.isEmpty) map()
+      else map(kth.toSeq.flatMap { case (q, v) => Seq(lit(q), lit(v)) }: _*),
+      decay)
   }
 
-  /** [[candidateEdges]] for the warm serving path, over driver values only:
-    * the collected ranked list (its per-q_col kth and its candidate ids),
-    * the metadata candidates' ids and the query dataset's sketch rows.
-    * Nothing request-specific enters the generated code: the candidate ids
-    * are probed through a reference-held hash set
+  /** [[candidateEdges]] for the warm serving path, as a prepared plan over
+    * driver values only: the collected ranked list (its per-q_col kth and
+    * its candidate ids), the metadata candidates' ids and the query
+    * dataset's sketch rows. Nothing request-specific enters the generated
+    * code: the candidate ids are probed through a reference-held hash set
     * ([[graft.functions.MapLookup.isIn]]; an `isin` list compiles every id
-    * into the source), and kth and the query rows fold into reference-held
-    * map literals.
+    * into the source), and kth and the query rows bind as map literals,
+    * which generated code holds by reference.
     */
   def candidateEdgesLocal(sketch: DataFrame, queryId: String,
                           ranked: Seq[Row], extraIds: Seq[String],
                           queryRows: Seq[Row],
                           queryCols: Option[Seq[String]] = None,
-                          decay: Double = 0.01): DataFrame = {
-    val rankedRows = ranked.map(r =>
-      Row(r.getAs[String]("q_col"), r.getAs[Double]("kth"), r.getAs[String]("c_dataset")))
-    val candCols = probeCandidates(sketch, queryId,
-      rankedRows.map(_.getString(2)) ++ extraIds)
-    scoreEdges(joinLocal(candCols, queryRows, queryCols),
-      kthOf(rankedRows), decay)
+                          decay: Double = 0.01): DataFrame =
+    servedEdges(sketch, queryId, ranked, extraIds, queryRows, queryCols,
+      decay)("edges", identity)()
+
+  /** [[candidateEdgesLocal]] with `over` applied to the edges inside the
+    * same prepared plan (the matching, [[Matcher.contentScoresLocal]]):
+    * `tail` names that shape and `tailValues` bind the slots `over` adds.
+    */
+  private[search] def servedEdges(sketch: DataFrame, queryId: String,
+                                  ranked: Seq[Row], extraIds: Seq[String],
+                                  queryRows: Seq[Row],
+                                  queryCols: Option[Seq[String]],
+                                  decay: Double = 0.01)
+                                 (tail: String, over: DataFrame => DataFrame)
+                                 (tailValues: (String, Seq[Expression] => Expression)*)
+  : DataFrame = {
+    val kth = ranked.map(r =>
+      r.getAs[String]("q_col") -> r.getAs[Double]("kth")).toMap
+    val ids = ranked.map(_.getAs[String]("c_dataset")) ++ extraIds
+    val rows = selected(queryRows, queryCols)
+    Prepared.of(sketch, (tail, rows.isEmpty, kth.isEmpty, decay)) {
+      val candCols = sketch
+        .filter(Prepared.slot("candidates", BooleanType,
+          children = Seq(col("dataset_id"))))
+        .select(col("dataset_id").as("c_dataset"),
+          col("col_name").as("c_col"), col("col_type"),
+          col("vector").as("c_vec"))
+      over(scoreEdges(joinLocal(candCols, rows.isEmpty),
+        if (kth.isEmpty) map() else Prepared.slot("kth", KthMapType), decay))
+    }.bind(Seq[(String, Seq[Expression] => Expression)](
+      // the candidate datasets, the query dataset excluded
+      "candidates" -> (key => MapLookup.isIn(key.head, ids.toSet - queryId)),
+      "query" -> Prepared.value(queryMap(rows)),
+      "kth" -> Prepared.value(Literal.create(kth, KthMapType))) ++ tailValues: _*)
   }
 
-  /** Per-q_col kth of a ranked list's (q_col, kth, ...) rows. */
-  private def kthOf(rows: Seq[Row]): Map[String, Double] =
-    rows.map(r => r.getString(0) -> r.getDouble(1)).toMap
-
-  /** The sketch rows of the candidate datasets `ids` (the query dataset
-    * excluded) as (c_dataset, c_col, col_type, c_vec).
-    */
-  private def probeCandidates(sketch: DataFrame, queryId: String,
-                              ids: Seq[String]): DataFrame =
-    sketch.filter(MapLookup.isIn(col("dataset_id"), ids.toSet - queryId))
-      .select(col("dataset_id").as("c_dataset"),
-        col("col_name").as("c_col"), col("col_type"),
-        col("vector").as("c_vec"))
+  /** The `kth` slot's type: q_col → the ranked list's kth distance. */
+  private val KthMapType = MapType(StringType, DoubleType, valueContainsNull = false)
 
   /** Distances and sims of paired (candidate, query) columns, normalized
-    * by the ranked lists' per-q_col kth. kth is request-bounded and
-    * driver-resident, so it is served as a map literal instead of a
-    * broadcast join (a broadcast build is a Spark JOB even over a
-    * LocalRelation on this runtime — tools/BcProbe). The isNotNull filter
-    * replicates the former INNER join: edges whose q_col never made a
-    * ranked list drop.
+    * by the ranked lists' per-q_col kth, `kthM` (q_col → kth). kth is
+    * request-bounded and driver-resident, so it is served as a map literal
+    * instead of a broadcast join (a broadcast build is a Spark JOB even
+    * over a LocalRelation on this runtime — tools/BcProbe). The isNotNull
+    * filter replicates the former INNER join: edges whose q_col never made
+    * a ranked list drop.
     */
-  private def scoreEdges(paired: DataFrame, kth: Map[String, Double],
-                         decay: Double): DataFrame = {
-    val kthM =
-      if (kth.isEmpty) map()
-      else map(kth.toSeq.flatMap { case (q, v) => Seq(lit(q), lit(v)) }: _*)
+  private def scoreEdges(paired: DataFrame, kthM: Column,
+                         decay: Double): DataFrame =
     paired
       .withColumn("dist", round6micro(VectorOps.euclid(col("q_vec"), col("c_vec"))))
       .drop("q_vec", "c_vec")
       .withColumn("kth", element_at(kthM, col("q_col")))
       .filter(col("kth").isNotNull)
       .withColumn("sim", round(exp(-lit(decay) * col("dist") / col("kth")), 6))
-  }
 
   /** Ranked lists with per-query-column weights applied (the `w * sim` edge
     * weight used by the matcher; weights pre-normalized to sum 1 like

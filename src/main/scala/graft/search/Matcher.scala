@@ -1,7 +1,10 @@
 package graft.search
 
-import org.apache.spark.sql.{DataFrame, Row}
+import graft.functions.{HeldValue, MapLookup}
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, MapType, StringType}
 
 /** Max-weight bipartite column matching — danae matches query columns to
   * candidate columns one-to-one and scores a candidate by the summed matched
@@ -111,18 +114,16 @@ object Matcher {
   }
 
   /** Per-candidate edge lists of (q_col, c_col, w_sim) rows, scored by
-    * `score` inside the executor-local matching UDF.
+    * `score` (a matching UDF over the edge list) executor-locally.
     */
   private def matchPerCandidate(weightedRanked: DataFrame)
-                               (score: Seq[Row] => (Double, Seq[MatchedEdge])): DataFrame = {
-    val matchUdf = udf(score)
+                               (score: Column => Column): DataFrame =
     weightedRanked
       .groupBy(col("c_dataset"))
       .agg(collect_list(struct(col("q_col"), col("c_col"), col("w_sim"))).as("edges"))
-      .withColumn("m", matchUdf(col("edges")))
+      .withColumn("m", score(col("edges")))
       .select(col("c_dataset"), col("m._1").as("content_score"),
         col("m._2").as("matching"))
-  }
 
   /** Content score per candidate dataset: group the weighted ranked lists by
     * candidate, build the bipartite edge set (q_col ↔ c_col, weight = w*sim),
@@ -131,12 +132,14 @@ object Matcher {
     * The score is deliberately NOT normalized by column count — the
     * reference's scaling is commented out (content_search.py:434-438).
     */
-  def contentScores(weightedRanked: DataFrame): DataFrame =
-    matchPerCandidate(weightedRanked) { edges =>
-      val (score, matched) = matchEdges(edges, _ => 1.0)
-      (BigDecimal(score).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble,
+  def contentScores(weightedRanked: DataFrame): DataFrame = {
+    val score = udf { (edges: Seq[Row]) =>
+      val (total, matched) = matchEdges(edges, _ => 1.0)
+      (BigDecimal(total).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble,
         matched.map { case (q, c, w) => MatchedEdge(q, c, w) })
     }
+    matchPerCandidate(weightedRanked)(score(_))
+  }
 
   /** Content scores with EXACT cross-engine-reproducible arithmetic: the
     * matching runs on integer micro-weights `round(sim * 1e6)` (sims are
@@ -154,7 +157,8 @@ object Matcher {
     * Matching payload weights are rescaled back to w*sim.
     */
   def contentScoresExact(edges: DataFrame, totalQueryCols: Long): DataFrame =
-    exactScores(edges, _ => 1.0, totalQueryCols)
+    exactScores(edges, typedLit(Map.empty[String, Long]),
+      MapLookup.held(totalQueryCols.toInt))
 
   /** Exact content scores under NON-UNIFORM per-query-column weights. The
     * weights arrive as integer micro-numerators (normalized to sum exactly
@@ -165,34 +169,62 @@ object Matcher {
     * stays engine-reproducible. Scale: total is in (weight-micro × sim-micro)
     * units, so `content_score = (total DIV 1e6) / 1e6` — the weighted
     * analogue of the uniform 1/nQ, with the same truncating-division
-    * discipline. A query column absent from the map gets weight 0 (the UI
-    * deselected it but an edge slipped through — defensive).
+    * discipline. A query column absent from a non-empty map gets weight 0
+    * (the UI deselected it but an edge slipped through — defensive); an
+    * empty map is the uniform weighting.
     */
   def contentScoresExactWeighted(edges: DataFrame,
                                  microWeights: Map[String, Long]): DataFrame =
-    exactScores(edges, q => microWeights.getOrElse(q, 0L).toDouble, 1000000L)
+    exactScores(edges, typedLit(microWeights), MapLookup.held(1000000))
 
-  /** The exact form both entry points share, with the column weights and
-    * the divisor applied inside the matching closure: the edge micros
-    * `round(sim * 1e6)` are multiplied by their query column's weight (1
-    * in the uniform case, which leaves them unchanged), and the integer
-    * total and each matched weight are truncating-divided by `divisor`,
-    * then scaled to 1e-6 units — the former SQL tail's
+  /** The served request's content scores as ONE prepared plan
+    * ([[Prepared]]): [[DistanceJoin.candidateEdgesLocal]]'s edges and the
+    * exact matching over them, with the weights and the divisor bound per
+    * request like every other request value. Empty `microWeights` is the
+    * uniform form ([[contentScoresExact]] over every query row); otherwise
+    * [[contentScoresExactWeighted]].
+    */
+  def contentScoresLocal(sketch: DataFrame, queryId: String, ranked: Seq[Row],
+                         extraIds: Seq[String], queryRows: Seq[Row],
+                         queryCols: Option[Seq[String]],
+                         microWeights: Map[String, Long]): DataFrame = {
+    val divisor = if (microWeights.isEmpty) queryRows.size else 1000000
+    DistanceJoin.servedEdges(sketch, queryId, ranked, extraIds, queryRows,
+      queryCols)("match", exactScores(_, Prepared.slot("weights", WeightsType),
+        Prepared.slot("divisor", IntegerType)))(
+      "weights" -> Prepared.value(Literal.create(microWeights, WeightsType)),
+      "divisor" -> Prepared.value(HeldValue(divisor)))
+  }
+
+  /** The weights argument's type: what `typedLit` gives a Map[String, Long]. */
+  private val WeightsType = MapType(StringType, LongType, valueContainsNull = false)
+
+  /** The exact matching of one candidate's edges: the edge micros
+    * `round(sim * 1e6)` multiplied by their query column's weight (every
+    * weight 1 when `weights` is empty, which leaves them unchanged), and
+    * the integer total and each matched weight truncating-divided by
+    * `divisor`, then scaled to 1e-6 units — the former SQL tail's
     * `CAST(x AS BIGINT) DIV n`, cast back to DOUBLE, divided by 1e6 (the
     * totals are integer-valued doubles, so the former 6-decimal round
-    * before the cast was the identity). Neither the weights nor the
-    * divisor — the query dataset's column count in the uniform case —
-    * enter generated code, so uniform and weighted requests over every
-    * query dataset share one set of compiled classes.
+    * before the cast was the identity). The weights and the divisor — the
+    * query dataset's column count in the uniform case — are arguments of
+    * the one UDF, never compiled into generated code, so uniform and
+    * weighted requests over every query dataset share one set of compiled
+    * classes and one prepared plan.
     */
-  private def exactScores(edges: DataFrame, colWeight: String => Double,
-                          divisor: Long): DataFrame = {
-    def scaled(x: Double): Double = (x.toLong / divisor).toDouble / 1e6
-    matchPerCandidate(edges.withColumn("w_sim", round(col("sim") * 1e6))) { es =>
-      val (score, matched) = matchEdges(es, colWeight)
+  private val exactMatch = udf {
+    (edges: Seq[Row], weights: Map[String, Long], divisor: Int) =>
+      val colWeight: String => Double =
+        if (weights.isEmpty) _ => 1.0 else q => weights.getOrElse(q, 0L).toDouble
+      def scaled(x: Double): Double = (x.toLong / divisor.toLong).toDouble / 1e6
+      val (score, matched) = matchEdges(edges, colWeight)
       (scaled(score), matched.map { case (q, c, w) => MatchedEdge(q, c, scaled(w)) })
-    }
   }
+
+  private def exactScores(edges: DataFrame, weights: Column,
+                          divisor: Column): DataFrame =
+    matchPerCandidate(edges.withColumn("w_sim", round(col("sim") * 1e6)))(
+      exactMatch(_, weights, divisor))
 }
 
 /** One matched (query column, candidate column) edge of a content score. */

@@ -206,7 +206,7 @@ object Sketches {
       // refreshed entries. pinArtifact picks RELIABLE checkpoint when the
       // session has a checkpoint dir (cluster: blocks survive executor
       // loss) and localCheckpoint otherwise (single-node bench).
-      graft.Caching.pinArtifact(all(spark, dir).repartition(1))
+      Prepared.open(graft.Caching.pinArtifact(all(spark, dir).repartition(1)))
     }
 
   /** Persist the pinned sketch index for (session, dir) to `path` via the
@@ -241,16 +241,17 @@ object Sketches {
       require(!cache.contains(k),
         s"sketch index for '$dir' already live in this session — reset it " +
           "before loading a snapshot over it")
-      val pinned = graft.Caching.pinArtifact(
+      val pinned = Prepared.open(graft.Caching.pinArtifact(
         spark.read.parquet(
           s"${graft.Snapshots.resolveDir(spark, path)}/sketch")
-          .repartition(1))
+          .repartition(1)))
       cache.put(k, pinned)
       pinned
     }
   }
 
-  /** Drop the pinned index for (session, dir) — the explicit inverse of
+  /** Drop the pinned index for (session, dir), with its prepared plans
+    * ([[Prepared]]) — the explicit inverse of
     * [[train]], so a benchmark can time a TRUE rebuild (and a test can
     * force a cold path) instead of the memo hit a second [[train]] call is
     * by design. Safe on a refreshed (checkpointed) entry too: the entry is
@@ -259,7 +260,10 @@ object Sketches {
   def reset(spark: SparkSession, dir: String): Unit = {
     val appId = spark.sparkContext.applicationId
     memoSwap.synchronized {
-      cache.remove((appId, dir)).foreach(_.unpersist(blocking = false))
+      cache.remove((appId, dir)).foreach { index =>
+        Prepared.drop(index)
+        index.unpersist(blocking = false)
+      }
       queryRowsCache.keys.filter(k => k._1 == appId && k._2 == dir)
         .foreach(queryRowsCache.remove)
     }
@@ -320,7 +324,8 @@ object Sketches {
     * SERVING index current without the full rebuild): recompute the
     * dataset's sketch rows through the same pipelines as the batch build,
     * splice them in place of the old rows, and atomically swap the cache
-    * entry. The new index is localCheckpoint'd (lineage cut) BEFORE the
+    * entry; the old index's prepared plans ([[Prepared]]) are dropped in
+    * the same swap. The new index is localCheckpoint'd (lineage cut) BEFORE the
     * swap, so a reader never observes a half-built index.
     *
     * Old-snapshot lifecycle: the ORIGINAL build is a persist() with full
@@ -352,9 +357,10 @@ object Sketches {
         .filter(org.apache.spark.sql.functions.col("dataset_id") =!= datasetId)
         .unionAll(fresh.select(old.columns.map(org.apache.spark.sql.functions.col): _*))
         .repartition(1)
-      val updatedPinned = graft.Caching.pinArtifact(updated)
+      val updatedPinned = Prepared.open(graft.Caching.pinArtifact(updated))
       memoSwap.synchronized {
         cache.put(key, updatedPinned)
+        Prepared.drop(old)
         queryRowsCache.remove((key._1, dir, datasetId))
       }
       val oldIsCheckpoint = old.queryExecution.analyzed.collectFirst {

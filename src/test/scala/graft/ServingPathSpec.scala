@@ -122,16 +122,16 @@ class ServingPathSpec extends AnyFunSuite {
     val dir = SparkTestSession.sf0001
     val queryId = "customer"
     val sketch = graft.search.Sketches.cachedAll(spark, dir)
-    val qLocal = Some(graft.search.Sketches.queryLocal(spark, dir, queryId))
-    val ranked = graft.search.DistanceJoin.localRanked(
-      graft.search.DistanceJoin.knn(sketch, queryId, 100, 50,
-        localQuery = qLocal))
+    val qRows = graft.search.Sketches.queryRows(spark, dir, queryId)
+    val served = graft.search.DistanceJoin.knnLocal(sketch, queryId, qRows, 100, 50)
+    val rankedRows = served.collect().toSeq
+    val ranked = spark.createDataFrame(java.util.Arrays.asList(rankedRows: _*),
+      served.schema)
     val extraIds = Seq("orders", "supplier") // stand-in metadata candidates
     val viaDf = graft.search.DistanceJoin.candidateEdges(sketch, queryId,
-      ranked, extraCandidates = Some(extraIds.toDF("dataset_id")),
-      localQuery = qLocal)
-    val viaIds = graft.search.DistanceJoin.candidateEdges(sketch, queryId,
-      ranked, extraCandidateIds = Some(extraIds), localQuery = qLocal)
+      ranked, extraCandidates = Some(extraIds.toDF("dataset_id")))
+    val viaIds = graft.search.DistanceJoin.candidateEdgesLocal(sketch, queryId,
+      rankedRows, extraIds, qRows)
     def keyed(df: DataFrame) = df.collect().map { r =>
       (r.getAs[String]("c_dataset"), r.getAs[String]("c_col"),
         r.getAs[String]("q_col")) ->
@@ -703,5 +703,259 @@ class ServingPathSpec extends AnyFunSuite {
       }
     } finally spark.sparkContext.removeSparkListener(listener)
   }
-}
 
+  // ---- prepared served requests ----
+
+  private val splits = Seq((1.0, 1.0), (2.0, 1.0), (1.0, 3.0), (3.0, 2.0))
+
+  /** A request of `kind` for dataset `d` at split `wc`:`wm`: the UI and API
+    * defaults over every column and field, or a weighted request over a
+    * per-dataset column subset and two of the fields.
+    */
+  private def request(cols: Map[String, Seq[String]], kind: String, d: String,
+                      wc: Double, wm: Double): Engine.SearchRequest = kind match {
+    case "ui" => Engine.SearchRequest(d, Engine.ContentSpec(weight = wc),
+      Engine.MetadataSpec(weight = wm), 100, 50, 15)
+    case "api" => Engine.SearchRequest(d, Engine.ContentSpec(weight = wc),
+      Engine.MetadataSpec(weight = wm), 30, 10, 5)
+    case "weighted" => Engine.SearchRequest(d,
+      Engine.ContentSpec(cols(d).take(3).zipWithIndex
+        .map { case (c, i) => c -> (i + 1.0) }.toMap, wc),
+      Engine.MetadataSpec(Map("title" -> 2.0, "description" -> 1.0), wm), 60, 20, 10)
+  }
+
+  /** The served answer of `req` (CombinedScorer.search's field order for
+    * the default fields, Engine.search's otherwise).
+    */
+  private def served(dir: String, req: Engine.SearchRequest): Seq[Seq[Any]] =
+    answer(if (req.metadata.fields.size == 3)
+      Engine.search(spark, dir, req, Seq("title", "keywords", "description"))
+    else Engine.search(spark, dir, req))
+
+  /** The content and metadata scores of `req` built from scratch: BM25
+    * through the DataFrame statistics over the TF table without the query
+    * dataset, the batch kNN and candidate edges over the index, and the
+    * exact matching over them — collected, so each split's combineExact
+    * reads the same rows.
+    */
+  private def freshParts(dir: String, req: Engine.SearchRequest)
+  : (DataFrame, DataFrame) = try {
+    val d = req.queryId
+    val fieldOrder =
+      if (req.metadata.fields.size == 3) Seq("title", "keywords", "description")
+      else req.metadata.fields.keys.toSeq.sorted
+    val (qt, qk, qd) = CombinedScorer.queryMetaRow(spark, dir, d)
+    val text = Map("title" -> qt, "keywords" -> qk, "description" -> qd)
+    val weights = Engine.normalize(req.metadata.fields)
+    val fields = fieldOrder.map(f => (f, weights(f),
+      text(f).toLowerCase.split(" ").filter(_.nonEmpty).distinct.toSeq))
+    def local(df: DataFrame) =
+      spark.createDataFrame(java.util.Arrays.asList(df.collect(): _*), df.schema)
+    val meta = local(Bm25.multiFieldWithTf(CombinedScorer.metaTermFreqs(spark, dir)
+        .filter(col("doc_id") =!= d), fields)
+      .select(col("doc_id").as("c_dataset"), col("score").as("metadata_score")))
+    val sketch = graft.search.Sketches.cachedAll(spark, dir)
+    val queryCols =
+      if (req.content.columns.isEmpty) None else Some(req.content.columns.keys.toSeq)
+    val edges = graft.search.DistanceJoin.candidateEdges(sketch, d,
+      graft.search.DistanceJoin.knn(sketch, d, req.m, req.l, queryCols = queryCols),
+      extraCandidates = Some(meta.select("c_dataset")), queryCols = queryCols)
+    val content =
+      if (req.content.columns.isEmpty) graft.search.Matcher.contentScoresExact(edges,
+        sketch.filter(col("dataset_id") === d).count())
+      else graft.search.Matcher.contentScoresExactWeighted(edges,
+        Engine.microWeights(req.content.columns))
+    (local(content), meta)
+  } finally Caching.release()
+
+  /** combineExact over `parts` at each of `reqs`' splits, in the served row
+    * layout, collected as one union (each branch keeps its own order).
+    */
+  private def combinedAll(reqs: Seq[Engine.SearchRequest],
+                          parts: (DataFrame, DataFrame)): Seq[Seq[Seq[Any]]] = {
+    val rows = reqs.zipWithIndex.map { case (req, i) =>
+      val (wc, _) = Engine.normalizeSplit(req)
+      CombinedScorer.combineExact(parts._1, parts._2, math.round(wc * 1e6), req.k)
+        .select(lit(i).as("request"), col("c_dataset"), col("content_score"),
+          col("matching"), col("metadata_score"), col("overall_score"))
+    }.reduce(_.unionAll(_)).collect()
+    reqs.indices.map(i => rows.filter(_.getInt(0) == i)
+      .map(r => r.toSeq.tail :+ reqs(i).queryId).toSeq)
+  }
+
+  private def combined(req: Engine.SearchRequest,
+                       parts: (DataFrame, DataFrame)): Seq[Seq[Any]] =
+    combinedAll(Seq(req), parts).head
+
+  private lazy val columnsOf: Map[String, Seq[String]] =
+    graft.search.Sketches.cachedAll(spark, SparkTestSession.sf0001)
+      .select("dataset_id", "col_name").collect()
+      .groupBy(_.getString(0)).map { case (d, rs) => d -> rs.map(_.getString(1)).sorted }
+
+  private val kinds = Seq("ui", "api", "weighted")
+
+  /** Run `f` under the serving session conf (AQE off, 2 static shuffle
+    * partitions; answers are conf-independent, see above), which keeps
+    * each of the many small queries below cheap.
+    */
+  private def servingConf[A](f: => A): A = {
+    val aqe0 = spark.conf.get("spark.sql.adaptive.enabled")
+    val parts0 = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    spark.conf.set("spark.sql.shuffle.partitions", "2")
+    try f finally {
+      spark.conf.set("spark.sql.adaptive.enabled", aqe0)
+      spark.conf.set("spark.sql.shuffle.partitions", parts0)
+    }
+  }
+
+  /** Fresh parts of every (kind, dataset) of the fixture lake, built three
+    * at a time.
+    */
+  private lazy val freshOf: Map[(String, String), (DataFrame, DataFrame)] = {
+    val dir = SparkTestSession.sf0001
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
+    try {
+      val futs = for (kind <- kinds; d <- Tables.sketchTables) yield
+        (kind, d) -> pool.submit(new java.util.concurrent.Callable[(DataFrame, DataFrame)] {
+          def call() = freshParts(dir, request(columnsOf, kind, d, 1.0, 1.0))
+        })
+      futs.map { case (k, f) => k -> f.get(300, java.util.concurrent.TimeUnit.SECONDS) }.toMap
+    } finally pool.shutdownNow()
+  }
+
+  test("prepared serving: ui, api and weighted requests over every dataset " +
+    "and split equal combineExact over freshly built frames, ties included") { servingConf {
+    val dir = SparkTestSession.sf0001
+    // three clients at a time, as in serving: the answers do not depend on
+    // it (the concurrency spec below), the spec's wall time does
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
+    try {
+      val futs = for (kind <- kinds; d <- Tables.sketchTables) yield
+        pool.submit(new java.util.concurrent.Callable[Seq[String]] {
+          def call(): Seq[String] = {
+            val reqs = splits.map { case (wc, wm) => request(columnsOf, kind, d, wc, wm) }
+            reqs.zip(combinedAll(reqs, freshOf((kind, d)))).collect {
+              case (req, want) if served(dir, req) != want =>
+                s"$kind $d ${req.content.weight}:${req.metadata.weight}"
+            }
+          }
+        })
+      val diverged = futs.flatMap(_.get(300, java.util.concurrent.TimeUnit.SECONDS))
+      assert(diverged.isEmpty, s"served answers diverged: ${diverged.mkString(", ")}")
+    } finally pool.shutdownNow()
+  }}
+
+  test("prepared serving: back-to-back requests of one shape with different " +
+    "query datasets each get their own answer") { servingConf {
+    val dir = SparkTestSession.sf0001
+    for (kind <- kinds) {
+      val answers = Seq("orders", "customer", "orders", "part").map { d =>
+        val req = request(columnsOf, kind, d, 2.0, 1.0)
+        d -> (served(dir, req), combined(req, freshOf((kind, d))))
+      }
+      answers.foreach { case (d, (got, want)) =>
+        assert(got == want, s"$kind $d answered with another request's rows")
+      }
+      assert(answers.map(_._2._1).distinct.size == 3)
+    }
+  }}
+
+  test("prepared serving: 3 concurrent clients with mixed shapes equal the " +
+    "sequential answers") { servingConf {
+    val dir = SparkTestSession.sf0001
+    val reqs = for (kind <- kinds; d <- Seq("orders", "customer")) yield
+      request(columnsOf, kind, d, 1.0, 3.0)
+    val sequential = reqs.map(r => r -> served(dir, r)).toMap
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
+    try {
+      // each client walks the mix from its own offset, so shapes interleave
+      val futs = (0 until 3).map { c =>
+        pool.submit(new java.util.concurrent.Callable[Seq[String]] {
+          def call(): Seq[String] = reqs.indices.map(i => reqs((i + 2 * c) % reqs.size))
+            .filter(r => served(dir, r) != sequential(r))
+            .map(r => s"${r.queryId} M${r.m}")
+        })
+      }
+      val diverged = futs.flatMap(_.get(300, java.util.concurrent.TimeUnit.SECONDS))
+      assert(diverged.isEmpty, s"concurrent answers diverged: ${diverged.mkString(", ")}")
+    } finally pool.shutdownNow()
+  }}
+
+  /** The RDD behind a checkpointed artifact. */
+  private def rddOf(artifact: DataFrame): Int =
+    artifact.queryExecution.analyzed.collectFirst {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
+    }.get
+
+  /** How many RDDs are persisted once unreachable ones are collected. */
+  private def pinnedRdds(): Int = {
+    var (prev, cur, tries) = (-1, spark.sparkContext.getPersistentRDDs.size, 0)
+    while (cur != prev && tries < 10) {
+      System.gc()
+      Thread.sleep(200)
+      prev = cur
+      cur = spark.sparkContext.getPersistentRDDs.size
+      tries += 1
+    }
+    cur
+  }
+
+  test("prepared serving: refreshDataset, reset and a column-changing " +
+    "invalidateMetadata leave no template on a superseded artifact") { servingConf {
+    val lake = lakeCopy("prepared-artifacts")
+    val source = Tables.load(spark, SparkTestSession.sf0001, "customer")
+    val reqs = kinds.map(k => request(columnsOf, k, "customer", 1.0, 1.0)) :+
+      request(columnsOf, "ui", "orders", 1.0, 1.0)
+    def templateRdds: Set[Int] = graft.search.Prepared.templates.flatMap(_._3.collect {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
+    }).toSet
+    reqs.foreach(served(lake, _))
+    val steps = Seq[(String, () => Unit, () => DataFrame)](
+      ("refreshDataset", () => {
+        replaceTable(lake, "customer", source.withColumn("c_acctbal", col("c_acctbal") * 3))
+        graft.search.Sketches.refreshDataset(spark, lake, "customer")
+      }, () => graft.search.Sketches.cachedAll(spark, lake)),
+      ("reset", () => graft.search.Sketches.reset(spark, lake),
+        () => graft.search.Sketches.cachedAll(spark, lake)),
+      ("column-changing refresh", () => {
+        replaceTable(lake, "customer", source.withColumn("freshly_added", lit(1)))
+        graft.search.Sketches.refreshDataset(spark, lake, "customer")
+      }, () => CombinedScorer.metaTermFreqs(spark, lake)))
+    for ((step, change, artifact) <- steps) {
+      val old = rddOf(artifact())
+      change()
+      artifact() // the successor, built before the requests are counted
+      val pinned = pinnedRdds()
+      reqs.foreach(served(lake, _))
+      assert(!templateRdds.contains(old), s"after $step a template still reads the old artifact")
+      // at most: the superseded artifact's own pin is reclaimed whenever
+      // the collector gets to it, which can fall inside the requests
+      assert(pinnedRdds() <= pinned, s"the requests after $step left pinned RDDs behind")
+      // and the served answer is the one over the new version
+      if (step == "refreshDataset") {
+        val req = request(columnsOf, "ui", "customer", 1.0, 1.0)
+        assert(served(lake, req) == combined(req, freshParts(lake, req)),
+          s"after $step the answer is not the one over the new version")
+      }
+    }
+  }}
+
+  test("a warm request's driver planning work: at most 2,200 analyzer and " +
+    "optimizer rule runs") { servingConf {
+    val dir = SparkTestSession.sf0001
+    val reqs = kinds.map(k => k -> request(columnsOf, k, "orders", 2.0, 1.0))
+    reqs.foreach { case (_, r) => served(dir, r) }
+    import org.apache.spark.sql.catalyst.rules.RuleExecutor
+    val runs = reqs.map { case (kind, r) =>
+      kind -> (1 to 3).map { _ =>
+        val before = RuleExecutor.getCurrentMetrics().numRuns
+        served(dir, r)
+        RuleExecutor.getCurrentMetrics().numRuns - before
+      }.min
+    }
+    // a request that rebuilt its plans through the chained Column calls ran
+    // ~10.9k rule runs; the prepared plans run ~2k
+    assert(runs.forall(_._2 <= 2200), s"rule runs per warm request: ${runs.mkString(", ")}")
+  }}
+}
