@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   /** (wall sec, stage run ms, stage cpu ms, compiled classes, driver
     * planning ms by phase) of a line.
@@ -20,9 +19,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+    val spark = Sessions.builder("graft-bench", cpus.toInt)
       // Scan-split granularity, probe-tunable: the default 128MB
       // maxPartitionBytes reads a 30MB single-file table as 1-2 tasks,
       // which serializes every scan-heavy pipeline on a 32-core box once
@@ -35,8 +32,6 @@ object Bench {
       // groups, where the default split size is already right.
       .config("spark.sql.files.maxPartitionBytes",
         s"${sys.env.getOrElse("SPARK_GRAFT_SPLIT_MB", "128").toInt * 1024 * 1024}")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       // Single-JVM probe robustness: the brute audit lines at sf10 push
       // sorter allocation hard enough that a full-GC pause can exceed the
       // default 120s network timeout, and local-mode "executor lost" on a
@@ -320,8 +315,9 @@ object Bench {
     // set. Seed artifact builds are untimed (a service builds them once);
     // the timed section is gate start → batches drained → stop, so
     // docs/s = 1000 / value. Per-BATCH cost at this scale is a fixed
-    // ~4.8s (GateProf 1/2/4-batch sweep: linear in batch COUNT), sampled
-    // to shuffle-file creation across the five families' tiny exchanges —
+    // ~4.8s (1/2/4-batch sweep: linear in batch COUNT; PLANS.md round
+    // 14), sampled to shuffle-file creation across the five families'
+    // tiny exchanges —
     // hence the scoped ingest conf below and 500-doc batches, with real
     // crawl batch sizes amortizing the remainder. Own key namespace: the
     // standard artifacts are untouched.
@@ -373,10 +369,11 @@ object Bench {
         }
         // Ingest-session conf, scoped like the steady section's serving
         // conf: the gate's per-batch frames are batch-sized, so 32-way
-        // exchanges just multiply tiny shuffle files — GateProf's
-        // stack-sampled hotspot was FileOutputStream.open0 across hundreds
-        // of map tasks. AQE off + 4 static partitions: 4-batch drain
-        // 20.7 → 13.2s wall, 135 → 38.5s cpu (A/B, repeats within 1s).
+        // exchanges just multiply tiny shuffle files — the gate's
+        // stack-sampled hotspot (PLANS.md round 14) was
+        // FileOutputStream.open0 across hundreds of map tasks. AQE off +
+        // 4 static partitions: 4-batch drain 20.7 → 13.2s wall, 135 →
+        // 38.5s cpu (A/B, repeats within 1s).
         // Values are partitioning-independent (the grown ≡ fresh specs).
         spark.conf.set("spark.sql.adaptive.enabled", "false")
         spark.conf.set("spark.sql.shuffle.partitions", "4")
@@ -415,7 +412,7 @@ object Bench {
         // is far worse (64s summed stage time — 32 task launches per tiny
         // exchange); but AQE OFF with shuffle.partitions=2 is the dedicated
         // serving sweet spot — 10 jobs/request, ~0.8s single-request wall,
-        // ~half the cpu (ServeProf A/B, min-of-2 each). Results are
+        // ~half the cpu (A/B min-of-2 each, PLANS.md round 14). Results are
         // conf-independent (exact integer scoring; ServingPathSpec locks
         // the equality). A real deployment runs batch and serving on
         // SEPARATE sessions with exactly this split.

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Diagnostic: time queries individually and dump their formatted physical
   * plans. Usage: runMain graft.Explain <sfDir> [queryName ...]
   * With no names, times every query (alphabetical). Set GRAFT_EXPLAIN=1 to
@@ -12,12 +10,7 @@ object Explain {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val names = if (args.length > 1) args.tail.toSeq else SparkEntry.queries.keys.toSeq.sorted
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.builder("graft-explain", cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     StageLog.attachIfEnabled(spark.sparkContext)
     // warm the session so the first query isn't charged JVM/codegen startup

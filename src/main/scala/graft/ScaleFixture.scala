@@ -46,11 +46,7 @@ object ScaleFixture {
     val src = args.headOption.getOrElse("/root/testdata/sf0.1")
     val out = args.lift(1).getOrElse("target/testdata/sf1.0")
     val stride = args.lift(2).map(_.toLong).getOrElse(1000000L)
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = Sessions.builder("graft-scale-fixture", 32).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val docs = Tables.load(spark, src, "documents")

@@ -740,7 +740,7 @@ object SparkEntry {
 
     // d×d covariance of the embedding cloud (PCA/whitening input): the
     // single-pass flat-buffer Aggregator (10x the explode+hash-agg twin,
-    // CovProf A/B in PLANS.md; spec-locked bit-identical to it, so the
+    // A/B in PLANS.md round 10; spec-locked bit-identical to it, so the
     // oracle covers both); the eigen step stays driver-side (model-sized)
     "embed_cov" -> ((s, d) =>
       Pca.covarianceFast(T(s, d, "embeddings"))),

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.SparkContext
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 
-/** Diagnostic stage-timing listener, shared by the ProfileBuild/Explain
+/** Diagnostic stage-timing listener, shared by the Bench/Explain
   * mains and enabled with GRAFT_STAGES=1: one line per completed stage
   * (wall ms, task/record counts) — pinpoints hot or under-parallelized
   * stages without the Spark UI.

@@ -85,14 +85,13 @@ object Tables {
     // EAGERLY MATERIALIZES the upstream query stages, so a shuffled input
     // would execute those stages twice (ADVICE r17). Enforce the
     // near-scan contract instead of trusting the comment: reject plans
-    // with shuffle-introducing operators.
+    // with shuffle-introducing operators. A repartition counts only when
+    // it shuffles: `coalesce(n)` (Repartition with shuffle = false) adds
+    // no exchange, so the probe runs nothing twice.
+    import org.apache.spark.sql.catalyst.plans.logical._
     val offenders = df.queryExecution.optimizedPlan.collect {
-      case n @ (_: org.apache.spark.sql.catalyst.plans.logical.Join |
-                _: org.apache.spark.sql.catalyst.plans.logical.Aggregate |
-                _: org.apache.spark.sql.catalyst.plans.logical.Window |
-                _: org.apache.spark.sql.catalyst.plans.logical.Sort |
-                _: org.apache.spark.sql.catalyst.plans.logical
-                  .RepartitionOperation) => n.nodeName
+      case n @ (_: Join | _: Aggregate | _: Window | _: Sort) => n.nodeName
+      case n: RepartitionOperation if n.shuffle => n.nodeName
     }
     require(offenders.isEmpty,
       s"spreadForCpu expects a near-scan (shuffle-free) frame; got " +

@@ -89,7 +89,8 @@ object Clustering {
     kmeansAssignImpl(emb, k, iters, aggUpdate = true)
 
   /** `aggUpdate=false` runs the declarative posexplode centroid update —
-    * kept as the A/B twin (KmeansProf) and the oracle-shaped reference.
+    * kept as the A/B twin (PLANS.md round 10) and the oracle-shaped
+    * reference; ClusteringSpec compares the two.
     */
   private[graft] def kmeansAssignImpl(emb: DataFrame, k: Int, iters: Int,
                                       aggUpdate: Boolean): DataFrame = {

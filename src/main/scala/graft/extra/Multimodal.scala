@@ -591,7 +591,7 @@ object Multimodal {
     // unshuffled. The exchange carries two slim columns; values are
     // per-row deterministic, so the artifact is partitioning-identical.
     // The append path stays unspread: its batches are already
-    // exchange-bound (GateProf), not scan-bound.
+    // exchange-bound (OPTIMIZATION_r17.md §3), not scan-bound.
     val spread = graft.Tables.spreadForCpu(
       docs.select(col("doc_id"), col("text")))
     graft.Caching.memoLocked(featCache, featLocks, k)(

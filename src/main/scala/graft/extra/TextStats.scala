@@ -462,7 +462,7 @@ object TextStats {
     * under this cap the `rounds` sequential argmax actions collapse into
     * ONE collect + a driver loop that reproduces the distributed rounds
     * bit for bit (see [[trainedMergesRun]]). ~1M spaced words ≈ tens of MB
-    * — the multiFieldServed driver-copy budget class. A 100 TB corpus's
+    * — the multiFieldServedRows driver-copy budget class. A 100 TB corpus's
     * vocabulary blows past it and trains distributed, where the driver
     * only ever sees `rounds` argmax rows.
     */

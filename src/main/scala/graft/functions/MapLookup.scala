@@ -16,7 +16,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * array (parallel key/value arrays, no index), so a corpus-stat lookup
   * compiled as a map literal costs O(entries) PER ROW — quadratic in the
   * catalogue for the served path (measured 16.6× slower than the
-  * broadcast-join stats at 300k entries — ServedGateProbe, PLANS r16).
+  * broadcast-join stats at 300k entries — PLANS.md round 16).
   * This expression builds a `java.util.HashMap[UTF8String, Any]` ONCE
   * (driver-side; it rides to executors in the codegen references array /
   * the serialized expression, the same size class as the literal it

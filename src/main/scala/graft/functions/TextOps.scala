@@ -79,7 +79,7 @@ object TextEntropy {
   * concurrency — a pure-JVM control (no Spark) measured the SAME regex at
   * 24 µs/row on 1 thread and 847 µs/row/thread on 32 threads (flat
   * aggregate throughput), while table-lookup byte loops like this one
-  * scale perfectly (QProf; PLANS.md round-14). On real cluster cores the
+  * scale perfectly (PLANS.md round 14). On real cluster cores the
   * regex is merely ~10× slower than this loop, not ~30× per added thread.
   *
   * ASCII inputs (every byte < 0x80) take the exact byte loop: A–Z folded,
@@ -142,7 +142,7 @@ object TextNormalize {
   * filter did. Property-locked against the Column composition in
   * TextStatsSpec. Same host-measured motivation as [[TextNormalize]]:
   * regex is indirect-branch-bound and serializes under thread concurrency
-  * on this box; a byte loop scales perfectly (QProf; PLANS.md round-14).
+  * on this box; a byte loop scales perfectly (PLANS.md round 14).
   */
 object TextTokens {
   def tokensOf(u: UTF8String): org.apache.spark.sql.catalyst.util.ArrayData = {

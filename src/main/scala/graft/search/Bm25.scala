@@ -145,7 +145,7 @@ object Bm25 {
     * serving path. Statistics lookups become literal MAP expressions
     * compiled into the scan instead of broadcast joins (on this runtime a
     * broadcast build is a Spark JOB even over a LocalRelation —
-    * tools/BcProbe — and the warm request path is driver-latency-bound, so
+    * PLANS.md round 15 — and the warm request path is driver-latency-bound, so
     * every removed broadcast is one fewer DAGScheduler round-trip), and the
     * per-(doc, field) aggregate is the ONE job this function runs. `qtf`
     * need not be filtered to the query terms: `dfreq` holds exactly those
@@ -164,46 +164,25 @@ object Bm25 {
     * sorts FIRST exactly like Spark's desc NaN-greatest ordering; Scala's
     * tuple sort on the negated double would have put it last).
     * ServingPathSpec locks the equality against [[multiFieldWithStats]].
-    * Returns a LocalRelation over [[multiFieldServedRows]].
+    * Returns the ranked rows as driver values: (doc_id, <field>_score...,
+    * score), best first. The per-(doc, field) aggregate is a prepared plan
+    * over `qtf` ([[Prepared]]): one template per TF artifact, the four stat
+    * tables bound per request. A document with no `dl` entry drops, so the
+    * serving path passes the TF artifact itself and excludes the query
+    * document by leaving it out of `dl`.
     *
     * SCALE ENVELOPE: each stat lookup is an O(1)
     * [[graft.functions.LiteralMapLookup]] hash probe (NOT `element_at` on
     * a map Literal — Spark's GetMapValue over a literal ArrayBasedMapData
     * is a per-row LINEAR key scan, and `dl` is catalogue-sized: the
     * linear form measured 16.6× slower than broadcast joins at 300k
-    * entries, the hash form 1.08× — ServedGateProbe, PLANS r16). What
+    * entries, the hash form 1.08× — PLANS.md round 16). What
     * remains per request is building and shipping the hash tables with
     * the plan, linear in dl entries — so callers still gate this path on
     * DL MAP ENTRIES (`spark.graft.metaStats.maxServedDlEntries`,
     * [[CombinedScorer.metaStatsLocal]]) — a much tighter bound than the
     * driver-copy budget — and fall back to the DF-broadcast stats
     * ([[multiFieldWithStats]], hash-join lookups) in between.
-    */
-  def multiFieldServed(qtf: DataFrame,
-                       dl: Seq[(String, String, Long)],
-                       corpus: Seq[(String, Long, Double)],
-                       dfreq: Seq[(String, String, Long)],
-                       fields: Seq[(String, Double, Seq[String])],
-                       topM: Int = 100, k1: Double = 1.2,
-                       b: Double = 0.75): DataFrame = {
-    val schema = org.apache.spark.sql.types.StructType(
-      org.apache.spark.sql.types.StructField("doc_id",
-        org.apache.spark.sql.types.StringType) +:
-        fields.map { case (f, _, _) =>
-          org.apache.spark.sql.types.StructField(s"${f}_score",
-            org.apache.spark.sql.types.DoubleType) } :+
-        org.apache.spark.sql.types.StructField("score",
-          org.apache.spark.sql.types.DoubleType))
-    qtf.sparkSession.createDataFrame(java.util.Arrays.asList(
-      multiFieldServedRows(qtf, dl, corpus, dfreq, fields, topM, k1, b): _*), schema)
-  }
-
-  /** [[multiFieldServed]]'s ranked rows as driver values:
-    * (doc_id, <field>_score..., score), best first. The per-(doc, field)
-    * aggregate is a prepared plan over `qtf` ([[Prepared]]): one template
-    * per TF artifact, the four stat tables bound per request. A document
-    * with no `dl` entry drops, so the serving path passes the TF artifact
-    * itself and excludes the query document by leaving it out of `dl`.
     */
   def multiFieldServedRows(qtf: DataFrame,
                            dl: Seq[(String, String, Long)],

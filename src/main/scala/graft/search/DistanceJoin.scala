@@ -143,7 +143,7 @@ object DistanceJoin {
     * columns that arrive as DRIVER rows: the query rows are bound as an
     * exploded LITERAL — col_type → array<struct<q_col, q_vec>>, the
     * `query` slot ([[queryMap]]) — because on this runtime a broadcast
-    * build is a Spark JOB even over a LocalRelation (tools/BcProbe), and
+    * build is a Spark JOB even over a LocalRelation (PLANS.md round 15), and
     * the request path is driver-latency-bound. A map literal is held by
     * reference in generated code, so the code is the same for every query
     * dataset. explode(element_at(map, col_type)) yields no rows for a type
@@ -394,7 +394,7 @@ object DistanceJoin {
     * by the ranked lists' per-q_col kth, `kthM` (q_col → kth). kth is
     * request-bounded and driver-resident, so it is served as a map literal
     * instead of a broadcast join (a broadcast build is a Spark JOB even
-    * over a LocalRelation on this runtime — tools/BcProbe). The isNotNull
+    * over a LocalRelation on this runtime — PLANS.md round 15). The isNotNull
     * filter replicates the former INNER join: edges whose q_col never made
     * a ranked list drop.
     */

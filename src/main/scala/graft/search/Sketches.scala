@@ -35,7 +35,7 @@ object Sketches {
     * near-unique price column of a 100 TB lineitem would otherwise
     * serialize into one sort). Both paths are deterministic and
     * bucket-count-invariant (ProfilerSpec) — measured at sf0.1 the
-    * single-window plan wins by ~2.5s (7.4s vs 4.9s warm, PhaseProf),
+    * single-window plan wins by ~2.5s (7.4s vs 4.9s warm, PLANS.md round 9),
     * which is exactly why the gate exists.
     */
   def numericTemporal(spark: SparkSession, dir: String,

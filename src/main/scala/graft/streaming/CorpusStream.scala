@@ -397,7 +397,7 @@ object CorpusStream {
         // each owns its artifact under its own per-key lock, consumes only
         // the pinned `admitted` frame, and is doc-idempotent (TF, pairs,
         // features) or batch-ledgered (gram). Their per-batch cost is
-        // dominated by fixed action latency over tiny frames (GateProf),
+        // dominated by fixed action latency over tiny frames (OPTIMIZATION_r17.md §3),
         // so they run as CONCURRENT jobs from a small pool (guide §2.6 —
         // the scheduler back-fills one family's tail with the next's
         // tasks) instead of ~5 sequential action round-trips. The replay

@@ -7,13 +7,7 @@ import org.apache.spark.sql.SparkSession
   */
 object SparkTestSession {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = Sessions.builder("graft-tests", 8).getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }
