@@ -269,12 +269,12 @@ object Bench {
           .createTempDirectory("graft-snap").toString
         val saved =
           search.Sketches.save(spark, sfDir, s"$snap/sketch") &&
-          extra.Dedup.saveIndex(spark, idxKey, s"$snap/idx") &&
-          extra.Dedup.savePairs(spark, pairsKey, s"$snap/pairs") &&
-          extra.Dedup.savePairs(spark, pairsLshKey, s"$snap/pairs_lsh") &&
+          extra.Dedup.indexStore.save(spark, idxKey, s"$snap/idx") &&
+          extra.Dedup.pairStore.save(spark, pairsKey, s"$snap/pairs") &&
+          extra.Dedup.pairStore.save(spark, pairsLshKey, s"$snap/pairs_lsh") &&
           tfKeys.zipWithIndex.forall { case (k, i) =>
-            ingest.TermStats.saveTermFreqs(spark, k, s"$snap/tf$i") } &&
-          extra.Multimodal.saveFeatures(spark, mediaKey, s"$snap/media")
+            ingest.TermStats.tfStore.save(spark, k, s"$snap/tf$i") } &&
+          extra.Multimodal.featureStore.save(spark, mediaKey, s"$snap/media")
         if (!saved) {
           System.err.println(
             "[bench] reload_artifacts skipped: artifacts not warm")
@@ -287,12 +287,12 @@ object Bench {
             ingest.TermStats.resetTermFreqs(spark, s"$sfDir#tf:documents")
             extra.Multimodal.resetFeatures(spark, mediaKey)
             search.Sketches.load(spark, s"$snap/sketch", sfDir)
-            extra.Dedup.loadIndex(spark, s"$snap/idx", idxKey)
-            extra.Dedup.loadPairs(spark, s"$snap/pairs", pairsKey)
-            extra.Dedup.loadPairs(spark, s"$snap/pairs_lsh", pairsLshKey)
+            extra.Dedup.indexStore.load(spark, s"$snap/idx", idxKey)
+            extra.Dedup.pairStore.load(spark, s"$snap/pairs", pairsKey)
+            extra.Dedup.pairStore.load(spark, s"$snap/pairs_lsh", pairsLshKey)
             tfKeys.zipWithIndex.foreach { case (k, i) =>
-              ingest.TermStats.loadTermFreqs(spark, s"$snap/tf$i", k) }
-            extra.Multimodal.loadFeatures(spark, s"$snap/media", mediaKey)
+              ingest.TermStats.tfStore.load(spark, s"$snap/tf$i", k) }
+            extra.Multimodal.featureStore.load(spark, s"$snap/media", mediaKey)
           }
           val runs =
             try (1 to runsPerQuery).map { _ =>

@@ -130,17 +130,19 @@ object Caching {
     * lock-free read path.
     *
     * Lock entries are SESSION-BOUNDED by design (ADVICE r13): neither this
-    * helper nor the reset paths in Dedup/TermStats/TextStats/Classifier/
-    * CombinedScorer ever remove a key's lock object. Pruning on reset
+    * helper nor the reset paths ever remove a key's lock object — not
+    * [[Artifacts.Store]]'s `drop`/`reset` (the admission index, gram,
+    * pair, TF and media-feature families) nor the TextStats, Classifier
+    * and CombinedScorer memos. Pruning on reset
     * would re-open the duplicate-build race this lock exists to close: a
     * thread that fetched the old lock object before the prune and a thread
     * that created a fresh one after it would build the same key
     * CONCURRENTLY under different monitors, orphaning one build's
     * checkpoint files. The cost of keeping them is one bare Object per
     * key ever used in the session (keys are (appId, cacheKey) strings —
-    * tens of bytes each), which is dwarfed by the artifacts themselves;
-    * the same accept-as-session-bounded call covers Dedup's
-    * appliedGramBatches ledger (#applied-batches tuples).
+    * tens of bytes each), which is dwarfed by the artifacts themselves.
+    * The gram family's exactly-once ledger is not kept this way: it rides
+    * in its store entry and goes with it on reset.
     */
   def memoLocked[K, V](cache: scala.collection.concurrent.TrieMap[K, V],
                        locks: scala.collection.concurrent.TrieMap[K, Object],

@@ -32,7 +32,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * versioned snapshot exists.
   *
   * Concurrency contract (unchanged from the bare layout): save and load
-  * of the SAME root are serialized by the owning artifact's per-key lock;
+  * of the SAME root are serialized by the per-key lock of the owning
+  * [[Artifacts.Store]];
   * this helper adds crash-safety, not multi-writer coordination — two
   * UNCOORDINATED writers to one root could still interleave prunes with
   * reads. At lake scale the same protocol is what table formats implement

@@ -3,6 +3,7 @@ package graft.extra
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Caching.pinArtifact
 
 /** Document deduplication for large-scale training-data pipelines: exact,
   * n-gram/token Jaccard, MinHash-LSH, and SimHash near-dup. (Not part of the
@@ -340,7 +341,15 @@ object Dedup {
       array_distinct(graft.functions.TextTokens.lowerSpaceTokens(col(textCol)))
         .as("toks"))
 
-  /** Session cache of the admission gate's corpus index artifacts — the
+  /** The pair of frames a probe joins against: the lazy unions of the
+    * admission index's checkpointed (signatures, token arrays) segments.
+    */
+  private def served(segs: Vector[(DataFrame, DataFrame)])
+  : (DataFrame, DataFrame) =
+    (graft.Artifacts.unionAll(segs.map(_._1)),
+      graft.Artifacts.unionAll(segs.map(_._2)))
+
+  /** Session store of the admission gate's corpus index artifacts — the
     * band-signature table + token-array table of [[bandSignatures]] /
     * [[tokenArraysOf]], built ONCE per (session, key) and pinned hot, exactly
     * like the sketch index ([[graft.search.Sketches.train]]) and the NB
@@ -350,29 +359,27 @@ object Dedup {
     * its own bench line and `dedup_incremental` measures the steady-state
     * per-batch probe. In production the two frames are parquet/Delta tables
     * bucketed on (band, band_sig) and doc_id, appended per admitted batch.
+    * Snapshot parts: `sigs` and `toks`, compacted on write.
     */
-  private val indexCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String), Vector[(DataFrame, DataFrame)]]
-
-  /** The pair of frames a probe joins against for a memoized key: the LAZY
-    * union of the checkpointed segments. Each leaf is a lineage-free
-    * LogicalRDD, so analysis cost is O(#segments) — bounded by
-    * [[MaxSegments]] — never O(build subtree).
-    */
-  private def served(segs: Vector[(DataFrame, DataFrame)])
-  : (DataFrame, DataFrame) =
-    (segs.map(_._1).reduce(_ unionByName _),
-      segs.map(_._2).reduce(_ unionByName _))
+  val indexStore = new graft.Artifacts.Store[(DataFrame, DataFrame), Unit](
+    "admission index",
+    pins = { case (s, t) => Seq(s, t) },
+    compact = segs => {
+      val (s, t) = served(segs)
+      (pinArtifact(s), pinArtifact(t))
+    },
+    parts = (_, e) => {
+      val (s, t) = served(e.segs)
+      Seq("sigs" -> s, "toks" -> t)
+    },
+    read = (spark, base) => ((pinArtifact(spark.read.parquet(s"$base/sigs")),
+      pinArtifact(spark.read.parquet(s"$base/toks"))), ()))
 
   /** Build (or fetch the memoized) corpus artifacts for `cacheKey`. */
   def trainedIndex(corpus: DataFrame, idCol: String, textCol: String,
                    cacheKey: String, numPerms: Int = 32,
-                   rowsPerBand: Int = 4): (DataFrame, DataFrame) = {
-    val k = (corpus.sparkSession.sparkContext.applicationId, cacheKey)
-    // first build under the per-key lock (graft.Caching.memoLocked's
-    // rationale): a bare getOrElseUpdate runs concurrent first builds
-    // twice and orphans the losing builder's checkpointed artifacts
-    served(graft.Caching.memoLocked(indexCache, indexLocks, k) {
+                   rowsPerBand: Int = 4): (DataFrame, DataFrame) =
+    served(indexStore.memo(corpus.sparkSession, cacheKey) {
       // Checkpoint (pinArtifact), not persist: the artifacts embed in every
       // probe plan, and a checkpoint's LogicalRDD keeps the per-batch
       // ANALYSIS cost flat — with full lineage, each probe re-canonicalizes
@@ -380,38 +387,11 @@ object Dedup {
       // driver time per batch on a 300-doc fixture). Production equivalent:
       // the artifacts are parquet/Delta tables, whose scan plans are
       // equally lineage-free.
-      val sigs = graft.Caching.pinArtifact(
+      val sigs = pinArtifact(
         bandSignatures(corpus, idCol, textCol, numPerms, rowsPerBand))
-      val toks = graft.Caching.pinArtifact(
-        tokenArraysOf(corpus, idCol, textCol))
-      Vector((sigs, toks))
-    })
-  }
-
-  /** Segment-count cap for the admission index memo: an append past this
-    * folds all segments into one (the only O(corpus) step, paid once per
-    * MaxSegments appends — amortized O(corpus/MaxSegments) per batch, and
-    * it keeps every probe plan's union width bounded).
-    */
-  val MaxSegments = 32
-
-  /** Number of checkpointed segments currently memoized under `cacheKey` —
-    * observability for specs and services (0 when nothing is memoized).
-    */
-  def segmentCount(spark: org.apache.spark.sql.SparkSession,
-                   cacheKey: String): Int =
-    indexCache.get((spark.sparkContext.applicationId, cacheKey))
-      .map(_.size).getOrElse(0)
-
-  /** The raw segment list for `cacheKey` — spec observability (DedupSpec
-    * proves an append leaves the prior segments' frames untouched by
-    * reference identity, i.e. the corpus blocks were not re-materialized).
-    */
-  private[graft] def segmentsOf(spark: org.apache.spark.sql.SparkSession,
-                                cacheKey: String)
-  : Vector[(DataFrame, DataFrame)] =
-    indexCache.getOrElse(
-      (spark.sparkContext.applicationId, cacheKey), Vector.empty)
+      val toks = pinArtifact(tokenArraysOf(corpus, idCol, textCol))
+      ((sigs, toks), ())
+    }.segs)
 
   /** Incremental index MAINTENANCE: fold an admitted batch's signature and
     * token-array rows into the memoized artifacts for `cacheKey` — the
@@ -420,79 +400,71 @@ object Dedup {
     * full re-sign).
     *
     * Cost is genuinely O(admitted batch): ONLY the batch's own projection
-    * rows are materialized (checkpointed as a new SEGMENT); the memo is
-    * held as a lazy union of per-batch checkpointed segments, so the
-    * existing corpus-sized blocks are never re-read or re-written on
-    * append. Once the segment list exceeds `maxSegments` the append
-    * compacts all segments into one — amortized O(corpus/maxSegments) per
-    * batch and a bounded probe-plan width. The segment list is swapped
-    * atomically so a concurrent probe never sees a half-built index, and
-    * appends for the same key serialize on a per-key lock
-    * ([[graft.search.Sketches.refreshDataset]]'s read-modify-swap rule).
-    * No-op (returns false) when nothing is memoized under the key — there
-    * is no index to maintain.
+    * rows are materialized (checkpointed as a new SEGMENT); the existing
+    * corpus-sized blocks are never re-read or re-written on append. The
+    * segment discipline (compaction past `maxSegments`, atomic swap,
+    * per-key serialization) is [[graft.Artifacts.Store.append]]'s. No-op
+    * (returns false) when nothing is memoized under the key — there is no
+    * index to maintain.
     */
   def appendAdmitted(admitted: DataFrame, idCol: String, textCol: String,
                      cacheKey: String, numPerms: Int = 32,
                      rowsPerBand: Int = 4,
-                     maxSegments: Int = MaxSegments): Boolean = {
-    val k = (admitted.sparkSession.sparkContext.applicationId, cacheKey)
-    val lock = indexLocks.getOrElseUpdate(k, new Object)
-    lock.synchronized {
-      indexCache.get(k) match {
-        case None => false
-        // EMPTY-ADMITTED guard (ADVICE r13): a replayed micro-batch whose
-        // docs all self-matched the grown index (keep=0 across the board)
-        // hands an empty admitted set here — appending its empty segment
-        // per replay would grow the segment list and force needless
-        // compactions. A no-op append is still `true`: the index exists
-        // and is current for this batch.
-        case Some(_) if admitted.isEmpty => true
-        case Some(segs0) =>
-          // O(batch): checkpoint ONLY the increment, never the union. The
-          // two segment pins are independent projections of the (pinned,
-          // already-materialized) admitted frame — overlap them (guide
-          // §2.6) so the admission-index append pays one checkpoint
-          // latency, not two back-to-back driver round-trips per batch.
-          val Seq(toksPin, sigPin) = graft.Caching.pinAll(
-            () => tokenArraysOf(admitted, idCol, textCol),
-            () => bandSignatures(admitted, idCol, textCol, numPerms, rowsPerBand))
-          val segs = segs0 :+ ((sigPin, toksPin))
-          val kept =
-            if (segs.size <= maxSegments) segs
-            else {
-              val (cs, ct) = served(segs)
-              // the compacted segment is MATERIALIZED here (checkpoint is
-              // eager), so the old segments' reliable-checkpoint files can
-              // be reclaimed after the swap below
-              Vector((graft.Caching.pinArtifact(cs),
-                graft.Caching.pinArtifact(ct)))
-            }
-          indexCache.put(k, kept)
-          if (kept ne segs) segs.foreach { case (s, t) =>
-            graft.Caching.dropArtifact(s); graft.Caching.dropArtifact(t)
-          }
-          true
+                     maxSegments: Int = graft.Artifacts.MaxSegments): Boolean =
+    indexStore.append(admitted.sparkSession, cacheKey, maxSegments) { _ =>
+      // EMPTY-ADMITTED guard (ADVICE r13): a replayed micro-batch whose
+      // docs all self-matched the grown index (keep=0 across the board)
+      // hands an empty admitted set here — appending its empty segment
+      // per replay would grow the segment list and force needless
+      // compactions. A no-op append is still `true`: the index exists
+      // and is current for this batch.
+      if (admitted.isEmpty) (None, ())
+      else {
+        // O(batch): checkpoint ONLY the increment, never the union. The
+        // two segment pins are independent projections of the (pinned,
+        // already-materialized) admitted frame — overlap them (guide
+        // §2.6) so the admission-index append pays one checkpoint
+        // latency, not two back-to-back driver round-trips per batch.
+        val Seq(toksPin, sigPin) = graft.Caching.pinAll(
+          () => tokenArraysOf(admitted, idCol, textCol),
+          () => bandSignatures(admitted, idCol, textCol, numPerms, rowsPerBand))
+        (Some((sigPin, toksPin)), ())
       }
     }
-  }
 
-  private val indexLocks =
-    scala.collection.concurrent.TrieMap.empty[(String, String), Object]
+  /** Per-gh sum of gram-count segments: exact, since counts are additive
+    * over disjoint doc sets. The gram family's compaction and its snapshot.
+    */
+  private def gramSum(segs: Vector[DataFrame]): DataFrame =
+    graft.Artifacts.unionAll(segs).groupBy("gh")
+      .agg(sum("n_docs").as("n_docs"), sum("n_occ").as("n_occ"))
 
-  private val gramCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String), Vector[DataFrame]]
-
-  // (appId, cacheKey, writerId, batchId) already folded into a gram
-  // artifact — the exactly-once ledger for appendGramAdmitted's
-  // at-least-once callers. Batch ids are only unique WITHIN one streaming
-  // query's checkpoint, so the ledger scopes them by writer: without it,
-  // two ingest shards (or one stream restarted from a fresh checkpoint
-  // location, whose batch ids restart at 0) would collide on batch ids and
-  // silently drop each other's batches as false replays.
-  // Footprint is #applied-batches, driver-side.
-  private val appliedGramBatches = java.util.Collections.synchronizedSet(
-    new java.util.HashSet[(String, String, String, Long)]())
+  /** Session store of [[gramStats]] artifacts. The side state is the
+    * exactly-once LEDGER of (writerId, batchId) already folded in, for
+    * [[appendGramAdmitted]]'s at-least-once callers. Batch ids are only
+    * unique WITHIN one streaming query's checkpoint, so the ledger scopes
+    * them by writer: without it, two ingest shards (or one stream restarted
+    * from a fresh checkpoint location, whose batch ids restart at 0) would
+    * collide on batch ids and silently drop each other's batches as false
+    * replays. Counts and ledger are one entry and one snapshot (parts
+    * `grams` + `ledger`): restoring counts without their ledger re-arms
+    * replays as double-folds, so the reader reads the ledger before it pins
+    * the counts, and a reset drops both.
+    */
+  val gramStore = new graft.Artifacts.Store[DataFrame, Set[(String, Long)]](
+    "gram artifact",
+    pins = Seq(_),
+    compact = segs => pinArtifact(gramSum(segs)),
+    parts = (spark, e) => {
+      import spark.implicits._
+      Seq("grams" -> gramSum(e.segs),
+        "ledger" -> e.side.toSeq.toDF("writer", "batch_id"))
+    },
+    read = (spark, base) => {
+      val ledger = spark.read.parquet(s"$base/ledger").collect()
+        .map(r => (r.getString(0), r.getLong(1))).toSet
+      (pinArtifact(spark.read.parquet(s"$base/grams")), ledger)
+    })
 
   /** Build (or fetch) the memoized [[gramStats]] artifact for `cacheKey` —
     * the [[trainedIndex]] treatment for the ExactSubstr stage: built once,
@@ -502,22 +474,15 @@ object Dedup {
     * parquet/Delta table bucketed on gh.
     */
   def trainedGramIndex(corpus: DataFrame, idCol: String, textCol: String,
-                       cacheKey: String, minLen: Int = 12): DataFrame = {
-    val k = (corpus.sparkSession.sparkContext.applicationId, cacheKey)
-    // first build under the per-key lock (graft.Caching.memoLocked): a bare
-    // getOrElseUpdate runs concurrent first builds twice, orphaning the
-    // losing builder's checkpoint files
-    graft.Caching.memoLocked(gramCache, indexLocks, k)(Vector(
-      graft.Caching.pinArtifact(gramStats(corpus, idCol, textCol, minLen))))
-      .reduce(_ unionByName _)
-  }
+                       cacheKey: String, minLen: Int = 12): DataFrame =
+    graft.Artifacts.unionAll(gramStore.memo(corpus.sparkSession, cacheKey)(
+      (pinArtifact(gramStats(corpus, idCol, textCol, minLen)), Set.empty)).segs)
 
   /** Fold an admitted batch's gram counts into the memoized artifact —
     * O(admitted batch) per append, same segment discipline as
     * [[appendAdmitted]]: only the batch's own [[gramStats]] rows are
     * checkpointed; past `maxSegments` the segments are compacted by a
-    * per-gh SUM (exact: counts are additive over disjoint doc sets). No-op
-    * (false) when nothing is memoized under the key.
+    * per-gh SUM. No-op (false) when nothing is memoized under the key.
     *
     * REPLAY contract: gram counts are ADDITIVE with no document column, so
     * unlike the TF/pair appends this one cannot drop already-present docs —
@@ -534,50 +499,16 @@ object Dedup {
     */
   def appendGramAdmitted(admitted: DataFrame, idCol: String, textCol: String,
                          cacheKey: String, minLen: Int = 12,
-                         maxSegments: Int = MaxSegments,
+                         maxSegments: Int = graft.Artifacts.MaxSegments,
                          batchId: Option[Long] = None,
-                         writerId: String = ""): Boolean = {
-    val k = (admitted.sparkSession.sparkContext.applicationId, cacheKey)
-    val lock = indexLocks.getOrElseUpdate(k, new Object)
-    lock.synchronized {
-      gramCache.get(k) match {
-        case None => false
-        case Some(_) if batchId.exists(id =>
-          appliedGramBatches.contains((k._1, k._2, writerId, id))) => true
-        case Some(segs0) =>
-          // ONE aggregation pass: pin the batch segment first, check
-          // emptiness on the PINNED artifact (a cache-backed count, not a
-          // second run of the groupBy), and drop it again if empty —
-          // the former pattern-guard form ran the full gram aggregation
-          // twice per non-empty batch, both under this lock.
-          val seg = graft.Caching.pinArtifact(
-            gramStats(admitted, idCol, textCol, minLen))
-          if (seg.isEmpty) {
-            // EMPTY-BATCH guard (ADVICE r13): a micro-batch whose admitted
-            // set nets no gram rows (all docs rejected, or a replay whose
-            // verdicts all came back keep=0) must not append an empty
-            // segment — unguarded, every such batch grows the segment list
-            // and triggers needless full per-gh compactions. The batch id
-            // is still recorded so the replay contract holds (a re-retry
-            // of the same batch stays a no-op even if its admitted set
-            // were to differ).
-            graft.Caching.dropArtifact(seg)
-          } else {
-            val segs = segs0 :+ seg
-            val kept =
-              if (segs.size <= maxSegments) segs
-              else Vector(graft.Caching.pinArtifact(
-                segs.reduce(_ unionByName _).groupBy("gh")
-                  .agg(sum("n_docs").as("n_docs"), sum("n_occ").as("n_occ"))))
-            gramCache.put(k, kept)
-            if (kept ne segs) segs.foreach(graft.Caching.dropArtifact)
-          }
-          batchId.foreach(id =>
-            appliedGramBatches.add((k._1, k._2, writerId, id)))
-          true
-      }
+                         writerId: String = ""): Boolean =
+    gramStore.append(admitted.sparkSession, cacheKey, maxSegments) { e =>
+      if (batchId.exists(id => e.side((writerId, id)))) (None, e.side)
+      // a batch netting no gram rows appends no segment (ADVICE r13), but
+      // its id is still recorded so the replay contract holds
+      else (graft.Artifacts.pinNonEmpty(gramStats(admitted, idCol, textCol,
+        minLen)), e.side ++ batchId.map(id => (writerId, id)))
     }
-  }
 
   /** One segment of the maintained pair artifact: the segment's own
     * verified pairs, its documents' unit-token arrays (the verify side of
@@ -586,18 +517,39 @@ object Dedup {
     * equi-join), band signatures (doc_id, band, band_sig) for the LSH
     * variant (what a batch's signatures bucket-join). The probe is a
     * projection of `toks` ([[probeOf]]); a segment restored by
-    * [[loadPairs]] has none until the first append, which knows the
+    * [[pairStore]]'s load has none until the first append, which knows the
     * variant, derives and pins it. In production each is a parquet/Delta
     * table bucketed on its probe key.
     */
-  private[graft] final case class PairSegment(pairs: DataFrame,
-                                              toks: DataFrame,
-                                              probe: Option[DataFrame]) {
+  final case class PairSegment(pairs: DataFrame, toks: DataFrame,
+                               probe: Option[DataFrame]) {
     def pins: Seq[DataFrame] = Seq(pairs, toks) ++ probe
   }
 
-  private val pairsCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String), Vector[PairSegment]]
+  /** Session store of near-dup pair artifacts ([[trainedPairs]]). Snapshot
+    * parts: the pairs and the unit arrays an append verifies against, each
+    * compacted on write (unions are disjoint-exact). The probe table is NOT
+    * written: it is a projection of the arrays, derived again by the first
+    * append after a load — so a snapshot that still holds a stored `probe`
+    * part (the former three-part layout) loads the same way. Keys encode
+    * variant and threshold, as with [[trainedPairs]]/[[appendPairs]].
+    */
+  val pairStore = new graft.Artifacts.Store[PairSegment, Unit](
+    "pair artifact",
+    pins = _.pins,
+    compact = segs => PairSegment(
+      pinArtifact(graft.Artifacts.unionAll(segs.map(_.pairs))),
+      pinArtifact(graft.Artifacts.unionAll(segs.map(_.toks))),
+      Some(pinArtifact(graft.Artifacts.unionAll(segs.flatMap(_.probe))))),
+    // pairs and arrays, ONE atomic snapshot version: mixed part versions
+    // would verify candidates against one corpus state while serving pairs
+    // of another
+    parts = (_, e) => Seq(
+      "pairs" -> graft.Artifacts.unionAll(e.segs.map(_.pairs)),
+      "toks" -> graft.Artifacts.unionAll(e.segs.map(_.toks))),
+    read = (spark, base) => (PairSegment(
+      pinArtifact(spark.read.parquet(s"$base/pairs")),
+      pinArtifact(spark.read.parquet(s"$base/toks")), None), ()))
 
   /** Full posting list of a unit-array table — the exact variant's probe
     * artifact: (term, doc_id, sz), one row per distinct (doc, term), with
@@ -643,36 +595,20 @@ object Dedup {
     */
   def trainedPairs(df: DataFrame, idCol: String, textCol: String,
                    threshold: Double, cacheKey: String,
-                   lsh: Boolean = false): DataFrame = {
-    val k = (df.sparkSession.sparkContext.applicationId, cacheKey)
-    // the build runs under the SAME per-key lock as appendPairs/resetPairs:
-    // TrieMap.getOrElseUpdate alone evaluates the builder in every
-    // concurrent first caller — each eagerly checkpointing three
-    // corpus-scale artifacts, with every losing builder's checkpoint files
-    // orphaned (resetPairs can never see them). Warm fetches take the
-    // LOCK-FREE fast path first (the Caching.memoLocked shape): appendPairs
-    // holds the key's lock across several Spark jobs, and a consumer
-    // blocking on an artifact READ for the whole append would serialize
-    // serving behind maintenance — the segment Vector is swapped
-    // atomically, so an unlocked warm read only ever sees a complete
-    // pre- or post-append snapshot (ADVICE r13).
-    pairsCache.get(k).getOrElse {
-    val lock = indexLocks.getOrElseUpdate(k, new Object)
-    lock.synchronized { pairsCache.getOrElseUpdate(k, {
+                   lsh: Boolean = false): DataFrame =
+    graft.Artifacts.unionAll(pairStore.memo(df.sparkSession, cacheKey) {
       // the maintenance artifacts (unit arrays + probe table) pin WITH the
       // pair table: an append must verify against the corpus's token sets
       // and equi-join its probe keys without re-tokenizing the corpus —
       // the same reason the admission index stores both frames. Pairs and
       // probe derive from the pinned arrays, so the corpus tokenizes
       // exactly once per build.
-      val arrs = graft.Caching.pinArtifact(
-        tokenArraysOf(df, idCol, textCol))
-      val probe = graft.Caching.pinArtifact(probeOf(arrs, lsh))
-      Vector(PairSegment(graft.Caching.pinArtifact(
+      val arrs = pinArtifact(tokenArraysOf(df, idCol, textCol))
+      val probe = pinArtifact(probeOf(arrs, lsh))
+      (PairSegment(pinArtifact(
         if (lsh) lshVerifiedPairs(probe, arrs, threshold)
-        else jaccardPairsFromArrs(arrs, threshold)), arrs, Some(probe)))
-    })}}.map(_.pairs).reduce(_ unionByName _)
-  }
+        else jaccardPairsFromArrs(arrs, threshold)), arrs, Some(probe)), ())
+    }.segs.map(_.pairs))
 
   /** Fold an admitted batch's near-dup pairs into the memoized pair
     * artifact under `cacheKey` — the append step that keeps the FOUR pair
@@ -710,342 +646,92 @@ object Dedup {
     *    exact either way, so the grown pair set equals a fresh
     *    [[jaccardPairs]] over corpus ∪ batch (spec-locked).
     *
-    * Same segment discipline as [[appendAdmitted]]: only the batch's own
-    * rows are checkpointed; past `maxSegments` all segments compact into
-    * one (pairs/toks/postings unions are disjoint-exact; signatures
-    * likewise). No-op (false) when nothing is memoized under the key.
-    * IDEMPOTENT per document: batch docs the artifact already holds are
-    * dropped before pairing (at-least-once replays cannot fabricate
-    * self-pairs or duplicate segments), and a batch that nets no new docs
-    * appends no segment. Caller contract: `threshold`/`lsh` match the
-    * key's build — as with [[trainedPairs]], the bench keys encode both.
+    * Same segment discipline as [[appendAdmitted]] (pairs/toks/probe
+    * unions are disjoint-exact under compaction). No-op (false) when
+    * nothing is memoized under the key. IDEMPOTENT per document: batch
+    * docs the artifact already holds are dropped before pairing
+    * (at-least-once replays cannot fabricate self-pairs or duplicate
+    * segments), and a batch that nets no new docs appends no segment.
+    * Caller contract: `threshold`/`lsh` match the key's build — as with
+    * [[trainedPairs]], the bench keys encode both.
     */
   def appendPairs(admitted: DataFrame, idCol: String, textCol: String,
                   threshold: Double, cacheKey: String,
                   lsh: Boolean = false,
-                  maxSegments: Int = MaxSegments): Boolean = {
-    val k = (admitted.sparkSession.sparkContext.applicationId, cacheKey)
-    val lock = indexLocks.getOrElseUpdate(k, new Object)
-    lock.synchronized {
-      pairsCache.get(k) match {
-        case None => false
-        case Some(loaded) =>
-          // a restored segment gets its probe on the first append (the
-          // variant is the caller's); stored at once, so a failure below
-          // never orphans it
-          val segs0 = loaded.map(s => if (s.probe.isDefined) s else
-            s.copy(probe = Some(graft.Caching.pinArtifact(probeOf(s.toks, lsh)))))
-          if (segs0 != loaded) pairsCache.put(k, segs0)
-          val corpusToks = segs0.map(_.toks).reduce(_ unionByName _)
-          val corpusProbe = segs0.flatMap(_.probe).reduce(_ unionByName _)
-          // REPLAY GUARD (at-least-once micro-batch retries re-deliver
-          // docs): drop batch docs the artifact already holds — re-pairing
-          // a present doc would fabricate (d, d) self-pairs via the cross
-          // probe and duplicate its pair rows. The anti-join probes the
-          // stored token table on its doc_id key (production: a bucketed /
-          // Delta key lookup, like every other artifact probe). An append
-          // that nets no new docs is a recorded no-op: no segment, no
-          // compaction pressure from no-op batches.
-          // ONE pass (the appendGramAdmitted r13 pattern, round 18): pin
-          // first, check emptiness on the PINNED artifact — the former
-          // `freshArrs.isEmpty` pre-check ran the batch tokenize +
-          // anti-join once for the probe and again for the checkpoint on
-          // every non-replay batch, both under this lock.
-          val batchArrs = graft.Caching.pinArtifact(
-            tokenArraysOf(admitted, idCol, textCol)
-              .join(corpusToks.select("doc_id"), Seq("doc_id"), "left_anti"))
-          if (batchArrs.isEmpty) { graft.Caching.dropArtifact(batchArrs); true }
-          else {
-          val allArrs = corpusToks.unionByName(batchArrs)
-          def verified(cands: DataFrame) =
-            orientPairs(verifyJaccard(cands, allArrs, threshold))
-          // a failed pin must not orphan the batch pin either: pinAll drops
-          // its own completed siblings, this drops the batch arrays
-          val Seq(newPairs, batchProbe) = try {
-            if (lsh) {
-              val batchSigs = graft.Caching.pinArtifact(
-                bandSignaturesFromArrs(batchArrs, 32, 4))
-              val cross = bandCandidates(batchSigs, corpusProbe, ordered = false)
-              val within = bandCandidates(batchSigs, batchSigs, ordered = true)
-              try Seq(graft.Caching.pinArtifact(
-                verified(cross.unionByName(within))), batchSigs)
-              catch { case e: Throwable =>
-                graft.Caching.dropArtifact(batchSigs); throw e }
-            } else {
-              // ONE prefix table serves both pair classes: ordered by the
-              // batch's own df it is the two-sided filter's consistent
-              // order within the batch, and any order will do for the
-              // one-sided cross probe
-              val prefix = prefixTokens(
-                batchArrs.select(col("doc_id"), explode(col("toks")).as("term")),
-                batchArrs.select(col("doc_id"),
-                  size(col("toks")).cast("long").as("sz")), threshold)
-              val cross = prefixMatches(prefix, corpusProbe, threshold,
-                ordered = false)
-              val within = prefixMatches(prefix, prefix, threshold,
-                ordered = true)
-              // the probe-postings pin is a cheap projection of the
-              // already-materialized batchArrs pin, independent of the
-              // verify pipeline — overlap the two checkpoints so the
-              // append's critical path pays the verify job only
-              graft.Caching.pinAll(
-                () => verified(cross.unionByName(within)),
-                () => postingsOf(batchArrs))
-            }
-          } catch { case e: Throwable =>
-            graft.Caching.dropArtifact(batchArrs); throw e }
-          val segs = segs0 :+ PairSegment(newPairs, batchArrs, Some(batchProbe))
-          val kept =
-            if (segs.size <= maxSegments) segs
-            else Vector(PairSegment(
-              graft.Caching.pinArtifact(
-                segs.map(_.pairs).reduce(_ unionByName _)),
-              graft.Caching.pinArtifact(
-                segs.map(_.toks).reduce(_ unionByName _)),
-              Some(graft.Caching.pinArtifact(
-                segs.flatMap(_.probe).reduce(_ unionByName _)))))
-          pairsCache.put(k, kept)
-          if (kept ne segs)
-            segs.foreach(_.pins.foreach(graft.Caching.dropArtifact))
-          true
+                  maxSegments: Int = graft.Artifacts.MaxSegments): Boolean =
+    pairStore.append(admitted.sparkSession, cacheKey, maxSegments,
+      // a restored segment gets its probe on the first append (the variant
+      // is the caller's)
+      revise = _.map(s => if (s.probe.isDefined) s
+        else s.copy(probe = Some(pinArtifact(probeOf(s.toks, lsh)))))) { e =>
+      val corpusToks = graft.Artifacts.unionAll(e.segs.map(_.toks))
+      val corpusProbe = graft.Artifacts.unionAll(e.segs.flatMap(_.probe))
+      // replayed docs are dropped first: re-pairing a present doc would
+      // fabricate (d, d) self-pairs via the cross probe and duplicate its
+      // pair rows; a batch that nets no new docs appends no segment
+      val fresh = graft.Artifacts.pinNonEmpty(graft.Artifacts.unseen(
+        tokenArraysOf(admitted, idCol, textCol), Seq(corpusToks)))
+      val seg = fresh.map { batchArrs =>
+        val allArrs = corpusToks.unionByName(batchArrs)
+        def verified(cands: DataFrame) =
+          orientPairs(verifyJaccard(cands, allArrs, threshold))
+        // a failed pin must not orphan the batch pin either: pinAll drops
+        // its own completed siblings, this drops the batch arrays
+        val Seq(newPairs, batchProbe) = try {
+          if (lsh) {
+            val batchSigs = pinArtifact(bandSignaturesFromArrs(batchArrs, 32, 4))
+            val cross = bandCandidates(batchSigs, corpusProbe, ordered = false)
+            val within = bandCandidates(batchSigs, batchSigs, ordered = true)
+            try Seq(pinArtifact(verified(cross.unionByName(within))), batchSigs)
+            catch { case e: Throwable =>
+              graft.Caching.dropArtifact(batchSigs); throw e }
+          } else {
+            // ONE prefix table serves both pair classes: ordered by the
+            // batch's own df it is the two-sided filter's consistent
+            // order within the batch, and any order will do for the
+            // one-sided cross probe
+            val prefix = prefixTokens(
+              batchArrs.select(col("doc_id"), explode(col("toks")).as("term")),
+              batchArrs.select(col("doc_id"),
+                size(col("toks")).cast("long").as("sz")), threshold)
+            val cross = prefixMatches(prefix, corpusProbe, threshold,
+              ordered = false)
+            val within = prefixMatches(prefix, prefix, threshold,
+              ordered = true)
+            // the probe-postings pin is a cheap projection of the
+            // already-materialized batchArrs pin, independent of the
+            // verify pipeline — overlap the two checkpoints so the
+            // append's critical path pays the verify job only
+            graft.Caching.pinAll(
+              () => verified(cross.unionByName(within)),
+              () => postingsOf(batchArrs))
           }
+        } catch { case e: Throwable =>
+          graft.Caching.dropArtifact(batchArrs); throw e }
+        PairSegment(newPairs, batchArrs, Some(batchProbe))
       }
+      (seg, ())
     }
-  }
-
-  /** Number of segments currently memoized under a pair-artifact key —
-    * spec/service observability (0 when nothing is memoized).
-    */
-  def pairSegmentCount(spark: org.apache.spark.sql.SparkSession,
-                       cacheKey: String): Int =
-    pairsCache.get((spark.sparkContext.applicationId, cacheKey))
-      .map(_.size).getOrElse(0)
-
-  private[graft] def pairSegmentsOf(spark: org.apache.spark.sql.SparkSession,
-                                    cacheKey: String): Vector[PairSegment] =
-    pairsCache.getOrElse(
-      (spark.sparkContext.applicationId, cacheKey), Vector.empty)
-
-  /** Persist the admission index under `cacheKey` to `path` — both
-    * maintenance tables (band signatures + unit-token arrays), compacted
-    * on write. Same restart rationale as [[savePairs]]. Returns false when
-    * nothing is memoized under the key.
-    */
-  def saveIndex(spark: org.apache.spark.sql.SparkSession,
-                cacheKey: String, path: String): Boolean = {
-    val k = (spark.sparkContext.applicationId, cacheKey)
-    indexLocks.getOrElseUpdate(k, new Object).synchronized {
-      indexCache.get(k) match {
-        case None => false
-        case Some(segs) =>
-          graft.Snapshots.write(spark, path, Seq(
-            "sigs" -> segs.map(_._1).reduce(_ unionByName _),
-            "toks" -> segs.map(_._2).reduce(_ unionByName _)))
-          true
-      }
-    }
-  }
-
-  /** Restore a [[saveIndex]] snapshot under `cacheKey` as one pinned
-    * segment; probes and [[appendAdmitted]] work exactly as before the
-    * restart. Returns the served (signatures, token arrays) like
-    * [[trainedIndex]]. Refuses to shadow a live artifact.
-    */
-  def loadIndex(spark: org.apache.spark.sql.SparkSession,
-                path: String, cacheKey: String): (DataFrame, DataFrame) = {
-    val k = (spark.sparkContext.applicationId, cacheKey)
-    indexLocks.getOrElseUpdate(k, new Object).synchronized {
-      require(!indexCache.contains(k),
-        s"admission index '$cacheKey' already live in this session — reset " +
-          "it before loading a snapshot over it")
-      val base = graft.Snapshots.resolveDir(spark, path)
-      val seg = (
-        graft.Caching.pinArtifact(spark.read.parquet(s"$base/sigs")),
-        graft.Caching.pinArtifact(spark.read.parquet(s"$base/toks")))
-      indexCache.put(k, Vector(seg))
-      seg
-    }
-  }
-
-  /** Persist the additive gram artifact under `cacheKey` to `path` — the
-    * per-gh summed counts PLUS the exactly-once ledger: gram counts have
-    * no document column, so a restarted at-least-once stream re-delivering
-    * an already-folded batch would silently DOUBLE its counts unless the
-    * applied (writer, batchId) set survives the restart with the table.
-    * Returns false when nothing is memoized under the key.
-    */
-  def saveGramIndex(spark: org.apache.spark.sql.SparkSession,
-                    cacheKey: String, path: String): Boolean = {
-    val k = (spark.sparkContext.applicationId, cacheKey)
-    indexLocks.getOrElseUpdate(k, new Object).synchronized {
-      gramCache.get(k) match {
-        case None => false
-        case Some(segs) =>
-          import spark.implicits._
-          val applied = appliedGramBatches.synchronized {
-            import scala.jdk.CollectionConverters._
-            appliedGramBatches.asScala.toSeq
-              .collect { case (a, ck, w, b) if a == k._1 && ck == k._2 =>
-                (w, b) }
-          }
-          // counts and ledger are one atomic snapshot: restoring counts
-          // without their ledger re-arms replays as double-folds
-          graft.Snapshots.write(spark, path, Seq(
-            "grams" -> segs.reduce(_ unionByName _).groupBy("gh")
-              .agg(sum("n_docs").as("n_docs"), sum("n_occ").as("n_occ")),
-            "ledger" -> applied.toDF("writer", "batch_id")))
-          true
-      }
-    }
-  }
-
-  /** Restore a [[saveGramIndex]] snapshot under `cacheKey`: the summed
-    * counts become one pinned segment and the ledger re-arms the replay
-    * guard, so a stream resuming from its pre-crash checkpoint cannot
-    * double-fold batches it already applied. Refuses to shadow a live
-    * artifact.
-    */
-  def loadGramIndex(spark: org.apache.spark.sql.SparkSession,
-                    path: String, cacheKey: String): DataFrame = {
-    val k = (spark.sparkContext.applicationId, cacheKey)
-    indexLocks.getOrElseUpdate(k, new Object).synchronized {
-      require(!gramCache.contains(k),
-        s"gram artifact '$cacheKey' already live in this session — reset " +
-          "it before loading a snapshot over it")
-      val base = graft.Snapshots.resolveDir(spark, path)
-      val seg = graft.Caching.pinArtifact(spark.read.parquet(s"$base/grams"))
-      gramCache.put(k, Vector(seg))
-      spark.read.parquet(s"$base/ledger").collect().foreach { r =>
-        appliedGramBatches.add((k._1, k._2, r.getString(0), r.getLong(1)))
-      }
-      seg
-    }
-  }
-
-  /** Persist the pair artifact under `cacheKey` to `path` — the
-    * parquet/Delta form [[trainedPairs]]'s scaladoc promises, and the
-    * restart story the in-session memo lacks: a maintained pair table that
-    * took hours of appends reloads with [[loadPairs]] instead of
-    * re-pairing the corpus. Two tables are written — the pairs and the
-    * unit arrays an append verifies against — each compacted on write
-    * (unions are disjoint-exact, the compaction argument). The probe table
-    * is NOT written: it is a projection of the arrays, derived again after
-    * [[loadPairs]]. The exact/LSH caller contract is unchanged: keys
-    * encode variant and threshold, as with [[trainedPairs]]/
-    * [[appendPairs]]. Returns false when nothing is memoized under the key.
-    */
-  def savePairs(spark: org.apache.spark.sql.SparkSession,
-                cacheKey: String, path: String): Boolean = {
-    val k = (spark.sparkContext.applicationId, cacheKey)
-    indexLocks.getOrElseUpdate(k, new Object).synchronized {
-      pairsCache.get(k) match {
-        case None => false
-        case Some(segs) =>
-          // pairs and arrays, ONE atomic snapshot version: mixed part
-          // versions would verify candidates against one corpus state
-          // while serving pairs of another
-          graft.Snapshots.write(spark, path, Seq(
-            "pairs" -> segs.map(_.pairs).reduce(_ unionByName _),
-            "toks" -> segs.map(_.toks).reduce(_ unionByName _)))
-          true
-      }
-    }
-  }
-
-  /** Restore a [[savePairs]] artifact under `cacheKey` as ONE pinned
-    * segment (decoupled from the files), serving consumers and accepting
-    * [[appendPairs]] exactly as the pre-restart artifact did. The probe
-    * table is not read: the next append derives it from the loaded arrays
-    * for its variant, so a snapshot that still holds a stored `probe`
-    * part (the former three-part layout) loads the same way. Refuses to
-    * shadow a live in-session artifact — reset first if replacement is
-    * intended.
-    */
-  def loadPairs(spark: org.apache.spark.sql.SparkSession,
-                path: String, cacheKey: String): DataFrame = {
-    val k = (spark.sparkContext.applicationId, cacheKey)
-    indexLocks.getOrElseUpdate(k, new Object).synchronized {
-      require(!pairsCache.contains(k),
-        s"pair artifact '$cacheKey' already live in this session — reset " +
-          "it before loading a snapshot over it")
-      val base = graft.Snapshots.resolveDir(spark, path)
-      val seg = PairSegment(
-        graft.Caching.pinArtifact(spark.read.parquet(s"$base/pairs")),
-        graft.Caching.pinArtifact(spark.read.parquet(s"$base/toks")), None)
-      pairsCache.put(k, Vector(seg))
-      seg.pairs
-    }
-  }
 
   /** Drop memoized pair artifacts whose key starts with `cacheKeyPrefix`
     * (the bench's TRUE-rebuild discipline for its `train_pairs` line);
-    * reliable-checkpoint files are reclaimed like [[resetIndex]]'s.
+    * reliable-checkpoint files are reclaimed by [[pairStore]].
     */
   def resetPairs(spark: org.apache.spark.sql.SparkSession,
-                 cacheKeyPrefix: String): Unit = {
-    val appId = spark.sparkContext.applicationId
-    // per-key lock, like appendPairs/trainedPairs: an unlocked reset racing
-    // a concurrent append could delete segment checkpoint files the append
-    // then re-inserts (resurrecting a dropped artifact backed by deleted
-    // files — served as read failures or stale pre-refresh pairs)
-    pairsCache.keys
-      .filter(k => k._1 == appId && k._2.startsWith(cacheKeyPrefix))
-      .foreach { k =>
-        indexLocks.getOrElseUpdate(k, new Object).synchronized {
-          pairsCache.remove(k)
-            .foreach(_.foreach(_.pins.foreach(graft.Caching.dropArtifact)))
-        }
-      }
-  }
+                 cacheKeyPrefix: String): Unit =
+    pairStore.reset(spark, cacheKeyPrefix)
 
-  /** Segment count of the gram artifact under `cacheKey` (0 = not built). */
-  def gramSegmentCount(spark: org.apache.spark.sql.SparkSession,
-                       cacheKey: String): Int =
-    gramCache.get((spark.sparkContext.applicationId, cacheKey))
-      .map(_.size).getOrElse(0)
-
-  private[graft] def gramSegmentsOf(spark: org.apache.spark.sql.SparkSession,
-                                    cacheKey: String): Vector[DataFrame] =
-    gramCache.getOrElse(
-      (spark.sparkContext.applicationId, cacheKey), Vector.empty)
-
-  /** Drop memoized indexes whose key starts with `cacheKeyPrefix` — the
-    * bench uses this so a `train_dedup_idx` line times a TRUE rebuild.
-    * LOCAL checkpoint blocks are left to Spark's ContextCleaner (explicitly
-    * unpersisting a lineage-truncated checkpoint would strand a straggling
-    * reader — the [[graft.search.Sketches.refreshDataset]] rule); RELIABLE
-    * checkpoint files (cluster sessions with a checkpoint dir) are deleted
-    * via [[graft.Caching.dropArtifact]] AFTER the memo entry is removed —
-    * the ContextCleaner never reclaims those without a construction-time
-    * conf, so leaving them would grow the checkpoint dir without bound
-    * (ADVICE r12). Same quiescence contract as compaction: an in-flight
-    * probe that embedded a dropped segment can fail and retry.
+  /** Drop memoized admission indexes AND gram artifacts (with their
+    * ledgers: a REBUILT artifact belongs to a new stream whose batch ids
+    * restart at 0, and a stale entry would wrongly no-op its first batches)
+    * whose key starts with `cacheKeyPrefix` — the bench uses this so a
+    * `train_dedup_idx` line times a TRUE rebuild. Reliable-checkpoint files
+    * are reclaimed ([[graft.Artifacts.Store.drop]]).
     */
   def resetIndex(spark: org.apache.spark.sql.SparkSession,
                  cacheKeyPrefix: String): Unit = {
-    val appId = spark.sparkContext.applicationId
-    // per-key lock against concurrent appendAdmitted/appendGramAdmitted —
-    // the resetPairs race, same fix
-    indexCache.keys
-      .filter(k => k._1 == appId && k._2.startsWith(cacheKeyPrefix))
-      .foreach { k =>
-        indexLocks.getOrElseUpdate(k, new Object).synchronized {
-          indexCache.remove(k).foreach(_.foreach { case (s, t) =>
-            graft.Caching.dropArtifact(s); graft.Caching.dropArtifact(t)
-          })
-        }
-      }
-    gramCache.keys
-      .filter(k => k._1 == appId && k._2.startsWith(cacheKeyPrefix))
-      .foreach { k =>
-        indexLocks.getOrElseUpdate(k, new Object).synchronized {
-          gramCache.remove(k).foreach(_.foreach(graft.Caching.dropArtifact))
-          // drop the key's batch ledger with the artifact: a REBUILT
-          // artifact belongs to a new stream whose batch ids restart at 0,
-          // and a stale entry would wrongly no-op its first batches
-          appliedGramBatches.removeIf(e => e._1 == k._1 && e._2 == k._2)
-        }
-      }
+    indexStore.reset(spark, cacheKeyPrefix)
+    gramStore.reset(spark, cacheKeyPrefix)
   }
 
   /** [[minhashIncremental]] against PRECOMPUTED corpus artifacts — the

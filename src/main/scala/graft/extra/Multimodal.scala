@@ -565,9 +565,23 @@ object Multimodal {
       }(enc)
   }
 
+  /** Session store of decoded media-feature artifacts
+    * ([[trainedFeatures]]): compaction and the `features` snapshot part are
+    * doc_id-disjoint unions. Decode-at-ingest output is expensive (real
+    * codec work per document), so a restarted service reloads its snapshot
+    * instead of re-decoding the corpus.
+    */
+  val featureStore = new graft.Artifacts.Store[DataFrame, Unit](
+    "feature artifact",
+    pins = Seq(_),
+    compact = segs => graft.Caching.pinArtifact(graft.Artifacts.unionAll(segs)),
+    parts = (_, e) => Seq("features" -> graft.Artifacts.unionAll(e.segs)),
+    read = (spark, base) =>
+      (graft.Caching.pinArtifact(spark.read.parquet(s"$base/features")), ()))
+
   /** Session MEDIA-FEATURE artifact: synthesize the encoded corpus and run
     * the routed REAL decode workers ONCE per (session, cacheKey), serving
-    * the decoded feature table lineage-free ([[graft.Caching.memoLocked]]
+    * the decoded feature table lineage-free ([[featureStore]]'s locked
     * first build + [[graft.Caching.pinArtifact]] — the
     * [[graft.extra.Dedup.trainedPairs]] discipline). Media decode is the
     * most expensive per-row stage a multimodal pipeline runs; a served
@@ -577,7 +591,6 @@ object Multimodal {
     * ingest job.
     */
   def trainedFeatures(docs: DataFrame, cacheKey: String): DataFrame = {
-    val k = (docs.sparkSession.sparkContext.applicationId, cacheKey)
     // Spread the (doc_id, text) projection before the synth+decode pass
     // (round 17, the spreadSketchCols rationale — but gated on SCAN
     // PARALLELISM, not bytes): a single-row-group corpus scans as ONE
@@ -594,10 +607,9 @@ object Multimodal {
     // exchange-bound (OPTIMIZATION_r17.md §3), not scan-bound.
     val spread = graft.Tables.spreadForCpu(
       docs.select(col("doc_id"), col("text")))
-    graft.Caching.memoLocked(featCache, featLocks, k)(
-      Vector(graft.Caching.pinArtifact(
-        extractFeaturesRouted(synthesizeEncoded(spread)))))
-      .reduce(_ unionByName _)
+    graft.Artifacts.unionAll(featureStore.memo(docs.sparkSession, cacheKey)(
+      (graft.Caching.pinArtifact(
+        extractFeaturesRouted(synthesizeEncoded(spread))), ())).segs)
   }
 
   /** Fold a batch of NEW documents' decoded features into the memoized
@@ -613,95 +625,23 @@ object Multimodal {
     * when nothing is memoized under the key.
     */
   def appendFeatures(batch: DataFrame, cacheKey: String,
-                     maxSegments: Int = 32, idCol: String = "doc_id",
-                     textCol: String = "text"): Boolean = {
-    val k = (batch.sparkSession.sparkContext.applicationId, cacheKey)
-    val lock = featLocks.getOrElseUpdate(k, new Object)
-    lock.synchronized {
-      featCache.get(k) match {
-        case None => false
-        case Some(segs0) =>
-          val present = segs0.reduce(_ unionByName _).select("doc_id")
-          val fresh = batch.select(col(idCol).as("doc_id"),
-              col(textCol).as("text"))
-            .join(present, Seq("doc_id"), "left_anti")
-          val seg = graft.Caching.pinArtifact(
-            extractFeaturesRouted(synthesizeEncoded(fresh)))
-          if (seg.isEmpty) { graft.Caching.dropArtifact(seg); true }
-          else {
-            val segs = segs0 :+ seg
-            val kept =
-              if (segs.size <= maxSegments) segs
-              else Vector(graft.Caching.pinArtifact(
-                segs.reduce(_ unionByName _)))
-            featCache.put(k, kept)
-            if (kept ne segs) segs.foreach(graft.Caching.dropArtifact)
-            true
-          }
-      }
+                     maxSegments: Int = graft.Artifacts.MaxSegments,
+                     idCol: String = "doc_id",
+                     textCol: String = "text"): Boolean =
+    featureStore.append(batch.sparkSession, cacheKey, maxSegments) { e =>
+      val fresh = graft.Artifacts.unseen(batch.select(
+        col(idCol).as("doc_id"), col(textCol).as("text")), e.segs)
+      (graft.Artifacts.pinNonEmpty(
+        extractFeaturesRouted(synthesizeEncoded(fresh))), ())
     }
-  }
 
-  /** Persist the decoded media-feature artifact under `cacheKey` to
-    * `path`, compacted on write (doc_id-disjoint union) — the restart
-    * path: decode-at-ingest output is expensive (real codec work per
-    * document), so a restarted service reloads it with [[loadFeatures]]
-    * instead of re-decoding the corpus. Returns false when nothing is
-    * memoized under the key.
-    */
-  def saveFeatures(spark: org.apache.spark.sql.SparkSession,
-                   cacheKey: String, path: String): Boolean = {
-    val k = (spark.sparkContext.applicationId, cacheKey)
-    featLocks.getOrElseUpdate(k, new Object).synchronized {
-      featCache.get(k) match {
-        case None => false
-        case Some(segs) =>
-          graft.Snapshots.write(spark, path, Seq(
-            "features" -> segs.reduce(_ unionByName _)))
-          true
-      }
-    }
-  }
-
-  /** Restore a [[saveFeatures]] snapshot under `cacheKey` as one pinned
-    * segment; [[trainedFeatures]] serves it and [[appendFeatures]] keeps
-    * maintaining it. Refuses to shadow a live artifact.
-    */
-  def loadFeatures(spark: org.apache.spark.sql.SparkSession,
-                   path: String, cacheKey: String): DataFrame = {
-    val k = (spark.sparkContext.applicationId, cacheKey)
-    featLocks.getOrElseUpdate(k, new Object).synchronized {
-      require(!featCache.contains(k),
-        s"feature artifact '$cacheKey' already live in this session — " +
-          "reset it before loading a snapshot over it")
-      val seg = graft.Caching.pinArtifact(spark.read.parquet(
-        s"${graft.Snapshots.resolveDir(spark, path)}/features"))
-      featCache.put(k, Vector(seg))
-      seg
-    }
-  }
-
-  /** Segment count of the feature artifact under `cacheKey` (0 = unbuilt). */
-  def featureSegmentCount(spark: org.apache.spark.sql.SparkSession,
-                          cacheKey: String): Int =
-    featCache.get((spark.sparkContext.applicationId, cacheKey))
-      .map(_.size).getOrElse(0)
-
-  /** Drop the memoized feature artifact under `cacheKey` (reclaiming its
-    * reliable-checkpoint files), so a benchmark can time a TRUE rebuild.
+  /** Drop the memoized feature artifact under exactly `cacheKey`
+    * (reclaiming its reliable-checkpoint files), so a benchmark can time a
+    * TRUE rebuild.
     */
   def resetFeatures(spark: org.apache.spark.sql.SparkSession,
-                    cacheKey: String): Unit = {
-    val k = (spark.sparkContext.applicationId, cacheKey)
-    featLocks.getOrElseUpdate(k, new Object).synchronized {
-      featCache.remove(k).foreach(_.foreach(graft.Caching.dropArtifact))
-    }
-  }
-
-  private val featCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String), Vector[DataFrame]]
-  private val featLocks = scala.collection.concurrent.TrieMap
-    .empty[(String, String), Object]
+                    cacheKey: String): Unit =
+    featureStore.drop(spark, cacheKey)
 
   /** Absolute path of the decoded-feature FIXTURE the media family's DuckDB
     * oracle twins read. [[graft.Verify]] pins it to the run-scoped SIBLING

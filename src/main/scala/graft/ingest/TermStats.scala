@@ -65,15 +65,27 @@ object TermStats {
       slice(ts, lit(2), size(ts) - 1),
       (a, b) => concat(a, lit(" "), b))
 
-  private val tfCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String), Vector[DataFrame]]
-  private val tfLocks = scala.collection.concurrent.TrieMap
-    .empty[(String, String), Object]
-  // n-gram order each TF artifact was BUILT with — bound to the key so a
-  // caller cannot silently mix unit streams (a unigram append folded into a
-  // bigram artifact corrupts every bigram consumer's counts)
-  private val tfOrder = scala.collection.concurrent.TrieMap
-    .empty[(String, String), Int]
+  /** Session store of TERM-FREQUENCY artifacts ([[trainedTermFreqs]]). The
+    * side state is the n-gram order each artifact was BUILT with — bound to
+    * the key so a caller cannot silently mix unit streams (a unigram append
+    * folded into a bigram artifact corrupts every bigram consumer's
+    * counts). Compaction and the `tf` snapshot part are plain unions (exact
+    * by (doc_id, term) key disjointness); the order rides a one-row `meta`
+    * part so a load re-binds it.
+    */
+  val tfStore = new graft.Artifacts.Store[DataFrame, Int](
+    "TF artifact",
+    pins = Seq(_),
+    compact = segs => graft.Caching.pinArtifact(graft.Artifacts.unionAll(segs)),
+    parts = (spark, e) => {
+      import spark.implicits._
+      Seq("tf" -> graft.Artifacts.unionAll(e.segs),
+        "meta" -> Seq(e.side).toDF("n"))
+    },
+    read = (spark, base) => {
+      val n = spark.read.parquet(s"$base/meta").head().getInt(0)
+      (graft.Caching.pinArtifact(spark.read.parquet(s"$base/tf")), n)
+    })
 
   /** Session TERM-FREQUENCY artifact: `termFreqs(tokens(df))` built ONCE per
     * (session, cacheKey) and served lineage-free — the
@@ -89,24 +101,14 @@ object TermStats {
     */
   def trainedTermFreqs(df: DataFrame, docIdCol: String, textCol: String,
                        cacheKey: String, n: Int = 1): DataFrame = {
-    val k = (df.sparkSession.sparkContext.applicationId, cacheKey)
-    // build under the per-key lock (the Dedup.trainedPairs rule): a bare
-    // getOrElseUpdate runs concurrent first builds twice, orphaning the
-    // losing builder's checkpoint files
-    val lock = tfLocks.getOrElseUpdate(k, new Object)
-    lock.synchronized {
-      // the artifact's unit order is part of its identity: fetching a key
-      // built at a different n would silently serve the wrong unit stream
-      tfOrder.get(k).foreach(built => require(built == n,
-        s"TF artifact '$cacheKey' was built with n=$built, requested n=$n — " +
-          "use a distinct cacheKey per n-gram order"))
-      val segs = tfCache.getOrElseUpdate(k, {
-        tfOrder.put(k, n)
-        Vector(graft.Caching.pinArtifact(
-          termFreqs(unitTokens(df, docIdCol, textCol, n))))
-      })
-      segs.reduce(_ unionByName _)
-    }
+    val e = tfStore.memo(df.sparkSession, cacheKey)((graft.Caching.pinArtifact(
+      termFreqs(unitTokens(df, docIdCol, textCol, n))), n))
+    // the artifact's unit order is part of its identity: fetching a key
+    // built at a different n would silently serve the wrong unit stream
+    require(e.side == n,
+      s"TF artifact '$cacheKey' was built with n=${e.side}, requested n=$n — " +
+        "use a distinct cacheKey per n-gram order")
+    graft.Artifacts.unionAll(e.segs)
   }
 
   /** Fold a batch of NEW documents' term frequencies into the memoized
@@ -122,137 +124,31 @@ object TermStats {
     * a rebuild. No-op (false) when nothing is memoized under the key.
     *
     * The n-gram order is NOT a parameter: the append always uses the order
-    * the artifact was built with (recorded by [[trainedTermFreqs]]), so a
+    * the artifact was built with (the store entry's side state), so a
     * stream maintaining a bigram artifact folds bigram rows in — a
     * caller-supplied n could silently mix unit streams.
     */
   def appendTermFreqs(batch: DataFrame, docIdCol: String, textCol: String,
-                      cacheKey: String, maxSegments: Int = 32): Boolean = {
-    val k = (batch.sparkSession.sparkContext.applicationId, cacheKey)
-    val lock = tfLocks.getOrElseUpdate(k, new Object)
-    lock.synchronized {
-      tfCache.get(k) match {
-        case None => false
-        case Some(segs0) =>
-          val n = tfOrder.getOrElse(k, 1)
-          // REPLAY GUARD (the appendPairs rule): at-least-once micro-batch
-          // retries re-deliver docs, and re-appending one would DOUBLE its
-          // tf rows in the artifact — silently wrong df/ttf for every TF
-          // consumer. Probe the artifact on its doc_id key (production: a
-          // bucketed/Delta lookup) and drop already-present docs; a batch
-          // that nets no new docs appends no segment.
-          val present = segs0.reduce(_ unionByName _).select("doc_id")
-          val fresh = batch.select(col(docIdCol).as("doc_id"),
-              col(textCol).as("__text"))
-            .join(present, Seq("doc_id"), "left_anti")
-          // ONE pass (the appendGramAdmitted r13 pattern, round 18): pin
-          // the segment first and check emptiness on the PINNED artifact —
-          // the former `fresh.isEmpty` pre-check ran the tokenize+anti-join
-          // once for the probe and again for the checkpoint, both under
-          // this lock, on every non-replay batch. An all-replay batch (and
-          // a fresh batch netting zero unit rows — empty text at n=1,
-          // one-token docs at n=2) yields an empty segment, dropped here so
-          // replays never grow the segment list.
-          val seg = graft.Caching.pinArtifact(
-            termFreqs(unitTokens(fresh, "doc_id", "__text", n)))
-          if (seg.isEmpty) { graft.Caching.dropArtifact(seg); true }
-          else {
-            val segs = segs0 :+ seg
-            val kept =
-              if (segs.size <= maxSegments) segs
-              else Vector(graft.Caching.pinArtifact(
-                segs.reduce(_ unionByName _)))
-            tfCache.put(k, kept)
-            if (kept ne segs) segs.foreach(graft.Caching.dropArtifact)
-            true
-          }
-      }
+                      cacheKey: String,
+                      maxSegments: Int = graft.Artifacts.MaxSegments): Boolean =
+    tfStore.append(batch.sparkSession, cacheKey, maxSegments) { e =>
+      // replayed docs would DOUBLE their tf rows — silently wrong df/ttf
+      // for every TF consumer — so they are dropped first; an all-replay
+      // batch, or fresh docs netting zero unit rows (empty text at n=1,
+      // one-token docs at n=2), appends no segment
+      val fresh = graft.Artifacts.unseen(batch.select(
+        col(docIdCol).as("doc_id"), col(textCol).as("__text")), e.segs)
+      (graft.Artifacts.pinNonEmpty(
+        termFreqs(unitTokens(fresh, "doc_id", "__text", e.side))), e.side)
     }
-  }
-
-  /** Persist the TF artifact under `cacheKey` to `path` — the parquet
-    * form [[trainedTermFreqs]]'s scaladoc promises at lake scale, and the
-    * restart story the in-session memo lacks: a service that dies after
-    * building (or maintaining) a TF table reloads it with
-    * [[loadTermFreqs]] instead of re-tokenizing the corpus. Segments are
-    * compacted on write (one table at `path/tf`, exact by key
-    * disjointness); the n-gram order rides a one-row `path/meta` table so
-    * a load can re-bind it. The in-session artifact is untouched.
-    * Returns false when nothing is memoized under the key.
-    */
-  def saveTermFreqs(spark: org.apache.spark.sql.SparkSession,
-                    cacheKey: String, path: String): Boolean = {
-    val k = (spark.sparkContext.applicationId, cacheKey)
-    val lock = tfLocks.getOrElseUpdate(k, new Object)
-    lock.synchronized {
-      tfCache.get(k) match {
-        case None => false
-        case Some(segs) =>
-          import spark.implicits._
-          graft.Snapshots.write(spark, path, Seq(
-            "tf" -> segs.reduce(_ unionByName _),
-            "meta" -> Seq(tfOrder.getOrElse(k, 1)).toDF("n")))
-          true
-      }
-    }
-  }
-
-  /** Restore a [[saveTermFreqs]] artifact under `cacheKey` — the loaded
-    * table becomes ONE pinned segment (decoupled from the files, which may
-    * be overwritten by a later save), consumers serve from it, and
-    * [[appendTermFreqs]] keeps maintaining it at the saved n-gram order.
-    * Refuses to shadow an existing in-session artifact: a half-maintained
-    * memo silently replaced by an older snapshot is the restart bug this
-    * API exists to prevent — reset first if replacement is intended.
-    */
-  def loadTermFreqs(spark: org.apache.spark.sql.SparkSession,
-                    path: String, cacheKey: String): DataFrame = {
-    val k = (spark.sparkContext.applicationId, cacheKey)
-    val lock = tfLocks.getOrElseUpdate(k, new Object)
-    lock.synchronized {
-      require(!tfCache.contains(k),
-        s"TF artifact '$cacheKey' already live in this session — reset it " +
-          "before loading a snapshot over it")
-      val base = graft.Snapshots.resolveDir(spark, path)
-      val n = spark.read.parquet(s"$base/meta").head().getInt(0)
-      val seg = graft.Caching.pinArtifact(spark.read.parquet(s"$base/tf"))
-      tfOrder.put(k, n)
-      tfCache.put(k, Vector(seg))
-      seg
-    }
-  }
-
-  /** Segment count of the TF artifact under `cacheKey` (0 = not built). */
-  def tfSegmentCount(spark: org.apache.spark.sql.SparkSession,
-                     cacheKey: String): Int =
-    tfCache.get((spark.sparkContext.applicationId, cacheKey))
-      .map(_.size).getOrElse(0)
-
-  private[graft] def tfSegmentsOf(spark: org.apache.spark.sql.SparkSession,
-                                  cacheKey: String): Vector[DataFrame] =
-    tfCache.getOrElse(
-      (spark.sparkContext.applicationId, cacheKey), Vector.empty)
 
   /** Drop memoized TF artifacts whose key starts with `cacheKeyPrefix` (the
     * bench's TRUE-rebuild discipline for its `train_tf` line);
-    * reliable-checkpoint files are reclaimed like
-    * [[graft.extra.Dedup.resetPairs]].
+    * reliable-checkpoint files are reclaimed by [[tfStore]].
     */
   def resetTermFreqs(spark: org.apache.spark.sql.SparkSession,
-                     cacheKeyPrefix: String): Unit = {
-    val appId = spark.sparkContext.applicationId
-    // per-key lock against a concurrent appendTermFreqs (the
-    // Dedup.resetPairs race, same fix): an unlocked reset could delete
-    // checkpoint files an in-flight append then re-inserts
-    tfCache.keys
-      .filter(k => k._1 == appId && k._2.startsWith(cacheKeyPrefix))
-      .foreach { k =>
-        tfLocks.getOrElseUpdate(k, new Object).synchronized {
-          tfCache.remove(k).foreach(_.foreach(graft.Caching.dropArtifact))
-          tfOrder.remove(k)
-        }
-      }
-  }
+                     cacheKeyPrefix: String): Unit =
+    tfStore.reset(spark, cacheKeyPrefix)
 
   /** Top-k terms per document by TF, deterministic tie-break on term
     * (filters.py:156-158 keeps the top-10 list).

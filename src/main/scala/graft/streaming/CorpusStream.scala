@@ -79,11 +79,18 @@ object CorpusStream {
                   idCol: String = "doc_id", textCol: String = "text",
                   threshold: Double = 0.9)
                  (onVerdict: (DataFrame, Long) => Unit): StreamingQuery =
+    eachBatch(stream) { (batch, id) =>
+      onVerdict(graft.extra.Dedup.minhashIncremental(
+        corpus(), batch, idCol, textCol, threshold), id)
+    }
+
+  /** Start `stream` with `body` run on every micro-batch, releasing the
+    * batch's query-scoped pins ([[graft.Caching.release]]) once it ends.
+    */
+  private def eachBatch(stream: DataFrame)
+                       (body: (DataFrame, Long) => Unit): StreamingQuery =
     stream.writeStream.foreachBatch { (batch: DataFrame, id: Long) =>
-      try onVerdict(
-        graft.extra.Dedup.minhashIncremental(
-          corpus(), batch, idCol, textCol, threshold), id)
-      finally graft.Caching.release()
+      try body(batch, id) finally graft.Caching.release()
     }.start()
 
   /** [[admitStream]] against the STORED admission-index artifacts
@@ -103,12 +110,104 @@ object CorpusStream {
                          idCol: String = "doc_id", textCol: String = "text",
                          threshold: Double = 0.9)
                         (onVerdict: (DataFrame, Long) => Unit): StreamingQuery =
-    stream.writeStream.foreachBatch { (batch: DataFrame, id: Long) =>
-      try onVerdict(
-        graft.extra.Dedup.minhashIncrementalIndexed(
-          corpusSigs(), corpusToks(), batch, idCol, textCol, threshold), id)
-      finally graft.Caching.release()
-    }.start()
+    eachBatch(stream) { (batch, id) =>
+      onVerdict(graft.extra.Dedup.minhashIncrementalIndexed(
+        corpusSigs(), corpusToks(), batch, idCol, textCol, threshold), id)
+    }
+
+  /** Per-family snapshot subdirectories under a gate snapshot `root`, the
+    * one a save writes first — shared by the gate's periodic saves and
+    * [[loadMaintained]], so the restart recipe never re-derives the mapping
+    * by hand. Cache keys can hold path separators and '#', so the directory
+    * name is a sanitized tail of the key (readable) plus a SHA-256 prefix
+    * of the full key (collision guard — two keys sharing a 40-char
+    * sanitized tail must still map apart, or a restore would cross-load one
+    * family's parquet into another's artifact; 48 bits of cryptographic
+    * hash make that effectively impossible, where a 32-bit String.hashCode
+    * collides for trivially constructible key pairs). The second is the
+    * pre-round-16 name with that hashCode suffix: saves never write it, but
+    * loads fall back to it so snapshot roots written before the SHA rename
+    * still restore instead of silently rebuilding from scratch (ADVICE r15).
+    */
+  private def snapDirs(root: String, kind: String, key: String): Seq[String] = {
+    val dir =
+      s"$root/$kind/" + key.takeRight(40).replaceAll("[^A-Za-z0-9._-]", "_")
+    val sha = java.security.MessageDigest.getInstance("SHA-256")
+      .digest(key.getBytes("UTF-8"))
+      .take(6).map(b => f"$b%02x").mkString
+    Seq(s"$dir-$sha", s"$dir-${Integer.toHexString(key.hashCode)}")
+  }
+
+  /** Restore every maintained family of an [[admitStreamMaintained]] gate
+    * from the snapshot `root` its `snapshotEvery` option wrote — call
+    * BEFORE restarting the gate from its unchanged stream checkpoint, with
+    * the SAME key arguments. Families without a snapshot yet (a gate that
+    * crashed before its first snapshot batch) are skipped: the gate then
+    * rebuilds them from `corpus` exactly as on first start, and the
+    * at-least-once replays from the checkpoint re-fold whatever the
+    * snapshot missed (doc-idempotent appends + the gram ledger, which
+    * travels inside the gram snapshot).
+    */
+  def loadMaintained(spark: org.apache.spark.sql.SparkSession, root: String,
+                     cacheKey: String,
+                     tfCacheKeys: Seq[String] = Nil,
+                     pairsSpecs: Seq[(String, Double, Boolean)] = Nil,
+                     gramSpecs: Seq[(String, Int)] = Nil,
+                     featureCacheKeys: Seq[String] = Nil): Unit =
+    for ((kind, store, keys) <- families(cacheKey, tfCacheKeys, pairsSpecs,
+        gramSpecs, featureCacheKeys); k <- keys)
+      // the CURRENT name first, then the legacy one. committed(), not bare
+      // existence: a family root whose only save crashed mid-write (version
+      // dirs, nothing committed) is "no snapshot yet" and takes the
+      // documented skip-and-rebuild path, as does a key with no snapshot
+      // under either name
+      snapDirs(root, kind, k).find(graft.Snapshots.committed(spark, _))
+        .foreach(store.load(spark, _, k))
+
+  /** The maintained families of one gate as (snapshot directory kind,
+    * store, keys), in snapshot order: the derived families, then the
+    * admission index LAST (see the snapshot block of
+    * [[admitStreamMaintained]]).
+    */
+  private def families(cacheKey: String, tfCacheKeys: Seq[String],
+                       pairsSpecs: Seq[(String, Double, Boolean)],
+                       gramSpecs: Seq[(String, Int)],
+                       featureCacheKeys: Seq[String])
+  : Seq[(String, graft.Artifacts.Store[_, _], Seq[String])] = Seq(
+    ("tf", graft.ingest.TermStats.tfStore, tfCacheKeys),
+    ("pairs", graft.extra.Dedup.pairStore, pairsSpecs.map(_._1)),
+    ("gram", graft.extra.Dedup.gramStore, gramSpecs.map(_._1)),
+    ("feat", graft.extra.Multimodal.featureStore, featureCacheKeys),
+    ("idx", graft.extra.Dedup.indexStore, Seq(cacheKey)))
+
+  /** Run independent maintenance `tasks` (appends or saves of distinct
+    * families) as concurrent jobs from a small pool, and return only when
+    * EVERY task has finished: the outer finally releases the admitted pin,
+    * and a sibling still running would lazily recompute the batch-scan +
+    * verdict join from scratch (ADVICE r17). The first failure is then
+    * rethrown as the ORIGINAL exception, not its ExecutionException
+    * envelope, so the stream surfaces the family that failed.
+    */
+  private def inParallel(tasks: Seq[() => Any]): Unit =
+    if (tasks.size <= 1) tasks.foreach(_())
+    else {
+      val pool = java.util.concurrent.Executors
+        .newFixedThreadPool(math.min(4, tasks.size))
+      try {
+        val futs = tasks.map(t =>
+          pool.submit(new java.util.concurrent.Callable[Any] {
+            def call(): Any = t()
+          }))
+        val failures = futs.flatMap { f =>
+          try { f.get(); None }
+          catch {
+            case e: java.util.concurrent.ExecutionException =>
+              Some(Option(e.getCause).getOrElse(e))
+          }
+        }
+        failures.headOption.foreach(e => throw e)
+      } finally pool.shutdown()
+    }
 
   /** The SELF-MAINTAINING admission gate — the full service loop in one
     * call: the corpus index artifacts are built once
@@ -174,11 +273,11 @@ object CorpusStream {
     * previous version committed, never a mixed or destroyed one; family
     * order puts the admission index LAST, see the snapshot block below);
     * on driver restart call [[loadMaintained]] with the same root and key
-    * arguments BEFORE starting the gate. (The per-family save/load
-    * calls — [[graft.extra.Dedup.saveIndex]]/`savePairs`/`saveGramIndex`,
-    * [[graft.ingest.TermStats.saveTermFreqs]],
-    * [[graft.extra.Multimodal.saveFeatures]] and their loads — remain the
-    * manual form for custom cadences.)
+    * arguments BEFORE starting the gate. (Each family's store —
+    * [[graft.extra.Dedup.indexStore]], `pairStore`, `gramStore`,
+    * [[graft.ingest.TermStats.tfStore]],
+    * [[graft.extra.Multimodal.featureStore]] — saves and loads one key by
+    * hand, the manual form for custom cadences.)
     *
     * What the stream must then re-deliver depends on n. With `n = 1`
     * (snapshot every batch — the LOSSLESS mode) resuming from the
@@ -197,111 +296,6 @@ object CorpusStream {
     * (same batch-id sequence); a redeploy from a NEW checkpoint location
     * (the re-submission path) needs a new writerId as above.
     */
-  /** Per-family snapshot subdirectory under a gate snapshot `root` —
-    * shared by the gate's periodic saves and [[loadMaintained]], so the
-    * restart recipe never re-derives the mapping by hand. Cache keys can
-    * hold path separators and '#', so the directory name is a sanitized
-    * tail of the key (readable) plus a SHA-256 prefix of the full key
-    * (collision guard — two keys sharing a 40-char sanitized tail must
-    * still map apart, or a restore would cross-load one family's parquet
-    * into another's artifact; 48 bits of cryptographic hash make that
-    * effectively impossible, where the 32-bit String.hashCode it replaces
-    * collides for trivially constructible key pairs).
-    */
-  private def snapDir(root: String, kind: String, key: String): String = {
-    val tail = key.takeRight(40).replaceAll("[^A-Za-z0-9._-]", "_")
-    val sha = java.security.MessageDigest.getInstance("SHA-256")
-      .digest(key.getBytes("UTF-8"))
-      .take(6).map(b => f"$b%02x").mkString
-    s"$root/$kind/$tail-$sha"
-  }
-
-  /** The pre-round-16 directory name for the same family (32-bit
-    * String.hashCode suffix). Saves never write it anymore; loads fall
-    * back to it so snapshot roots written before the SHA rename still
-    * restore instead of silently rebuilding from scratch (ADVICE r15).
-    */
-  private def snapDirLegacy(root: String, kind: String, key: String): String = {
-    val tail = key.takeRight(40).replaceAll("[^A-Za-z0-9._-]", "_")
-    s"$root/$kind/$tail-${Integer.toHexString(key.hashCode)}"
-  }
-
-  /** Restore every maintained family of an [[admitStreamMaintained]] gate
-    * from the snapshot `root` its `snapshotEvery` option wrote — call
-    * BEFORE restarting the gate from its unchanged stream checkpoint, with
-    * the SAME key arguments. Families without a snapshot yet (a gate that
-    * crashed before its first snapshot batch) are skipped: the gate then
-    * rebuilds them from `corpus` exactly as on first start, and the
-    * at-least-once replays from the checkpoint re-fold whatever the
-    * snapshot missed (doc-idempotent appends + the gram ledger, which
-    * travels inside the gram snapshot).
-    */
-  def loadMaintained(spark: org.apache.spark.sql.SparkSession, root: String,
-                     cacheKey: String,
-                     tfCacheKeys: Seq[String] = Nil,
-                     pairsSpecs: Seq[(String, Double, Boolean)] = Nil,
-                     gramSpecs: Seq[(String, Int)] = Nil,
-                     featureCacheKeys: Seq[String] = Nil): Unit = {
-    // committed(), not bare existence: a family root whose only save
-    // crashed mid-write (version dirs, nothing committed) is "no snapshot
-    // yet" and must take the documented skip-and-rebuild path, not fail
-    // the whole restore on a partial directory
-    def has(p: String): Boolean = graft.Snapshots.committed(spark, p)
-    // resolve CURRENT name first, then the legacy hashCode-suffixed name
-    // (snapshots saved before the SHA rename — ADVICE r15); None = no
-    // committed snapshot under either, the documented skip-and-rebuild
-    def resolve(kind: String, key: String): Option[String] =
-      Seq(snapDir(root, kind, key), snapDirLegacy(root, kind, key))
-        .find(has)
-    resolve("idx", cacheKey)
-      .foreach(p => graft.extra.Dedup.loadIndex(spark, p, cacheKey))
-    tfCacheKeys.foreach { k =>
-      resolve("tf", k)
-        .foreach(p => graft.ingest.TermStats.loadTermFreqs(spark, p, k))
-    }
-    pairsSpecs.foreach { case (pk, _, _) =>
-      resolve("pairs", pk)
-        .foreach(p => graft.extra.Dedup.loadPairs(spark, p, pk))
-    }
-    gramSpecs.foreach { case (gk, _) =>
-      resolve("gram", gk)
-        .foreach(p => graft.extra.Dedup.loadGramIndex(spark, p, gk))
-    }
-    featureCacheKeys.foreach { k =>
-      resolve("feat", k)
-        .foreach(p => graft.extra.Multimodal.loadFeatures(spark, p, k))
-    }
-  }
-
-  /** Run independent maintenance `tasks` (appends or saves of distinct
-    * families) as concurrent jobs from a small pool, and return only when
-    * EVERY task has finished: the outer finally releases the admitted pin,
-    * and a sibling still running would lazily recompute the batch-scan +
-    * verdict join from scratch (ADVICE r17). The first failure is then
-    * rethrown as the ORIGINAL exception, not its ExecutionException
-    * envelope, so the stream surfaces the family that failed.
-    */
-  private def inParallel(tasks: Seq[() => Unit]): Unit =
-    if (tasks.size <= 1) tasks.foreach(_())
-    else {
-      val pool = java.util.concurrent.Executors
-        .newFixedThreadPool(math.min(4, tasks.size))
-      try {
-        val futs = tasks.map(t =>
-          pool.submit(new java.util.concurrent.Callable[Unit] {
-            def call(): Unit = t()
-          }))
-        val failures = futs.flatMap { f =>
-          try { f.get(); None }
-          catch {
-            case e: java.util.concurrent.ExecutionException =>
-              Some(Option(e.getCause).getOrElse(e))
-          }
-        }
-        failures.headOption.foreach(e => throw e)
-      } finally pool.shutdown()
-    }
-
   def admitStreamMaintained(stream: DataFrame, corpus: DataFrame,
                             cacheKey: String,
                             idCol: String = "doc_id",
@@ -343,96 +337,77 @@ object CorpusStream {
       case None => _ => ()
       case Some((n, root)) =>
         require(n > 0, s"snapshotEvery interval must be positive, got $n")
+        val spark = corpus.sparkSession
+        val saves = families(cacheKey, tfCacheKeys, pairsSpecs, gramSpecs,
+            featureCacheKeys).map { case (kind, store, keys) =>
+          keys.map(k => () => require(
+            store.save(spark, k, snapDirs(root, kind, k).head),
+            s"snapshotEvery: ${store.what} '$k' is not live in this " +
+              "session — check the gate's cache keys"))
+        }
         id => if ((id + 1) % n == 0) {
-          val spark = corpus.sparkSession
-          def must(ok: Boolean, what: String): Unit = require(ok,
-            s"snapshotEvery: $what is not live in this session — check " +
-              "the gate's cache keys")
-          inParallel(
-            tfCacheKeys.map(k => () => must(graft.ingest.TermStats
-              .saveTermFreqs(spark, k, snapDir(root, "tf", k)), s"TF '$k'")) ++
-            pairsSpecs.map { case (pk, _, _) => () =>
-              must(graft.extra.Dedup.savePairs(spark, pk,
-                snapDir(root, "pairs", pk)), s"pair artifact '$pk'") } ++
-            gramSpecs.map { case (gk, _) => () =>
-              must(graft.extra.Dedup.saveGramIndex(spark, gk,
-                snapDir(root, "gram", gk)), s"gram artifact '$gk'") } ++
-            featureCacheKeys.map(k => () => must(graft.extra.Multimodal
-              .saveFeatures(spark, k, snapDir(root, "feat", k)),
-              s"feature artifact '$k'")))
-          must(graft.extra.Dedup.saveIndex(spark, cacheKey,
-            snapDir(root, "idx", cacheKey)), s"admission index '$cacheKey'")
+          inParallel(saves.init.flatten)
+          saves.last.foreach(_())
         }
     }
-    stream.writeStream.foreachBatch { (batch: DataFrame, id: Long) =>
-      try {
-        val (sigs, toks) =
-          graft.extra.Dedup.trainedIndex(corpus, idCol, textCol, cacheKey)
-        // pinned: the verdict frame feeds the admitted-set derivation AND
-        // the caller's action
-        val v = graft.Caching.temp(graft.extra.Dedup.minhashIncrementalIndexed(
-          sigs, toks, batch, idCol, textCol, threshold))
-        // pinned too: up to five maintenance appends consume the admitted
-        // set below, and each one's eager pin would otherwise re-run the
-        // batch-scan + verdict join per family
-        val admitted = graft.Caching.temp(batch.join(
-          v.filter(org.apache.spark.sql.functions.col("keep") === 1)
-            .select(org.apache.spark.sql.functions.col("doc_id").as(idCol)),
-          idCol))
-        // Maintenance ORDER is the replay contract (foreachBatch is
-        // at-least-once): the derived artifacts (TF, pairs) append FIRST —
-        // both are idempotent per document (each drops already-present
-        // docs), so a replay re-runs them harmlessly — and the ADMISSION
-        // index appends LAST. If a batch dies mid-maintenance, the replay
-        // still sees the docs as un-admitted (the index doesn't hold them
-        // yet), re-admits them, and completes whatever appends were lost;
-        // had the index appended first, a replay would self-match every
-        // doc (keep=0), leaving the derived artifacts missing the batch
-        // forever.
-        // Materialize the admitted pin ONCE before the appends fan out:
-        // concurrent first consumers would otherwise race to fill the lazy
-        // persist, each re-running the batch-scan + verdict join.
-        admitted.count()
-        // The derived-family appends below are INDEPENDENT of one another:
-        // each owns its artifact under its own per-key lock, consumes only
-        // the pinned `admitted` frame, and is doc-idempotent (TF, pairs,
-        // features) or batch-ledgered (gram). Their per-batch cost is
-        // dominated by fixed action latency over tiny frames (OPTIMIZATION_r17.md §3),
-        // so they run as CONCURRENT jobs from a small pool (guide §2.6 —
-        // the scheduler back-fills one family's tail with the next's
-        // tasks) instead of ~5 sequential action round-trips. The replay
-        // contract only orders DERIVED-before-INDEX; joining the pool
-        // before the admission-index append preserves it exactly.
-        inParallel(
-          tfCacheKeys.map(k => () => {
-            graft.ingest.TermStats.appendTermFreqs(admitted, idCol, textCol, k)
-            ()
-          }) ++
-          pairsSpecs.map { case (pk, pt, plsh) => () => {
-            graft.extra.Dedup.appendPairs(admitted, idCol, textCol, pt, pk, plsh)
-            ()
-          } } ++
-          // decoded media features are doc-idempotent like TF/pairs
-          // (deterministic per document; re-delivered docs drop), so they
-          // ride the same pre-index maintenance slot
-          featureCacheKeys.map(k => () => {
-            graft.extra.Multimodal.appendFeatures(admitted, k,
-              idCol = idCol, textCol = textCol)
-            ()
-          }) ++
-          // gram counts are additive, not doc-idempotent: the writer-scoped
-          // batch-id ledger makes the replay a recorded no-op instead
-          gramSpecs.map { case (gk, gMinLen) => () => {
-            graft.extra.Dedup.appendGramAdmitted(admitted, idCol, textCol, gk,
-              minLen = gMinLen, batchId = Some(id), writerId = writerId)
-            ()
-          } })
-        graft.extra.Dedup.appendAdmitted(
-          admitted, idCol, textCol, cacheKey)
-        doSnapshot(id)
-        onVerdict(v, id)
-      } finally graft.Caching.release()
-    }.start()
+    eachBatch(stream) { (batch, id) =>
+      val (sigs, toks) =
+        graft.extra.Dedup.trainedIndex(corpus, idCol, textCol, cacheKey)
+      // pinned: the verdict frame feeds the admitted-set derivation AND
+      // the caller's action
+      val v = graft.Caching.temp(graft.extra.Dedup.minhashIncrementalIndexed(
+        sigs, toks, batch, idCol, textCol, threshold))
+      // pinned too: up to five maintenance appends consume the admitted
+      // set below, and each one's eager pin would otherwise re-run the
+      // batch-scan + verdict join per family
+      val admitted = graft.Caching.temp(batch.join(
+        v.filter(org.apache.spark.sql.functions.col("keep") === 1)
+          .select(org.apache.spark.sql.functions.col("doc_id").as(idCol)),
+        idCol))
+      // Maintenance ORDER is the replay contract (foreachBatch is
+      // at-least-once): the derived artifacts (TF, pairs) append FIRST —
+      // both are idempotent per document (each drops already-present
+      // docs), so a replay re-runs them harmlessly — and the ADMISSION
+      // index appends LAST. If a batch dies mid-maintenance, the replay
+      // still sees the docs as un-admitted (the index doesn't hold them
+      // yet), re-admits them, and completes whatever appends were lost;
+      // had the index appended first, a replay would self-match every
+      // doc (keep=0), leaving the derived artifacts missing the batch
+      // forever.
+      // Materialize the admitted pin ONCE before the appends fan out:
+      // concurrent first consumers would otherwise race to fill the lazy
+      // persist, each re-running the batch-scan + verdict join.
+      admitted.count()
+      // The derived-family appends below are INDEPENDENT of one another:
+      // each owns its artifact under its own per-key lock, consumes only
+      // the pinned `admitted` frame, and is doc-idempotent (TF, pairs,
+      // features) or batch-ledgered (gram). Their per-batch cost is
+      // dominated by fixed action latency over tiny frames (OPTIMIZATION_r17.md §3),
+      // so they run as CONCURRENT jobs from a small pool (guide §2.6 —
+      // the scheduler back-fills one family's tail with the next's
+      // tasks) instead of ~5 sequential action round-trips. The replay
+      // contract only orders DERIVED-before-INDEX; joining the pool
+      // before the admission-index append preserves it exactly.
+      inParallel(
+        tfCacheKeys.map(k => () =>
+          graft.ingest.TermStats.appendTermFreqs(admitted, idCol, textCol, k)) ++
+        pairsSpecs.map { case (pk, pt, plsh) => () => graft.extra.Dedup
+          .appendPairs(admitted, idCol, textCol, pt, pk, plsh) } ++
+        // decoded media features are doc-idempotent like TF/pairs
+        // (deterministic per document; re-delivered docs drop), so they
+        // ride the same pre-index maintenance slot
+        featureCacheKeys.map(k => () => graft.extra.Multimodal.appendFeatures(
+          admitted, k, idCol = idCol, textCol = textCol)) ++
+        // gram counts are additive, not doc-idempotent: the writer-scoped
+        // batch-id ledger makes the replay a recorded no-op instead
+        gramSpecs.map { case (gk, gMinLen) => () =>
+          graft.extra.Dedup.appendGramAdmitted(admitted, idCol, textCol, gk,
+            minLen = gMinLen, batchId = Some(id), writerId = writerId) })
+      graft.extra.Dedup.appendAdmitted(
+        admitted, idCol, textCol, cacheKey)
+      doSnapshot(id)
+      onVerdict(v, id)
+    }
   }
 
   /** [[admitStreamIndexed]] with the gate's per-batch observability row —
@@ -453,13 +428,11 @@ object CorpusStream {
                            threshold: Double = 0.9)
                           (onBatch: (DataFrame, DataFrame, Long) => Unit)
   : StreamingQuery =
-    stream.writeStream.foreachBatch { (batch: DataFrame, id: Long) =>
-      try {
-        val (v, m) = graft.extra.Dedup.minhashIncrementalMonitored(
-          corpusSigs(), corpusToks(), batch, idCol, textCol, threshold)
-        onBatch(v, m, id)
-      } finally graft.Caching.release()
-    }.start()
+    eachBatch(stream) { (batch, id) =>
+      val (v, m) = graft.extra.Dedup.minhashIncrementalMonitored(
+        corpusSigs(), corpusToks(), batch, idCol, textCol, threshold)
+      onBatch(v, m, id)
+    }
 
   /** Streaming application of the learned quality filter
     * ([[graft.extra.Classifier]]) — score every arriving document with a
@@ -474,12 +447,10 @@ object CorpusStream {
                    priorMicro: Long, idCol: String = "doc_id",
                    textCol: String = "text")
                   (onScored: (DataFrame, Long) => Unit): StreamingQuery =
-    stream.writeStream.foreachBatch { (batch: DataFrame, id: Long) =>
-      try onScored(
-        graft.extra.Classifier.scoreWith(batch, idCol, textCol, model(),
-          priorMicro), id)
-      finally graft.Caching.release()
-    }.start()
+    eachBatch(stream) { (batch, id) =>
+      onScored(graft.extra.Classifier.scoreWith(batch, idCol, textCol,
+        model(), priorMicro), id)
+    }
 
   /** Streaming quality gate — the ingest-time twin of the per-document
     * signal operators: every arriving document gets its
@@ -624,37 +595,35 @@ object CorpusStream {
         // separate signal with its own thresholds, handed to the caller
         // raw. Equivalence to the batch sweeps is spec-locked (DedupSpec /
         // EventWindowsSpec).
-        slim.writeStream.foreachBatch { (batch: DataFrame, id: Long) =>
-          try {
-            val b = graft.Caching.temp(batch)
-            var v = graft.extra.Dedup.minhashIncrementalIndexed(
-              corpusSigs(), corpusToks(), b, idCol, textCol, threshold)
-            corpusGrams.foreach { grams =>
-              val stats = graft.extra.Dedup.spanStats(
-                graft.extra.Dedup.dupSubstringSpansIndexed(
-                  grams(), b, idCol, textCol, minSpanLen))
-              v = v.join(stats, Seq("doc_id"), "left")
-                .withColumn("n_dup_spans",
-                  coalesce(col("n_dup_spans"), lit(0L)))
-                .withColumn("n_dup_tokens",
-                  coalesce(col("n_dup_tokens"), lit(0L)))
-            }
-            benchGrams.foreach { grams =>
-              val stats = graft.extra.Dedup.spanStats(
-                graft.extra.Dedup.contaminationSpans(
-                  b, idCol, textCol, grams(), minContamLen))
-                .select(col("doc_id"),
-                  col("n_dup_spans").as("n_contam_spans"),
-                  col("n_dup_tokens").as("n_contam_tokens"))
-              v = v.join(stats, Seq("doc_id"), "left")
-                .withColumn("n_contam_spans",
-                  coalesce(col("n_contam_spans"), lit(0L)))
-                .withColumn("n_contam_tokens",
-                  coalesce(col("n_contam_tokens"), lit(0L)))
-            }
-            onVerdict(v, id)
-          } finally graft.Caching.release()
-        }.start()
+        eachBatch(slim) { (batch, id) =>
+          val b = graft.Caching.temp(batch)
+          var v = graft.extra.Dedup.minhashIncrementalIndexed(
+            corpusSigs(), corpusToks(), b, idCol, textCol, threshold)
+          corpusGrams.foreach { grams =>
+            val stats = graft.extra.Dedup.spanStats(
+              graft.extra.Dedup.dupSubstringSpansIndexed(
+                grams(), b, idCol, textCol, minSpanLen))
+            v = v.join(stats, Seq("doc_id"), "left")
+              .withColumn("n_dup_spans",
+                coalesce(col("n_dup_spans"), lit(0L)))
+              .withColumn("n_dup_tokens",
+                coalesce(col("n_dup_tokens"), lit(0L)))
+          }
+          benchGrams.foreach { grams =>
+            val stats = graft.extra.Dedup.spanStats(
+              graft.extra.Dedup.contaminationSpans(
+                b, idCol, textCol, grams(), minContamLen))
+              .select(col("doc_id"),
+                col("n_dup_spans").as("n_contam_spans"),
+                col("n_dup_tokens").as("n_contam_tokens"))
+            v = v.join(stats, Seq("doc_id"), "left")
+              .withColumn("n_contam_spans",
+                coalesce(col("n_contam_spans"), lit(0L)))
+              .withColumn("n_contam_tokens",
+                coalesce(col("n_contam_tokens"), lit(0L)))
+          }
+          onVerdict(v, id)
+        }
     }
   }
 }

@@ -4,9 +4,9 @@ import graft.extra.Dedup
 import graft.ingest.TermStats
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The artifact RESTART story ([[TermStats.saveTermFreqs]]/`loadTermFreqs`,
-  * [[Dedup.savePairs]]/`loadPairs`): a maintained session artifact written
-  * to parquet and reloaded in a (simulated) fresh session must serve the
+/** The artifact RESTART story (save/load of [[TermStats.tfStore]],
+  * [[Dedup.pairStore]] and the other stores): a maintained session artifact
+  * written to parquet and reloaded in a (simulated) fresh session must serve the
   * identical table AND keep accepting O(batch) appends exactly as the
   * pre-restart artifact did — the appends-after-load case is the one a
   * naive snapshot (pairs only, no probe/toks state) would silently break.
@@ -56,11 +56,11 @@ class ArtifactPersistenceSpec extends AnyFunSuite {
       assert(TermStats.appendTermFreqs(df(b1Rows), "doc_id", "text", key))
       val before = tfSet(
         TermStats.trainedTermFreqs(df(corpusRows), "doc_id", "text", key, n = n))
-      assert(TermStats.saveTermFreqs(spark, key, path))
+      assert(TermStats.tfStore.save(spark, key, path))
       // simulated restart: the in-session artifact is gone
       TermStats.resetTermFreqs(spark, key)
-      assert(TermStats.tfSegmentCount(spark, key) == 0)
-      val loaded = tfSet(TermStats.loadTermFreqs(spark, path, key))
+      assert(TermStats.tfStore.segmentCount(spark, key) == 0)
+      val loaded = tfSet(TermStats.tfStore.load(spark, path, key))
       assert(loaded == before, s"n=$n: loaded table differs from saved")
       // maintenance continues at the SAVED n-gram order
       assert(TermStats.appendTermFreqs(df(b2Rows), "doc_id", "text", key))
@@ -80,12 +80,12 @@ class ArtifactPersistenceSpec extends AnyFunSuite {
     "shadow a live artifact") {
     val key = "persist-tf-guards"
     TermStats.resetTermFreqs(spark, key)
-    assert(!TermStats.saveTermFreqs(spark, key, tmp("tfguard")))
+    assert(!TermStats.tfStore.save(spark, key, tmp("tfguard")))
     val path = tmp("tfguard2")
     TermStats.trainedTermFreqs(df(corpusRows), "doc_id", "text", key)
-    assert(TermStats.saveTermFreqs(spark, key, path))
+    assert(TermStats.tfStore.save(spark, key, path))
     intercept[IllegalArgumentException] {
-      TermStats.loadTermFreqs(spark, path, key)
+      TermStats.tfStore.load(spark, path, key)
     }
     TermStats.resetTermFreqs(spark, key)
   }
@@ -101,10 +101,10 @@ class ArtifactPersistenceSpec extends AnyFunSuite {
       assert(Dedup.appendPairs(df(b1Rows), "doc_id", "text", 0.8, key, lsh))
       val before = pairSet(
         Dedup.trainedPairs(corpus, "doc_id", "text", 0.8, key, lsh))
-      assert(Dedup.savePairs(spark, key, path))
+      assert(Dedup.pairStore.save(spark, key, path))
       Dedup.resetPairs(spark, key)
-      assert(Dedup.pairSegmentCount(spark, key) == 0)
-      val loaded = pairSet(Dedup.loadPairs(spark, path, key))
+      assert(Dedup.pairStore.segmentCount(spark, key) == 0)
+      val loaded = pairSet(Dedup.pairStore.load(spark, path, key).pairs)
       assert(loaded == before, s"lsh=$lsh: loaded pairs differ from saved")
       // the probe/toks state came back too: an append after the restart
       // produces exactly the fresh-build pair set over the grown corpus
@@ -132,12 +132,12 @@ class ArtifactPersistenceSpec extends AnyFunSuite {
       try {
         Dedup.trainedPairs(corpus, "doc_id", "text", 0.8, key, lsh)
         assert(Dedup.appendPairs(df(b1Rows), "doc_id", "text", 0.8, key, lsh))
-        val segs = Dedup.pairSegmentsOf(spark, key)
+        val segs = Dedup.pairStore.segments(spark, key)
         val pairs = segs.map(_.pairs).reduce(_ unionByName _)
         val toks = segs.map(_.toks).reduce(_ unionByName _)
         // today's layout: the probe is derivable, so it is not written
         val path = tmp("pairlayout")
-        assert(Dedup.savePairs(spark, key, path))
+        assert(Dedup.pairStore.save(spark, key, path))
         val parts = new java.io.File(Snapshots.resolveDir(spark, path))
           .listFiles().filter(_.isDirectory).map(_.getName).toSet
         assert(parts == Set("pairs", "toks"), s"snapshot parts: $parts")
@@ -149,7 +149,7 @@ class ArtifactPersistenceSpec extends AnyFunSuite {
             else toks.select(explode(col("toks")).as("term"), col("doc_id")))))
         for (p <- Seq(path, legacy)) {
           Dedup.resetPairs(spark, key)
-          Dedup.loadPairs(spark, p, key)
+          Dedup.pairStore.load(spark, p, key)
           assert(Dedup.appendPairs(df(b2Rows), "doc_id", "text", 0.8, key, lsh))
           val fresh = pairSet(
             if (lsh) Dedup.minhashLshPairs(all, "doc_id", "text", 0.8)
@@ -169,7 +169,7 @@ class ArtifactPersistenceSpec extends AnyFunSuite {
       TermStats.trainedTermFreqs(df(corpusRows), "doc_id", "text", key)
       for ((id, text) <- b1Rows ++ b2Rows)
         assert(TermStats.appendTermFreqs(df(Seq(id -> text)), "doc_id", "text", key))
-      val tf = TermStats.tfSegmentsOf(spark, key).reduce(_ unionByName _)
+      val tf = TermStats.tfStore.segments(spark, key).reduce(_ unionByName _)
       assert(tf.rdd.getNumPartitions > 1, "the union must span partitions")
       assert(Snapshots.filesFor(tf) == 1)
       // the split size is the target: a tiny one leaves every partition
@@ -179,7 +179,7 @@ class ArtifactPersistenceSpec extends AnyFunSuite {
       try assert(Snapshots.filesFor(tf) >= tf.rdd.getNumPartitions)
       finally spark.conf.set("spark.sql.files.maxPartitionBytes", split0)
       val path = tmp("tffiles")
-      assert(TermStats.saveTermFreqs(spark, key, path))
+      assert(TermStats.tfStore.save(spark, key, path))
       val files = new java.io.File(Snapshots.resolveDir(spark, path), "tf")
         .list().filter(_.endsWith(".parquet"))
       assert(files.length == 1, s"tf part written as ${files.length} files")
@@ -198,9 +198,9 @@ class ArtifactPersistenceSpec extends AnyFunSuite {
     assert(Dedup.appendAdmitted(df(b1Rows), "doc_id", "text", key))
     val (sig0, tok0) = Dedup.trainedIndex(df(corpusRows), "doc_id", "text", key)
     val (sigBefore, tokBefore) = (rowSet(sig0), rowSet(tok0))
-    assert(Dedup.saveIndex(spark, key, path))
+    assert(Dedup.indexStore.save(spark, key, path))
     Dedup.resetIndex(spark, key)
-    val (sig1, tok1) = Dedup.loadIndex(spark, path, key)
+    val (sig1, tok1) = Dedup.indexStore.load(spark, path, key)
     assert(rowSet(sig1) == sigBefore && rowSet(tok1) == tokBefore)
     // maintenance continues: the appended docs join the served index
     assert(Dedup.appendAdmitted(df(b2Rows), "doc_id", "text", key))
@@ -224,9 +224,9 @@ class ArtifactPersistenceSpec extends AnyFunSuite {
       .groupBy("gh").sum("n_docs", "n_occ").collect()
       .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2)))).toMap
     val before = served
-    assert(Dedup.saveGramIndex(spark, key, path))
+    assert(Dedup.gramStore.save(spark, key, path))
     Dedup.resetIndex(spark, key) // wipes the in-session ledger too
-    val loaded = Dedup.loadGramIndex(spark, path, key)
+    val loaded = Dedup.gramStore.load(spark, path, key)
     assert(loaded.count() > 0)
     assert(served == before, "loaded gram counts differ from saved")
     // REPLAY of the pre-crash batch: without the persisted ledger this
@@ -251,9 +251,9 @@ class ArtifactPersistenceSpec extends AnyFunSuite {
     graft.extra.Multimodal.resetFeatures(spark, key)
     graft.extra.Multimodal.trainedFeatures(df(corpusRows), key)
     val before = rowSet(graft.extra.Multimodal.trainedFeatures(df(corpusRows), key))
-    assert(graft.extra.Multimodal.saveFeatures(spark, key, path))
+    assert(graft.extra.Multimodal.featureStore.save(spark, key, path))
     graft.extra.Multimodal.resetFeatures(spark, key)
-    assert(rowSet(graft.extra.Multimodal.loadFeatures(spark, path, key)) == before)
+    assert(rowSet(graft.extra.Multimodal.featureStore.load(spark, path, key)) == before)
     assert(graft.extra.Multimodal.appendFeatures(df(b1Rows), key))
     val grown = rowSet(graft.extra.Multimodal.trainedFeatures(df(corpusRows), key))
     graft.extra.Multimodal.resetFeatures(spark, "persist-feats-fresh")
@@ -280,11 +280,11 @@ class ArtifactPersistenceSpec extends AnyFunSuite {
     TermStats.trainedTermFreqs(df(corpusRows), "doc_id", "text", key)
     val expect = tfSet(
       TermStats.trainedTermFreqs(df(corpusRows), "doc_id", "text", key))
-    assert(TermStats.saveTermFreqs(spark, key, path)) // v1
+    assert(TermStats.tfStore.save(spark, key, path)) // v1
     TermStats.resetTermFreqs(spark, key)
-    val loaded = TermStats.loadTermFreqs(spark, path, key) // reads v1
-    assert(TermStats.saveTermFreqs(spark, key, path)) // v2: prunes v1
-    assert(TermStats.saveTermFreqs(spark, key, path)) // v3: prunes v2
+    val loaded = TermStats.tfStore.load(spark, path, key) // reads v1
+    assert(TermStats.tfStore.save(spark, key, path)) // v2: prunes v1
+    assert(TermStats.tfStore.save(spark, key, path)) // v3: prunes v2
     assert(tfSet(loaded) == expect,
       "loaded frame unreadable or changed after its version was pruned")
     TermStats.resetTermFreqs(spark, key)
@@ -297,11 +297,11 @@ class ArtifactPersistenceSpec extends AnyFunSuite {
     graft.extra.Multimodal.trainedFeatures(df(corpusRows), fkey)
     val fexpect = rowSet(
       graft.extra.Multimodal.trainedFeatures(df(corpusRows), fkey))
-    assert(graft.extra.Multimodal.saveFeatures(spark, fkey, fpath))
+    assert(graft.extra.Multimodal.featureStore.save(spark, fkey, fpath))
     graft.extra.Multimodal.resetFeatures(spark, fkey)
-    val floaded = graft.extra.Multimodal.loadFeatures(spark, fpath, fkey)
-    assert(graft.extra.Multimodal.saveFeatures(spark, fkey, fpath))
-    assert(graft.extra.Multimodal.saveFeatures(spark, fkey, fpath))
+    val floaded = graft.extra.Multimodal.featureStore.load(spark, fpath, fkey)
+    assert(graft.extra.Multimodal.featureStore.save(spark, fkey, fpath))
+    assert(graft.extra.Multimodal.featureStore.save(spark, fkey, fpath))
     assert(rowSet(floaded) == fexpect,
       "loaded feature frame unreadable after its version was pruned")
     graft.extra.Multimodal.resetFeatures(spark, fkey)
@@ -311,12 +311,12 @@ class ArtifactPersistenceSpec extends AnyFunSuite {
     "shadow a live artifact") {
     val key = "persist-pairs-guards"
     Dedup.resetPairs(spark, key)
-    assert(!Dedup.savePairs(spark, key, tmp("pairguard")))
+    assert(!Dedup.pairStore.save(spark, key, tmp("pairguard")))
     val path = tmp("pairguard2")
     Dedup.trainedPairs(df(corpusRows), "doc_id", "text", 0.8, key)
-    assert(Dedup.savePairs(spark, key, path))
+    assert(Dedup.pairStore.save(spark, key, path))
     intercept[IllegalArgumentException] {
-      Dedup.loadPairs(spark, path, key)
+      Dedup.pairStore.load(spark, path, key)
     }
     Dedup.resetPairs(spark, key)
   }
@@ -329,19 +329,19 @@ class ArtifactPersistenceSpec extends AnyFunSuite {
     TermStats.trainedTermFreqs(df(corpusRows), "doc_id", "text", key)
     val v1 = tfSet(TermStats.trainedTermFreqs(
       df(corpusRows), "doc_id", "text", key))
-    assert(TermStats.saveTermFreqs(spark, key, path))
+    assert(TermStats.tfStore.save(spark, key, path))
     // simulate a save that crashed mid-write: a HIGHER version directory
     // with a plausible part but NO _DONE flag and NO marker flip
     val partial = new java.io.File(path, "v99")
     assert(partial.mkdirs())
     spark.range(3).toDF("junk").write.parquet(s"$path/v99/tf")
     TermStats.resetTermFreqs(spark, key)
-    assert(tfSet(TermStats.loadTermFreqs(spark, path, key)) == v1,
+    assert(tfSet(TermStats.tfStore.load(spark, path, key)) == v1,
       "load after a crashed save must serve the committed snapshot")
     // a lost marker falls back to the highest COMPLETE version, still v1's
     TermStats.resetTermFreqs(spark, key)
     assert(new java.io.File(path, "_LATEST").delete())
-    assert(tfSet(TermStats.loadTermFreqs(spark, path, key)) == v1,
+    assert(tfSet(TermStats.tfStore.load(spark, path, key)) == v1,
       "marker-less resolution must pick the complete version, not v99")
     // grow the artifact and re-save: the new snapshot wins and old
     // versions (and the crashed partial) are pruned
@@ -349,9 +349,9 @@ class ArtifactPersistenceSpec extends AnyFunSuite {
     val v2 = tfSet(TermStats.trainedTermFreqs(
       df(corpusRows), "doc_id", "text", key))
     assert(v2 != v1)
-    assert(TermStats.saveTermFreqs(spark, key, path))
+    assert(TermStats.tfStore.save(spark, key, path))
     TermStats.resetTermFreqs(spark, key)
-    assert(tfSet(TermStats.loadTermFreqs(spark, path, key)) == v2,
+    assert(tfSet(TermStats.tfStore.load(spark, path, key)) == v2,
       "re-save must serve the superseding snapshot")
     val versions = new java.io.File(path).listFiles()
       .filter(f => f.isDirectory && f.getName.matches("v\\d+"))
@@ -430,13 +430,13 @@ class ArtifactPersistenceSpec extends AnyFunSuite {
     // String.hashCode suffix instead of the SHA-256 prefix)
     val tail = key.takeRight(40).replaceAll("[^A-Za-z0-9._-]", "_")
     val legacy = s"$root/tf/$tail-${Integer.toHexString(key.hashCode)}"
-    assert(TermStats.saveTermFreqs(spark, key, legacy))
+    assert(TermStats.tfStore.save(spark, key, legacy))
     // simulated restart: the current-name directory does not exist, so the
     // resolver must find the legacy one instead of silently rebuilding
     TermStats.resetTermFreqs(spark, key)
     graft.streaming.CorpusStream.loadMaintained(spark, root, "legacy-idx",
       tfCacheKeys = Seq(key))
-    assert(TermStats.tfSegmentCount(spark, key) > 0,
+    assert(TermStats.tfStore.segmentCount(spark, key) > 0,
       "legacy-named snapshot must restore, not silently rebuild")
     assert(tfSet(TermStats.trainedTermFreqs(
       corpus, "doc_id", "text", key)) == want)
@@ -458,7 +458,7 @@ class ArtifactPersistenceSpec extends AnyFunSuite {
     TermStats.resetTermFreqs(spark, "crashonly-tf")
     graft.streaming.CorpusStream.loadMaintained(spark, root, "crashonly-idx",
       tfCacheKeys = Seq("crashonly-tf"))
-    assert(TermStats.tfSegmentCount(spark, "crashonly-tf") == 0,
+    assert(TermStats.tfStore.segmentCount(spark, "crashonly-tf") == 0,
       "nothing must be loaded from an uncommitted root")
   }
 
@@ -536,12 +536,12 @@ class ArtifactPersistenceSpec extends AnyFunSuite {
     val want = tfSet(TermStats.trainedTermFreqs(
       df(corpusRows), "doc_id", "text", key))
     // write the pre-versioning layout by hand: parts directly under root
-    TermStats.tfSegmentsOf(spark, key).reduce(_ unionByName _)
+    TermStats.tfStore.segments(spark, key).reduce(_ unionByName _)
       .write.parquet(s"$path/tf")
     import spark.implicits._
     Seq(1).toDF("n").write.parquet(s"$path/meta")
     TermStats.resetTermFreqs(spark, key)
-    assert(tfSet(TermStats.loadTermFreqs(spark, path, key)) == want)
+    assert(tfSet(TermStats.tfStore.load(spark, path, key)) == want)
     TermStats.resetTermFreqs(spark, key)
   }
 }

@@ -86,7 +86,7 @@ class CheckpointPinSpec extends AnyFunSuite {
       val key = "spec#ckpt_reclaim"
       Dedup.resetIndex(spark, key)
       Dedup.trainedIndex(corpus, "doc_id", "text", key)
-      def segFiles(): Seq[String] = Dedup.segmentsOf(spark, key)
+      def segFiles(): Seq[String] = Dedup.indexStore.segments(spark, key)
         .flatMap { case (s, t) =>
           Caching.checkpointFileOf(s).toSeq ++ Caching.checkpointFileOf(t).toSeq
         }
@@ -101,7 +101,7 @@ class CheckpointPinSpec extends AnyFunSuite {
       // every superseded segment's files must be deleted
       assert(Dedup.appendAdmitted(slice(80, 100, 20000), "doc_id", "text", key,
         maxSegments = 2))
-      assert(Dedup.segmentCount(spark, key) == 1)
+      assert(Dedup.indexStore.segmentCount(spark, key) == 1)
       val gen2 = segFiles()
       assert(gen2.size == 2 && gen2.forall(existsFile),
         "compacted segment must be reliably checkpointed")
@@ -128,7 +128,7 @@ class CheckpointPinSpec extends AnyFunSuite {
       val key = "spec#ckpt_gram_reclaim"
       Dedup.resetIndex(spark, key)
       Dedup.trainedGramIndex(corpus, "doc_id", "text", key, 5)
-      def segFiles(): Seq[String] = Dedup.gramSegmentsOf(spark, key)
+      def segFiles(): Seq[String] = Dedup.gramStore.segments(spark, key)
         .flatMap(Caching.checkpointFileOf)
       assert(Dedup.appendGramAdmitted(slice(60, 80, 10000), "doc_id", "text",
         key, 5, maxSegments = 2))
@@ -136,7 +136,7 @@ class CheckpointPinSpec extends AnyFunSuite {
       assert(gen1.size == 2 && gen1.forall(existsFile))
       assert(Dedup.appendGramAdmitted(slice(80, 100, 20000), "doc_id", "text",
         key, 5, maxSegments = 2))
-      assert(Dedup.gramSegmentCount(spark, key) == 1)
+      assert(Dedup.gramStore.segmentCount(spark, key) == 1)
       val gen2 = segFiles()
       assert(gen2.forall(existsFile))
       assert(gen1.forall(f => !existsFile(f)),
@@ -251,17 +251,17 @@ class CheckpointPinSpec extends AnyFunSuite {
           .select(boom(col("doc_id"), col("text")).as("doc_id"), col("text"))
         assertOriginal(intercept[Throwable](
           Dedup.appendAdmitted(admitted, "doc_id", "text", ik)), "injected-empty")
-        assert(Dedup.segmentCount(spark, ik) == 1)
+        assert(Dedup.indexStore.segmentCount(spark, ik) == 1)
         // pair artifact: the corpus probe's files vanish, so the verify
         // fails after the batch arrays are pinned and while the batch
         // postings pin completes
-        val probe = Dedup.pairSegmentsOf(spark, pk).head.probe.get
+        val probe = Dedup.pairStore.segments(spark, pk).head.probe.get
         val probeFile = new Path(Caching.checkpointFileOf(probe).get)
         fs(probeFile).delete(probeFile, true)
         val e = intercept[Throwable](
           Dedup.appendPairs(batch, "doc_id", "text", 0.9, pk))
         assert(!e.isInstanceOf[java.util.concurrent.CompletionException])
-        assert(Dedup.pairSegmentCount(spark, pk) == 1)
+        assert(Dedup.pairStore.segmentCount(spark, pk) == 1)
         quiesce()
       } finally {
         Dedup.resetIndex(spark, ik)

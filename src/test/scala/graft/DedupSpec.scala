@@ -632,7 +632,7 @@ class DedupSpec extends AnyFunSuite {
     // O(batch) shape: the append stored a NEW segment and left the corpus
     // segment's frames untouched (reference identity — had the append
     // re-unioned and re-checkpointed the corpus, these would be new frames)
-    val segs = Dedup.segmentsOf(spark, key)
+    val segs = Dedup.indexStore.segments(spark, key)
     assert(segs.size == 2, s"expected 2 segments after 1 append, got ${segs.size}")
     assert((segs.head._1 eq s1) && (segs.head._2 eq t1),
       "append must not re-materialize the pre-existing corpus segment")
@@ -655,10 +655,10 @@ class DedupSpec extends AnyFunSuite {
     // maxSegments=2: the second append must trigger a fold to ONE segment
     assert(Dedup.appendAdmitted(slice(60, 80, 10000), "doc_id", "text", key,
       maxSegments = 2))
-    assert(Dedup.segmentCount(spark, key) == 2)
+    assert(Dedup.indexStore.segmentCount(spark, key) == 2)
     assert(Dedup.appendAdmitted(slice(80, 100, 20000), "doc_id", "text", key,
       maxSegments = 2))
-    assert(Dedup.segmentCount(spark, key) == 1,
+    assert(Dedup.indexStore.segmentCount(spark, key) == 1,
       "append past maxSegments must compact to a single segment")
     val (s, t) = Dedup.trainedIndex(corpus, "doc_id", "text", key)
     val batch = slice(100, 130, 30000)
@@ -710,7 +710,7 @@ class DedupSpec extends AnyFunSuite {
     assert(Dedup.appendGramAdmitted(slice(100, 120, 10000),
       "doc_id", "text", key, 5))
     // O(batch) shape: corpus segment untouched (reference identity)
-    val segs = Dedup.gramSegmentsOf(spark, key)
+    val segs = Dedup.gramStore.segments(spark, key)
     assert(segs.size == 2 && (segs.head eq g1),
       "append must store only a new batch segment")
     // the grown artifact probes exactly like a fresh build over the union
@@ -729,9 +729,9 @@ class DedupSpec extends AnyFunSuite {
     // compaction sums counts exactly (maxSegments=2 forces the fold)
     assert(Dedup.appendGramAdmitted(batch2, "doc_id", "text", key, 5,
       maxSegments = 2))
-    assert(Dedup.gramSegmentCount(spark, key) == 1,
+    assert(Dedup.gramStore.segmentCount(spark, key) == 1,
       "append past maxSegments must compact to one segment")
-    val compacted = Dedup.gramSegmentsOf(spark, key).head.collect()
+    val compacted = Dedup.gramStore.segments(spark, key).head.collect()
       .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2)))).toMap
     val fresh = Dedup.gramStats(grown.unionByName(batch2),
       "doc_id", "text", 5).collect()
@@ -743,7 +743,7 @@ class DedupSpec extends AnyFunSuite {
     // batchId appends, the SAME batchId from a DIFFERENT writer appends
     // (per-checkpoint batch ids collide across shards), and resetIndex
     // clears the ledger with the artifact
-    def servedGh() = Dedup.gramSegmentsOf(spark, key)
+    def servedGh() = Dedup.gramStore.segments(spark, key)
       .reduce(_ unionByName _).collect()
       .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2))))
       .groupBy(_._1).map { case (gh, rs) =>
@@ -751,29 +751,29 @@ class DedupSpec extends AnyFunSuite {
     val batch3 = slice(160, 170, 30000)
     assert(Dedup.appendGramAdmitted(batch3, "doc_id", "text", key, 5,
       batchId = Some(7L)))
-    val postAppend = Dedup.gramSegmentCount(spark, key)
+    val postAppend = Dedup.gramStore.segmentCount(spark, key)
     val ghAfterAppend = servedGh()
     assert(Dedup.appendGramAdmitted(batch3, "doc_id", "text", key, 5,
       batchId = Some(7L)), "replay reports success (already applied)")
-    assert(Dedup.gramSegmentCount(spark, key) == postAppend,
+    assert(Dedup.gramStore.segmentCount(spark, key) == postAppend,
       "replayed batchId must not append a segment")
     assert(servedGh() == ghAfterAppend,
       "replayed batchId must leave the served per-gh counts unchanged")
     assert(Dedup.appendGramAdmitted(slice(170, 175, 40000), "doc_id", "text",
       key, 5, batchId = Some(8L)))
-    assert(Dedup.gramSegmentCount(spark, key) == postAppend + 1)
+    assert(Dedup.gramStore.segmentCount(spark, key) == postAppend + 1)
     assert(Dedup.appendGramAdmitted(slice(175, 180, 50000), "doc_id", "text",
       key, 5, batchId = Some(7L), writerId = "shardB"),
       "same batchId from a different writer is a REAL batch, not a replay")
-    assert(Dedup.gramSegmentCount(spark, key) == postAppend + 2,
+    assert(Dedup.gramStore.segmentCount(spark, key) == postAppend + 2,
       "a second writer's colliding batch id must still append")
     Dedup.resetIndex(spark, key)
     // after a reset + rebuild, the old stream's batch ids must not no-op
     Dedup.trainedGramIndex(corpus, "doc_id", "text", key, 5)
-    val n0 = Dedup.gramSegmentCount(spark, key)
+    val n0 = Dedup.gramStore.segmentCount(spark, key)
     assert(Dedup.appendGramAdmitted(batch3, "doc_id", "text", key, 5,
       batchId = Some(7L)), "fresh artifact, old id: must apply")
-    assert(Dedup.gramSegmentCount(spark, key) == n0 + 1,
+    assert(Dedup.gramStore.segmentCount(spark, key) == n0 + 1,
       "stale ledger entries must not survive resetIndex")
     Dedup.resetIndex(spark, key)
   }

@@ -89,7 +89,7 @@ class GateBudgetSpec extends AnyFunSuite {
         s"a plain batch ran $plain jobs (budget $PlainBatchJobs; per batch: $counts)")
       assert(snapshot <= SnapshotBatchJobs,
         s"a snapshot batch ran $snapshot jobs (budget $SnapshotBatchJobs; per batch: $counts)")
-      assert(Dedup.pairSegmentCount(spark, pKey) == 4,
+      assert(Dedup.pairStore.segmentCount(spark, pKey) == 4,
         "every batch must have appended pairs")
     } finally {
       spark.sparkContext.removeSparkListener(listener)

@@ -440,9 +440,9 @@ class MultimodalSpec extends AnyFunSuite {
     val fresh = rowsOf(Multimodal.trainedFeatures(docs, "spec#media:fresh"))
     assert(grown == fresh, s"grown ${grown.size} vs fresh ${fresh.size}")
     // full replay: segment count and served rows unchanged
-    val segsBefore = Multimodal.featureSegmentCount(spark, "spec#media:append")
+    val segsBefore = Multimodal.featureStore.segmentCount(spark, "spec#media:append")
     assert(Multimodal.appendFeatures(docs, "spec#media:append"))
-    assert(Multimodal.featureSegmentCount(spark, "spec#media:append") == segsBefore)
+    assert(Multimodal.featureStore.segmentCount(spark, "spec#media:append") == segsBefore)
     assert(rowsOf(Multimodal.trainedFeatures(
       part(baseIds), "spec#media:append")) == fresh)
     // forced compaction (maxSegments = 1) is exact
@@ -452,7 +452,7 @@ class MultimodalSpec extends AnyFunSuite {
       maxSegments = 1))
     assert(Multimodal.appendFeatures(part(b2Ids), "spec#media:compact",
       maxSegments = 1))
-    assert(Multimodal.featureSegmentCount(spark, "spec#media:compact") == 1)
+    assert(Multimodal.featureStore.segmentCount(spark, "spec#media:compact") == 1)
     assert(rowsOf(Multimodal.trainedFeatures(
       part(baseIds), "spec#media:compact")) == fresh)
     Multimodal.resetFeatures(spark, "spec#media:append")

@@ -86,10 +86,10 @@ class PairMaintainSpec extends AnyFunSuite {
     val key = "pairspec-segs"
     Dedup.resetPairs(spark, key)
     Dedup.trainedPairs(df(corpusRows), "doc_id", "text", 0.8, key)
-    val before = Dedup.pairSegmentsOf(spark, key)
-    assert(before.size == 1 && Dedup.pairSegmentCount(spark, key) == 1)
+    val before = Dedup.pairStore.segments(spark, key)
+    assert(before.size == 1 && Dedup.pairStore.segmentCount(spark, key) == 1)
     assert(Dedup.appendPairs(df(batchRows), "doc_id", "text", 0.8, key))
-    val after = Dedup.pairSegmentsOf(spark, key)
+    val after = Dedup.pairStore.segments(spark, key)
     assert(after.size == 2)
     assert(after.head.pairs eq before.head.pairs)
     assert(after.head.toks eq before.head.toks)
@@ -108,9 +108,9 @@ class PairMaintainSpec extends AnyFunSuite {
     val b2 = df(batchRows.drop(2))
     Dedup.trainedPairs(corpus, "doc_id", "text", 0.8, key)
     assert(Dedup.appendPairs(b1, "doc_id", "text", 0.8, key, maxSegments = 2))
-    assert(Dedup.pairSegmentCount(spark, key) == 2)
+    assert(Dedup.pairStore.segmentCount(spark, key) == 2)
     assert(Dedup.appendPairs(b2, "doc_id", "text", 0.8, key, maxSegments = 2))
-    assert(Dedup.pairSegmentCount(spark, key) == 1, "3 > 2 must compact")
+    assert(Dedup.pairStore.segmentCount(spark, key) == 1, "3 > 2 must compact")
     val grown = Dedup.trainedPairs(corpus, "doc_id", "text", 0.8, key)
     val fresh = Dedup.jaccardPairs(
       corpus.unionByName(b1).unionByName(b2), "doc_id", "text", 0.8)
@@ -156,10 +156,10 @@ class PairMaintainSpec extends AnyFunSuite {
     Dedup.trainedPairs(corpus, "doc_id", "text", 0.8, key)
     assert(Dedup.appendPairs(batch, "doc_id", "text", 0.8, key))
     val grown = pairSet(Dedup.trainedPairs(corpus, "doc_id", "text", 0.8, key))
-    val segs = Dedup.pairSegmentCount(spark, key)
+    val segs = Dedup.pairStore.segmentCount(spark, key)
     // full replay: no new segment, no self-pairs, artifact unchanged
     assert(Dedup.appendPairs(batch, "doc_id", "text", 0.8, key))
-    assert(Dedup.pairSegmentCount(spark, key) == segs)
+    assert(Dedup.pairStore.segmentCount(spark, key) == segs)
     assert(pairSet(Dedup.trainedPairs(corpus, "doc_id", "text", 0.8, key)) == grown)
     // partial replay (one present doc + one new near-dup of it): only the
     // new doc's pairs append, still no (d, d) self-pair
@@ -247,7 +247,7 @@ class PairMaintainSpec extends AnyFunSuite {
   test("appendPairs is a no-op without a memoized artifact") {
     assert(!Dedup.appendPairs(df(batchRows), "doc_id", "text", 0.8,
       "pairspec-unbuilt"))
-    assert(Dedup.pairSegmentCount(spark, "pairspec-unbuilt") == 0)
+    assert(Dedup.pairStore.segmentCount(spark, "pairspec-unbuilt") == 0)
   }
 
   test("admitStreamMaintained(gramSpecs) folds admitted docs' gram counts " +
@@ -335,7 +335,7 @@ class PairMaintainSpec extends AnyFunSuite {
       stream, corpus, idxKey, threshold = 0.9,
       pairsSpecs = Seq((pKey, 0.5, false))) { (_, _) => () }
     try q.processAllAvailable() finally { q.stop(); Dedup.resetIndex(spark, idxKey) }
-    assert(Dedup.pairSegmentCount(spark, pKey) == 2,
+    assert(Dedup.pairStore.segmentCount(spark, pKey) == 2,
       "the admitted batch must have appended a pair segment")
     val grown = pairSet(Dedup.trainedPairs(corpus, "doc_id", "text", 0.5, pKey))
     val fresh = pairSet(Dedup.jaccardPairs(
@@ -468,11 +468,11 @@ class PairMaintainSpec extends AnyFunSuite {
             assert(Dedup.appendGramAdmitted(df(b1), "doc_id", "text", key,
               minLen, batchId = Some(0L), writerId = "w"))
           if (shortBatch) { // docs below the gram window net zero rows:
-            val before = Dedup.gramSegmentCount(spark, key)
+            val before = Dedup.gramStore.segmentCount(spark, key)
             assert(Dedup.appendGramAdmitted(
               df(Seq(31L -> "xx yy")), "doc_id", "text", key,
               minLen, batchId = Some(5L), writerId = "w"))
-            assert(Dedup.gramSegmentCount(spark, key) == before,
+            assert(Dedup.gramStore.segmentCount(spark, key) == before,
               "empty gram batch must not append a segment")
           }
           assert(Dedup.appendGramAdmitted(df(b2), "doc_id", "text", key,
@@ -480,7 +480,7 @@ class PairMaintainSpec extends AnyFunSuite {
           if (replayIds(1L))
             assert(Dedup.appendGramAdmitted(df(b2), "doc_id", "text", key,
               minLen, batchId = Some(1L), writerId = "w"))
-          val grown = Dedup.gramSegmentsOf(spark, key)
+          val grown = Dedup.gramStore.segments(spark, key)
             .reduce(_ unionByName _)
           val fresh = Dedup.gramStats(
             df(corpus ++ b1 ++ b2 ++
@@ -506,18 +506,18 @@ class PairMaintainSpec extends AnyFunSuite {
     Dedup.trainedPairs(docs, "doc_id", "text", 0.9,
       s"$tmp#pairs_lsh:documents@0.9", lsh = true)
     Dedup.trainedIndex(docs, "doc_id", "text", s"$tmp#dedup_idx:documents")
-    assert(Dedup.pairSegmentCount(spark, s"$tmp#pairs:documents@0.9") == 1)
-    assert(Dedup.segmentCount(spark, s"$tmp#dedup_idx:documents") == 1)
+    assert(Dedup.pairStore.segmentCount(spark, s"$tmp#pairs:documents@0.9") == 1)
+    assert(Dedup.indexStore.segmentCount(spark, s"$tmp#dedup_idx:documents") == 1)
     // refreshing ANOTHER table must not touch the documents artifacts
     Sketches.refreshDataset(spark, tmp, "nation")
-    assert(Dedup.pairSegmentCount(spark, s"$tmp#pairs:documents@0.9") == 1)
-    assert(Dedup.pairSegmentCount(spark, s"$tmp#pairs_lsh:documents@0.9") == 1)
-    assert(Dedup.segmentCount(spark, s"$tmp#dedup_idx:documents") == 1)
+    assert(Dedup.pairStore.segmentCount(spark, s"$tmp#pairs:documents@0.9") == 1)
+    assert(Dedup.pairStore.segmentCount(spark, s"$tmp#pairs_lsh:documents@0.9") == 1)
+    assert(Dedup.indexStore.segmentCount(spark, s"$tmp#dedup_idx:documents") == 1)
     // refreshing documents drops the whole derived family
     Sketches.refreshDataset(spark, tmp, "documents")
-    assert(Dedup.pairSegmentCount(spark, s"$tmp#pairs:documents@0.9") == 0)
-    assert(Dedup.pairSegmentCount(spark, s"$tmp#pairs_lsh:documents@0.9") == 0)
-    assert(Dedup.segmentCount(spark, s"$tmp#dedup_idx:documents") == 0)
+    assert(Dedup.pairStore.segmentCount(spark, s"$tmp#pairs:documents@0.9") == 0)
+    assert(Dedup.pairStore.segmentCount(spark, s"$tmp#pairs_lsh:documents@0.9") == 0)
+    assert(Dedup.indexStore.segmentCount(spark, s"$tmp#dedup_idx:documents") == 0)
     Sketches.reset(spark, tmp)
   }
 

@@ -123,11 +123,11 @@ class TermStatsSpec extends AnyFunSuite {
     TermStats.resetTermFreqs(spark, key)
     assert(!TermStats.appendTermFreqs(batchB, "doc_id", "text", key))
     TermStats.trainedTermFreqs(batchA, "doc_id", "text", key)
-    val seg0 = TermStats.tfSegmentsOf(spark, key).head
+    val seg0 = TermStats.tfStore.segments(spark, key).head
     assert(TermStats.appendTermFreqs(batchB, "doc_id", "text", key))
     // O(batch): the prior segment is REFERENCE-IDENTICAL (not rebuilt) and
     // the new segment holds only the batch's own rows
-    val segs = TermStats.tfSegmentsOf(spark, key)
+    val segs = TermStats.tfStore.segments(spark, key)
     assert(segs.size == 2 && (segs.head eq seg0))
     assert(segs(1).count() == 2) // batchB: (3,a,1), (3,c,2)
     // grown artifact ≡ a fresh build over the full corpus
@@ -138,7 +138,7 @@ class TermStatsSpec extends AnyFunSuite {
     // past maxSegments the segments compact to ONE pin, content preserved
     assert(TermStats.appendTermFreqs(batchC, "doc_id", "text", key,
       maxSegments = 2))
-    assert(TermStats.tfSegmentCount(spark, key) == 1)
+    assert(TermStats.tfStore.segmentCount(spark, key) == 1)
     assert(canon(TermStats.trainedTermFreqs(batchA, "doc_id", "text", key)) ==
       canon(TermStats.termFreqs(TermStats.tokens(
         batchA.unionAll(batchB).unionAll(batchC), "doc_id", "text"))))
@@ -146,9 +146,9 @@ class TermStatsSpec extends AnyFunSuite {
     // double its tf rows (at-least-once micro-batch retries), and a batch
     // that nets no new docs appends no segment
     val before = canon(TermStats.trainedTermFreqs(batchA, "doc_id", "text", key))
-    val segCount = TermStats.tfSegmentCount(spark, key)
+    val segCount = TermStats.tfStore.segmentCount(spark, key)
     assert(TermStats.appendTermFreqs(batchB, "doc_id", "text", key))
-    assert(TermStats.tfSegmentCount(spark, key) == segCount,
+    assert(TermStats.tfStore.segmentCount(spark, key) == segCount,
       "replayed batch must not append a segment")
     assert(canon(TermStats.trainedTermFreqs(batchA, "doc_id", "text", key))
       == before, "replayed batch must not change the artifact")
@@ -249,11 +249,11 @@ class TermStatsSpec extends AnyFunSuite {
       "append must use the artifact's built order (bigrams), not n = 1")
     // fresh docs with ZERO unit rows (one-token docs at n = 2) must not
     // checkpoint an empty segment — replays would churn segments forever
-    val segCount = TermStats.tfSegmentCount(spark, key)
+    val segCount = TermStats.tfStore.segmentCount(spark, key)
     assert(TermStats.appendTermFreqs(
       Seq((9L, "alone"), (10L, "word")).toDF("doc_id", "text"),
       "doc_id", "text", key))
-    assert(TermStats.tfSegmentCount(spark, key) == segCount,
+    assert(TermStats.tfStore.segmentCount(spark, key) == segCount,
       "a zero-unit batch must append no segment")
     TermStats.resetTermFreqs(spark, key)
   }
