@@ -69,28 +69,59 @@ object Caching {
 
   /** Pin independent artifacts as CONCURRENT jobs (guide §2.6: one
     * checkpoint latency instead of back-to-back driver round-trips),
-    * all-or-nothing: every pin is awaited, and if any build fails the
-    * pins that did complete are dropped before the FIRST failure's
-    * original exception is rethrown — not its CompletionException
-    * envelope, and never leaving a completed sibling pin orphaned
-    * (a reliable-checkpoint file nothing would ever reclaim).
+    * all-or-nothing: every pin is awaited ([[inParallel]]), and if any
+    * build fails the pins that did complete are dropped before the FIRST
+    * failure's original exception is rethrown — never leaving a completed
+    * sibling pin orphaned (a reliable-checkpoint file nothing would ever
+    * reclaim).
     */
   def pinAll(builds: (() => DataFrame)*): Seq[DataFrame] = {
-    val futs = builds.drop(1).map(b =>
-      java.util.concurrent.CompletableFuture.supplyAsync(() => pinArtifact(b())))
-    val pins = scala.util.Try(pinArtifact(builds.head())) +:
-      futs.map(f => scala.util.Try(f.join()))
-    pins.collectFirst { case scala.util.Failure(e) => e } match {
-      case None => pins.map(_.get)
-      case Some(e) =>
-        pins.foreach(_.foreach(dropArtifact))
-        throw (e match {
-          case c: java.util.concurrent.CompletionException
-            if c.getCause != null => c.getCause
-          case other => other
-        })
+    val pins = new Array[DataFrame](builds.size)
+    try inParallel(builds.indices.map(i =>
+      () => pins(i) = pinArtifact(builds(i)())))
+    catch {
+      case e: Throwable =>
+        pins.filter(_ != null).foreach(dropArtifact)
+        throw e
     }
+    pins.toSeq
   }
+
+  /** Run independent `tasks` (pins, appends or saves of distinct artifacts)
+    * as concurrent jobs and return only when EVERY task has finished: a
+    * caller's finally may release a pin the tasks read, and a sibling still
+    * running would lazily recompute it from scratch (ADVICE r17). The first
+    * failure is then rethrown as the ORIGINAL exception, not its
+    * ExecutionException envelope, so the caller surfaces the task that
+    * failed.
+    *
+    * The pool is a fresh one of at most 4 threads per call, not a shared
+    * one: threads the calling thread creates inherit its Spark local
+    * properties (the micro-batch id, a caller's job-group or trace tags),
+    * so every job a task runs is charged where the caller's jobs are. A
+    * shared pool's reused workers would carry whatever their first caller
+    * had set.
+    */
+  def inParallel(tasks: Seq[() => Any]): Unit =
+    if (tasks.size <= 1) tasks.foreach(_())
+    else {
+      val pool = java.util.concurrent.Executors
+        .newFixedThreadPool(math.min(4, tasks.size))
+      try {
+        val futs = tasks.map(t =>
+          pool.submit(new java.util.concurrent.Callable[Any] {
+            def call(): Any = t()
+          }))
+        val failures = futs.flatMap { f =>
+          try { f.get(); None }
+          catch {
+            case e: java.util.concurrent.ExecutionException =>
+              Some(Option(e.getCause).getOrElse(e))
+          }
+        }
+        failures.headOption.foreach(e => throw e)
+      } finally pool.shutdown()
+    }
 
   /** The reliable-checkpoint path backing a `checkpoint()`ed frame (None for
     * local checkpoints or plans that aren't a checkpoint scan).

@@ -739,10 +739,9 @@ object Dedup {
     * signs and tokenizes only the BATCH, probes the stored signature
     * table, and verifies candidates against the stored token arrays, so the
     * cost is O(batch + candidates) — the corpus is never re-signed or
-    * re-tokenized (with the thunk-per-micro-batch pattern of
-    * [[graft.streaming.CorpusStream.admitStream]], the plain operator
-    * re-derives both corpus artifacts EVERY batch — fine for a backfill,
-    * wrong at stream scale). Output is identical to the plain form on the
+    * re-tokenized (run per micro-batch through [[graft.streaming.eachBatch]]
+    * with a corpus thunk, the plain operator re-derives both corpus
+    * artifacts EVERY batch — fine for a backfill, wrong at stream scale). Output is identical to the plain form on the
     * same data (DedupSpec).
     */
   def minhashIncrementalIndexed(corpusSigs: DataFrame, corpusTokArr: DataFrame,

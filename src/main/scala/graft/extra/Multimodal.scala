@@ -604,12 +604,13 @@ object Multimodal {
     // unshuffled. The exchange carries two slim columns; values are
     // per-row deterministic, so the artifact is partitioning-identical.
     // The append path stays unspread: its batches are already
-    // exchange-bound (OPTIMIZATION_r17.md §3), not scan-bound.
-    val spread = graft.Tables.spreadForCpu(
-      docs.select(col("doc_id"), col("text")))
+    // exchange-bound (OPTIMIZATION_r17.md §3), not scan-bound. The spread
+    // plans the scan and probes its partitioning, so it runs inside the
+    // build: a warm fetch never pays for it.
     graft.Artifacts.unionAll(featureStore.memo(docs.sparkSession, cacheKey)(
-      (graft.Caching.pinArtifact(
-        extractFeaturesRouted(synthesizeEncoded(spread))), ())).segs)
+      (graft.Caching.pinArtifact(extractFeaturesRouted(synthesizeEncoded(
+        graft.Tables.spreadForCpu(docs.select(col("doc_id"), col("text")))))),
+        ())).segs)
   }
 
   /** Fold a batch of NEW documents' decoded features into the memoized

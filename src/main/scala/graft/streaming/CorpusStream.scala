@@ -1,10 +1,9 @@
 package graft.streaming
 
 import graft.extra.TextStats
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
-import org.apache.spark.sql.types.StructType
 
 /** Streaming corpus ingestion operators — the Structured Streaming twins of
   * the batch curation pipeline, for lakes where documents arrive
@@ -18,17 +17,9 @@ object CorpusStream {
     * watermark passes (bounded state on an unbounded stream; duplicates are
     * guaranteed caught within the horizon, the right trade for a corpus
     * ingest that sees its duplicates in bursts). The streaming twin of
-    * CorpusPipeline's fingerprint-dedup stage.
-    */
-  def dedupStream(spark: SparkSession, dir: String, schema: StructType,
-                  textCol: String = "text", tsCol: String = "ts",
-                  horizon: String = "1 hour"): DataFrame =
-    dedupStreamOn(spark.readStream.schema(schema).parquet(dir),
-      textCol, tsCol, horizon)
-
-  /** DataFrame-composable body of [[dedupStream]] — takes an upstream
-    * streaming frame (e.g. the signal gate's output) instead of opening its
-    * own source, so the stages chain into one query ([[curateStream]]).
+    * CorpusPipeline's fingerprint-dedup stage; takes an upstream streaming
+    * frame (a parquet source, or the signal gate's output) so the stages
+    * chain into one query ([[curateStream]]).
     */
   def dedupStreamOn(stream: DataFrame, textCol: String = "text",
                     tsCol: String = "ts",
@@ -39,13 +30,13 @@ object CorpusStream {
       .dropDuplicatesWithinWatermark("fingerprint")
 
   /** Streaming dedup against the HISTORICAL corpus — the other half of
-    * streaming dedup: [[dedupStream]] catches duplicates within the stream's
+    * streaming dedup: [[dedupStreamOn]] catches duplicates within the stream's
     * watermark horizon; this drops arrivals whose fingerprint already exists
     * in the accumulated corpus. A stream-static LEFT ANTI join: Structured
     * Streaming re-plans the static side per micro-batch, so a corpus
     * fingerprint table maintained by the batch pipeline (one slim column —
     * broadcastable far past what raw documents would be) is picked up as it
-    * grows, with zero streaming state. Compose after [[dedupStream]] for
+    * grows, with zero streaming state. Compose after [[dedupStreamOn]] for
     * exactly-once-per-corpus semantics across both horizons.
     */
   def dedupAgainstCorpus(stream: DataFrame, corpusFingerprints: DataFrame,
@@ -56,64 +47,6 @@ object CorpusStream {
     withFp.join(broadcast(corpusFingerprints.select("fingerprint")),
       Seq("fingerprint"), "left_anti")
   }
-
-  /** Streaming NEAR-dup admission — the streaming twin of
-    * [[graft.extra.Dedup.minhashIncremental]], completing the ladder:
-    * [[dedupStream]] catches exact duplicates inside the stream's horizon,
-    * [[dedupAgainstCorpus]] drops exact matches of history, and this gates
-    * arrivals that NEAR-duplicate the accumulated corpus (MinHash bands,
-    * exact-Jaccard verify on candidates). `foreachBatch` hands each
-    * micro-batch to the batch operator VERBATIM — the micro-batch is the
-    * "new batch", and the corpus side is re-resolved per batch through the
-    * `corpus` thunk, so a corpus grown by the batch pipeline (or by this
-    * stream's own admitted output being folded back in) is judged against
-    * at its freshest, with zero streaming state. Per-verdict rows are the
-    * batch schema exactly: (doc_id, keep, dup_of, jac).
-    *
-    * The verify aggregation is why this is foreachBatch rather than a
-    * stream-static join chain: candidate verification groups by (batch doc,
-    * corpus doc), and an unbounded stateful aggregation is the wrong tool
-    * for a verdict that is complete within one micro-batch.
-    */
-  def admitStream(stream: DataFrame, corpus: () => DataFrame,
-                  idCol: String = "doc_id", textCol: String = "text",
-                  threshold: Double = 0.9)
-                 (onVerdict: (DataFrame, Long) => Unit): StreamingQuery =
-    eachBatch(stream) { (batch, id) =>
-      onVerdict(graft.extra.Dedup.minhashIncremental(
-        corpus(), batch, idCol, textCol, threshold), id)
-    }
-
-  /** Start `stream` with `body` run on every micro-batch, releasing the
-    * batch's query-scoped pins ([[graft.Caching.release]]) once it ends.
-    */
-  private def eachBatch(stream: DataFrame)
-                       (body: (DataFrame, Long) => Unit): StreamingQuery =
-    stream.writeStream.foreachBatch { (batch: DataFrame, id: Long) =>
-      try body(batch, id) finally graft.Caching.release()
-    }.start()
-
-  /** [[admitStream]] against the STORED admission-index artifacts
-    * ([[graft.extra.Dedup.bandSignatures]] + token sets) — the form that
-    * survives stream scale: the plain admitStream re-derives both corpus
-    * artifacts from raw text EVERY micro-batch (O(corpus) per batch); this
-    * one signs only the batch and probes the stored tables, so a batch
-    * costs O(batch + candidates). The artifact thunks re-resolve per
-    * micro-batch, so a maintainer appending each admitted batch's
-    * signature/token rows (the per-batch increment is just
-    * `bandSignatures(admitted)` — spec-locked equal to a full re-sign in
-    * DedupSpec) keeps the gate judging against the freshest corpus.
-    */
-  def admitStreamIndexed(stream: DataFrame,
-                         corpusSigs: () => DataFrame,
-                         corpusToks: () => DataFrame,
-                         idCol: String = "doc_id", textCol: String = "text",
-                         threshold: Double = 0.9)
-                        (onVerdict: (DataFrame, Long) => Unit): StreamingQuery =
-    eachBatch(stream) { (batch, id) =>
-      onVerdict(graft.extra.Dedup.minhashIncrementalIndexed(
-        corpusSigs(), corpusToks(), batch, idCol, textCol, threshold), id)
-    }
 
   /** Per-family snapshot subdirectories under a gate snapshot `root`, the
     * one a save writes first — shared by the gate's periodic saves and
@@ -180,35 +113,6 @@ object CorpusStream {
     ("feat", graft.extra.Multimodal.featureStore, featureCacheKeys),
     ("idx", graft.extra.Dedup.indexStore, Seq(cacheKey)))
 
-  /** Run independent maintenance `tasks` (appends or saves of distinct
-    * families) as concurrent jobs from a small pool, and return only when
-    * EVERY task has finished: the outer finally releases the admitted pin,
-    * and a sibling still running would lazily recompute the batch-scan +
-    * verdict join from scratch (ADVICE r17). The first failure is then
-    * rethrown as the ORIGINAL exception, not its ExecutionException
-    * envelope, so the stream surfaces the family that failed.
-    */
-  private def inParallel(tasks: Seq[() => Any]): Unit =
-    if (tasks.size <= 1) tasks.foreach(_())
-    else {
-      val pool = java.util.concurrent.Executors
-        .newFixedThreadPool(math.min(4, tasks.size))
-      try {
-        val futs = tasks.map(t =>
-          pool.submit(new java.util.concurrent.Callable[Any] {
-            def call(): Any = t()
-          }))
-        val failures = futs.flatMap { f =>
-          try { f.get(); None }
-          catch {
-            case e: java.util.concurrent.ExecutionException =>
-              Some(Option(e.getCause).getOrElse(e))
-          }
-        }
-        failures.headOption.foreach(e => throw e)
-      } finally pool.shutdown()
-    }
-
   /** The SELF-MAINTAINING admission gate — the full service loop in one
     * call: the corpus index artifacts are built once
     * ([[graft.extra.Dedup.trainedIndex]]), every micro-batch probes the
@@ -217,9 +121,9 @@ object CorpusStream {
     * batch ([[graft.extra.Dedup.appendAdmitted]] — O(batch) increment,
     * spec-locked equal to a from-scratch re-sign), so a duplicate of an
     * earlier admission is rejected without the caller wiring the loop.
-    * This is the indexed twin of [[admitStream]]'s growing-corpus thunk
-    * pattern, with per-batch cost O(batch + candidates) instead of
-    * O(corpus).
+    * Per-batch cost is O(batch + candidates), where [[eachBatch]] over
+    * [[graft.extra.Dedup.minhashIncremental]] with a growing-corpus thunk
+    * re-derives the corpus artifacts every batch, O(corpus).
     *
     * With `tfCacheKeys` set, each batch's admitted documents are ALSO folded
     * into those [[graft.ingest.TermStats.trainedTermFreqs]] artifacts
@@ -346,7 +250,7 @@ object CorpusStream {
               "session — check the gate's cache keys"))
         }
         id => if ((id + 1) % n == 0) {
-          inParallel(saves.init.flatten)
+          graft.Caching.inParallel(saves.init.flatten)
           saves.last.foreach(_())
         }
     }
@@ -388,7 +292,7 @@ object CorpusStream {
       // tasks) instead of ~5 sequential action round-trips. The replay
       // contract only orders DERIVED-before-INDEX; joining the pool
       // before the admission-index append preserves it exactly.
-      inParallel(
+      graft.Caching.inParallel(
         tfCacheKeys.map(k => () =>
           graft.ingest.TermStats.appendTermFreqs(admitted, idCol, textCol, k)) ++
         pairsSpecs.map { case (pk, pt, plsh) => () => graft.extra.Dedup
@@ -410,48 +314,6 @@ object CorpusStream {
     }
   }
 
-  /** [[admitStreamIndexed]] with the gate's per-batch observability row —
-    * `onBatch` receives (verdicts, metrics, batchId) where metrics is the
-    * one-row (n_batch, n_candidates, n_verified_docs, n_admitted,
-    * n_rejected) frame of
-    * [[graft.extra.Dedup.minhashIncrementalMonitored]]: the numbers an
-    * operator alarms on when a crawl burst hits the admission gate
-    * (candidate volume is the cost driver; admit rate the drift signal).
-    * Metrics are derived from the SAME pinned candidate/verdict frames the
-    * batch already computed — observability costs two counts, not a
-    * second probe.
-    */
-  def admitStreamMonitored(stream: DataFrame,
-                           corpusSigs: () => DataFrame,
-                           corpusToks: () => DataFrame,
-                           idCol: String = "doc_id", textCol: String = "text",
-                           threshold: Double = 0.9)
-                          (onBatch: (DataFrame, DataFrame, Long) => Unit)
-  : StreamingQuery =
-    eachBatch(stream) { (batch, id) =>
-      val (v, m) = graft.extra.Dedup.minhashIncrementalMonitored(
-        corpusSigs(), corpusToks(), batch, idCol, textCol, threshold)
-      onBatch(v, m, id)
-    }
-
-  /** Streaming application of the learned quality filter
-    * ([[graft.extra.Classifier]]) — score every arriving document with a
-    * model trained on the historical corpus. `foreachBatch` because the
-    * per-document score is an aggregate over the document's terms, complete
-    * within one micro-batch (the admitStream rationale); the model thunk
-    * re-resolves per batch, so a periodically-retrained model table is
-    * picked up live with zero streaming state. Scores are byte-identical
-    * to the batch [[graft.extra.Classifier.scoreWith]] (spec-locked).
-    */
-  def nbGateStream(stream: DataFrame, model: () => DataFrame,
-                   priorMicro: Long, idCol: String = "doc_id",
-                   textCol: String = "text")
-                  (onScored: (DataFrame, Long) => Unit): StreamingQuery =
-    eachBatch(stream) { (batch, id) =>
-      onScored(graft.extra.Classifier.scoreWith(batch, idCol, textCol,
-        model(), priorMicro), id)
-    }
-
   /** Streaming quality gate — the ingest-time twin of the per-document
     * signal operators: every arriving document gets its
     * [[graft.extra.Signals.gopherRules]] verdict (all rule columns + keep)
@@ -460,19 +322,9 @@ object CorpusStream {
     * no state), the SAME functions compose onto an unbounded stream
     * unchanged — watermarks, state stores and output modes never enter the
     * picture, and the gate's throughput is the scan's. Compose before
-    * [[dedupStream]] so obviously-rejected documents never occupy dedup
-    * state.
-    */
-  def signalGateStream(spark: SparkSession, dir: String, schema: StructType,
-                       idCol: String = "doc_id",
-                       textCol: String = "text",
-                       blocklistTerms: Seq[String] = Nil): DataFrame =
-    signalGateOn(spark.readStream.schema(schema).parquet(dir), idCol, textCol,
-      blocklistTerms = blocklistTerms)
-
-  /** DataFrame-composable body of [[signalGateStream]]; `passthrough`
-    * columns survive the gate projection (the ladder threads text + ts
-    * through it). With `blocklistTerms` set, the C4-style banned-phrase
+    * [[dedupStreamOn]] so obviously-rejected documents never occupy dedup
+    * state. `passthrough` columns survive the gate projection (the ladder
+    * threads text + ts through it). With `blocklistTerms` set, the C4-style banned-phrase
     * gate ([[graft.extra.Signals.blocklist]]) joins the admission
     * conjunction: `blocklist_hits` is emitted per document and `keep`
     * additionally requires zero hits. Like every other signal here it is
@@ -507,123 +359,87 @@ object CorpusStream {
     * per-stage operators promise: signal gate (drop documents failing the
     * Gopher rules before they occupy any state) → in-stream exact dedup
     * (watermark-bounded state) → exact anti-join against the historical
-    * corpus (stateless) → near-dup admission verdicts (per-micro-batch
-    * batch-operator reuse). Equivalence to the batch pipeline on the same
-    * data is spec-locked (EventWindowsSpec "composed curation ladder").
+    * corpus (stateless) → near-dup admission verdicts
+    * ([[graft.extra.Dedup.minhashIncrementalIndexed]] per micro-batch).
+    * Equivalence to the batch pipeline on the same data is spec-locked
+    * (EventWindowsSpec "composed curation ladder").
     *
-    * The corpus is passed once as a thunk: the anti-join takes its slim
-    * fingerprint projection, the admission stage re-resolves it per
-    * micro-batch — both sides therefore judge against the same snapshot
-    * when the thunk is stable, and against the freshest corpus when it
-    * grows.
-    */
-  def curateStream(stream: DataFrame, corpus: () => DataFrame,
-                   idCol: String = "doc_id", textCol: String = "text",
-                   tsCol: String = "ts", horizon: String = "1 hour",
-                   threshold: Double = 0.9)
-                  (onVerdict: (DataFrame, Long) => Unit): StreamingQuery = {
-    val gated = signalGateOn(stream, idCol, textCol,
-      passthrough = Seq(textCol, tsCol))
-      .filter(col("keep") === 1)
-      .select(col("doc_id").as(idCol), col(textCol), col(tsCol))
-    val inStream = dedupStreamOn(gated, textCol, tsCol, horizon)
-    val vsCorpus = dedupAgainstCorpus(
-      inStream,
-      corpus().select(
-        TextStats.fingerprintCol(col(textCol)).as("fingerprint")),
-      textCol)
-    // admission unions the micro-batch with the corpus by name
-    // (minhashIncremental's tokenization path) — project down to the
-    // corpus schema so the ladder's threaded ts/fingerprint don't leak in
-    admitStream(vsCorpus.select(col(idCol), col(textCol)),
-      corpus, idCol, textCol, threshold)(onVerdict)
-  }
-
-  /** [[curateStream]] against STORED corpus artifacts — the form a
-    * long-running ingest service deploys: the anti-join reads the
+    * The corpus side is read from its artifacts: the anti-join reads the
     * fingerprint table, admission probes the band-signature table and
     * verifies against the token-set table
-    * ([[graft.extra.Dedup.bandSignatures]]/[[graft.extra.Dedup.tokenArraysOf]]),
-    * so NO stage re-derives anything corpus-sized from raw text per
-    * micro-batch. All thunks re-resolve per batch; a maintainer appends
-    * each admitted batch's fingerprint/signature/token rows (increment ≡
-    * full rebuild is spec-locked in DedupSpec) to keep every stage judging
-    * against the freshest corpus.
+    * ([[graft.extra.Dedup.bandSignatures]]/[[graft.extra.Dedup.tokenArraysOf]]).
+    * Stored artifacts make every stage O(batch + candidates) per
+    * micro-batch — the form a long-running ingest service deploys, with a
+    * maintainer appending each admitted batch's rows (increment ≡ full
+    * rebuild is spec-locked in DedupSpec); thunks that derive them from a
+    * corpus frame give the backfill form, which re-derives the corpus side
+    * per batch. The fingerprint thunk is resolved once, when the query
+    * starts (a stream-static join re-plans its static side per batch); the
+    * others re-resolve per micro-batch.
     *
-    * With `corpusGrams` set (the stored [[graft.extra.Dedup.gramStats]]
-    * artifact), the ladder gains the ExactSubstr stage: each verdict row
-    * carries (n_dup_spans, n_dup_tokens) — the document's verbatim
-    * duplicated-span coverage against the corpus and the batch — probed
-    * per micro-batch in O(batch + candidates), maintained via
-    * [[graft.extra.Dedup.appendGramAdmitted]].
+    * Optional ExactSubstr stage(s): verdicts gain per-doc verbatim-span
+    * coverage probed from STORED gram artifacts
+    * ([[graft.extra.Dedup.trainedGramIndex]], maintained via
+    * [[graft.extra.Dedup.appendGramAdmitted]]) —
+    *  - `corpusGrams`: (n_dup_spans, n_dup_tokens) vs the corpus and the
+    *    batch (the self/cross dedup criterion);
+    *  - `benchGrams`: (n_contam_spans, n_contam_tokens) vs a held-out
+    *    BENCHMARK set ([[graft.extra.Dedup.contaminationSpans]] — eval text
+    *    leaking through the stream flags with positions).
+    * Still O(batch + candidates) per micro-batch: the batch is grammed per
+    * stage; corpus-sized artifacts are only equi-join-probed. `keep` stays
+    * the near-dup verdict — span coverage is a separate signal with its
+    * own thresholds, handed to the caller raw. Equivalence to the batch
+    * sweeps is spec-locked (DedupSpec / EventWindowsSpec).
     */
-  def curateStreamIndexed(stream: DataFrame,
-                          corpusFingerprints: () => DataFrame,
-                          corpusSigs: () => DataFrame,
-                          corpusToks: () => DataFrame,
-                          idCol: String = "doc_id", textCol: String = "text",
-                          tsCol: String = "ts", horizon: String = "1 hour",
-                          threshold: Double = 0.9,
-                          corpusGrams: Option[() => DataFrame] = None,
-                          minSpanLen: Int = 12,
-                          benchGrams: Option[() => DataFrame] = None,
-                          minContamLen: Int = 5)
-                         (onVerdict: (DataFrame, Long) => Unit): StreamingQuery = {
+  def curateStream(stream: DataFrame,
+                   corpusFingerprints: () => DataFrame,
+                   corpusSigs: () => DataFrame,
+                   corpusToks: () => DataFrame,
+                   idCol: String = "doc_id", textCol: String = "text",
+                   tsCol: String = "ts", horizon: String = "1 hour",
+                   threshold: Double = 0.9,
+                   corpusGrams: Option[() => DataFrame] = None,
+                   minSpanLen: Int = 12,
+                   benchGrams: Option[() => DataFrame] = None,
+                   minContamLen: Int = 5)
+                  (onVerdict: (DataFrame, Long) => Unit): StreamingQuery = {
+    import graft.extra.Dedup
     val gated = signalGateOn(stream, idCol, textCol,
       passthrough = Seq(textCol, tsCol))
       .filter(col("keep") === 1)
       .select(col("doc_id").as(idCol), col(textCol), col(tsCol))
-    val inStream = dedupStreamOn(gated, textCol, tsCol, horizon)
-    val vsCorpus = dedupAgainstCorpus(inStream, corpusFingerprints(), textCol)
-    val slim = vsCorpus.select(col(idCol), col(textCol))
-    (corpusGrams, benchGrams) match {
-      case (None, None) =>
-        admitStreamIndexed(slim, corpusSigs, corpusToks, idCol, textCol,
-          threshold)(onVerdict)
-      case _ =>
-        // ExactSubstr stage(s): verdicts gain per-doc verbatim-span
-        // coverage probed from STORED gram artifacts
-        // ([[graft.extra.Dedup.trainedGramIndex]]) —
-        //  - `corpusGrams`: (n_dup_spans, n_dup_tokens) vs the corpus and
-        //    the batch (the self/cross dedup criterion);
-        //  - `benchGrams`: (n_contam_spans, n_contam_tokens) vs a held-out
-        //    BENCHMARK set ([[graft.extra.Dedup.contaminationSpans]] —
-        //    eval text leaking through the stream flags with positions).
-        // Still O(batch + candidates) per micro-batch: the batch is
-        // grammed per stage; corpus-sized artifacts are only equi-join-
-        // probed. `keep` stays the near-dup verdict — span coverage is a
-        // separate signal with its own thresholds, handed to the caller
-        // raw. Equivalence to the batch sweeps is spec-locked (DedupSpec /
-        // EventWindowsSpec).
-        eachBatch(slim) { (batch, id) =>
-          val b = graft.Caching.temp(batch)
-          var v = graft.extra.Dedup.minhashIncrementalIndexed(
-            corpusSigs(), corpusToks(), b, idCol, textCol, threshold)
-          corpusGrams.foreach { grams =>
-            val stats = graft.extra.Dedup.spanStats(
-              graft.extra.Dedup.dupSubstringSpansIndexed(
-                grams(), b, idCol, textCol, minSpanLen))
-            v = v.join(stats, Seq("doc_id"), "left")
-              .withColumn("n_dup_spans",
-                coalesce(col("n_dup_spans"), lit(0L)))
-              .withColumn("n_dup_tokens",
-                coalesce(col("n_dup_tokens"), lit(0L)))
-          }
-          benchGrams.foreach { grams =>
-            val stats = graft.extra.Dedup.spanStats(
-              graft.extra.Dedup.contaminationSpans(
-                b, idCol, textCol, grams(), minContamLen))
-              .select(col("doc_id"),
-                col("n_dup_spans").as("n_contam_spans"),
-                col("n_dup_tokens").as("n_contam_tokens"))
-            v = v.join(stats, Seq("doc_id"), "left")
-              .withColumn("n_contam_spans",
-                coalesce(col("n_contam_spans"), lit(0L)))
-              .withColumn("n_contam_tokens",
-                coalesce(col("n_contam_tokens"), lit(0L)))
-          }
-          onVerdict(v, id)
-        }
+    // admission takes (id, text) only: the ladder's threaded ts and
+    // fingerprint columns stop here
+    val slim = dedupAgainstCorpus(dedupStreamOn(gated, textCol, tsCol, horizon),
+      corpusFingerprints(), textCol).select(col(idCol), col(textCol))
+    // (column infix, batch → spans) per configured span stage
+    val spanStages: Seq[(String, DataFrame => DataFrame)] =
+      corpusGrams.toSeq.map(g => "dup" -> ((b: DataFrame) =>
+        Dedup.dupSubstringSpansIndexed(g(), b, idCol, textCol, minSpanLen))) ++
+      benchGrams.toSeq.map(g => "contam" -> ((b: DataFrame) =>
+        Dedup.contaminationSpans(b, idCol, textCol, g(), minContamLen)))
+    eachBatch(slim) { (batch, id) =>
+      // the span stages re-read the batch: pin it only when one runs
+      val b = if (spanStages.isEmpty) batch else graft.Caching.temp(batch)
+      val v = Dedup.minhashIncrementalIndexed(
+        corpusSigs(), corpusToks(), b, idCol, textCol, threshold)
+      onVerdict(spanStages.foldLeft(v) { case (acc, (infix, spans)) =>
+        withSpanCounts(acc, spans(b), infix)
+      }, id)
     }
+  }
+
+  /** `v` left-joined with the per-doc counts of `spans` as
+    * (n_<infix>_spans, n_<infix>_tokens), zero for docs without a span.
+    */
+  private def withSpanCounts(v: DataFrame, spans: DataFrame,
+                             infix: String): DataFrame = {
+    val (n, t) = (s"n_${infix}_spans", s"n_${infix}_tokens")
+    v.join(graft.extra.Dedup.spanStats(spans)
+        .select(col("doc_id"), col("n_dup_spans").as(n),
+          col("n_dup_tokens").as(t)), Seq("doc_id"), "left")
+      .withColumn(n, coalesce(col(n), lit(0L)))
+      .withColumn(t, coalesce(col(t), lit(0L)))
   }
 }

@@ -37,13 +37,14 @@ object SearchStream {
     * `onResult`, then `badRequest` once per failed REQUEST (unknown or null
     * query_id — a serving endpoint must outlive a typo, not die with the
     * stream; the remaining requests in the batch are still answered).
-    * Per-batch pins are released even when a request fails.
+    * Per-batch pins (ranked lists, metadata scores) are released with the
+    * batch ([[eachBatch]]), even when a request fails.
     */
   def serve(spark: SparkSession, dir: String, requests: DataFrame,
             m: Int = 100, l: Int = 50, k: Int = 15,
             badRequest: (String, Throwable) => Unit = (_, _) => ())
            (onResult: (DataFrame, Long) => Unit): StreamingQuery =
-    requests.writeStream.foreachBatch { (batch: DataFrame, id: Long) =>
+    eachBatch(requests) { (batch, id) =>
       val pairs: Seq[(String, String)] = // (request_id, query_id)
         if (batch.columns.contains("request_id"))
           batch.select(col("request_id").cast("string"), col("query_id"))
@@ -54,23 +55,19 @@ object SearchStream {
           batch.select("query_id").distinct()
             .collect().map(_.getString(0)).filter(_ != null).sorted
             .map(q => (q, q)).toSeq
-      try {
-        val answers = pairs.groupBy(_._2).toSeq.sortBy(_._1)
-          .flatMap { case (q, reqs) =>
-            try {
-              val res = CombinedScorer.search(spark, dir, q, m, l, k)
-              Some(reqs.map { case (rid, _) =>
-                res.withColumn("request_id", lit(rid))
-              }.reduce(_.unionAll(_)))
-            } catch {
-              case scala.util.control.NonFatal(e) =>
-                reqs.foreach { case (rid, _) => badRequest(rid, e) }
-                None
-            }
+      val answers = pairs.groupBy(_._2).toSeq.sortBy(_._1)
+        .flatMap { case (q, reqs) =>
+          try {
+            val res = CombinedScorer.search(spark, dir, q, m, l, k)
+            Some(reqs.map { case (rid, _) =>
+              res.withColumn("request_id", lit(rid))
+            }.reduce(_.unionAll(_)))
+          } catch {
+            case scala.util.control.NonFatal(e) =>
+              reqs.foreach { case (rid, _) => badRequest(rid, e) }
+              None
           }
-        if (answers.nonEmpty) onResult(answers.reduce(_.unionAll(_)), id)
-      } finally
-        // per-batch pins (ranked lists, metadata scores) die with the batch
-        graft.Caching.release()
-    }.start()
+        }
+      if (answers.nonEmpty) onResult(answers.reduce(_.unionAll(_)), id)
+    }
 }

@@ -126,8 +126,8 @@ class ClassifierSpec extends AnyFunSuite {
     val scored = scala.collection.mutable.ArrayBuffer
       .empty[(Long, Long, Double, Long)]
     val stream = spark.readStream.schema(arrivals.schema).parquet(dir)
-    val q = graft.streaming.CorpusStream.nbGateStream(
-      stream, () => model, prior) { (v, _) =>
+    val q = graft.streaming.eachBatch(stream) { (batch, _) =>
+      val v = Classifier.scoreWith(batch, "doc_id", "text", model, prior)
       val rows = v.collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3)))
       scored.synchronized { scored ++= rows }

@@ -75,7 +75,8 @@ class EventWindowsSpec extends AnyFunSuite {
     b1.coalesce(1).write.mode("append").parquet(dir)
     b2.coalesce(1).write.mode("append").parquet(dir)
 
-    val q = graft.streaming.CorpusStream.dedupStream(spark, dir, b1.schema)
+    val q = graft.streaming.CorpusStream
+      .dedupStreamOn(spark.readStream.schema(b1.schema).parquet(dir))
       .writeStream.outputMode("append").format("memory").queryName("doc_dedup")
       .start()
     try q.processAllAvailable() finally q.stop()
@@ -99,7 +100,7 @@ class EventWindowsSpec extends AnyFunSuite {
     b2.coalesce(1).write.mode("append").parquet(dir)
 
     val q = graft.streaming.CorpusStream
-      .signalGateStream(spark, dir, b1.schema)
+      .signalGateOn(spark.readStream.schema(b1.schema).parquet(dir))
       .writeStream.outputMode("append").format("memory").queryName("doc_gate")
       .start()
     try q.processAllAvailable() finally q.stop()
@@ -131,7 +132,8 @@ class EventWindowsSpec extends AnyFunSuite {
     val terms = Seq("lorem ipsum", "unused phrase")
 
     val q = graft.streaming.CorpusStream
-      .signalGateStream(spark, dir, docs.schema, blocklistTerms = terms)
+      .signalGateOn(spark.readStream.schema(docs.schema).parquet(dir),
+        blocklistTerms = terms)
       .writeStream.outputMode("append").format("memory").queryName("doc_bl")
       .start()
     try q.processAllAvailable() finally q.stop()
@@ -190,8 +192,9 @@ class EventWindowsSpec extends AnyFunSuite {
       .empty[(Long, Long, Option[Long])]
     val stream = spark.readStream.schema(b1.schema)
       .option("maxFilesPerTrigger", "1").parquet(dir)
-    val q = graft.streaming.CorpusStream.admitStream(
-      stream, () => corpusRows.toDF("doc_id", "text")) { (v, _) =>
+    val q = graft.streaming.eachBatch(stream) { (batch, _) =>
+      val v = graft.extra.Dedup.minhashIncremental(
+        corpusRows.toDF("doc_id", "text"), batch, "doc_id", "text", 0.9)
       val rows = v.collect()
         .map(r => (r.getLong(0), r.getLong(1),
           Option(r.get(2)).map(_.asInstanceOf[Long])))
@@ -294,8 +297,9 @@ class EventWindowsSpec extends AnyFunSuite {
     val seen = scala.collection.mutable.ArrayBuffer
       .empty[(Map[Long, Long], (Long, Long, Long, Long, Long))]
     val stream = spark.readStream.schema(b1.schema).parquet(dir)
-    val q = graft.streaming.CorpusStream.admitStreamMonitored(
-      stream, () => sigs, () => toks) { (v, m, _) =>
+    val q = graft.streaming.eachBatch(stream) { (batch, _) =>
+      val (v, m) = Dedup.minhashIncrementalMonitored(
+        sigs, toks, batch, "doc_id", "text", 0.9)
       val vr = v.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       val mr = m.collect()(0)
       seen.synchronized {
@@ -351,8 +355,11 @@ class EventWindowsSpec extends AnyFunSuite {
     val verdicts = scala.collection.mutable.Map.empty[Long, Long]
     val stream = spark.readStream.schema(b1.schema)
       .option("maxFilesPerTrigger", "1").parquet(dir)
-    val q = graft.streaming.CorpusStream.curateStream(
-      stream, () => corpus) { (v, _) =>
+    val q = graft.streaming.CorpusStream.curateStream(stream,
+      () => corpus.select(
+        TextStats.fingerprintCol(col("text")).as("fingerprint")),
+      () => Dedup.bandSignatures(corpus, "doc_id", "text"),
+      () => Dedup.tokenArraysOf(corpus, "doc_id", "text")) { (v, _) =>
       val rows = v.collect().map(r => r.getLong(0) -> r.getLong(1))
       verdicts.synchronized { verdicts ++= rows }
     }
@@ -392,7 +399,7 @@ class EventWindowsSpec extends AnyFunSuite {
     val verdicts2 = scala.collection.mutable.Map.empty[Long, Long]
     val stream2 = spark.readStream.schema(b1.schema)
       .option("maxFilesPerTrigger", "1").parquet(dir)
-    val q2 = graft.streaming.CorpusStream.curateStreamIndexed(
+    val q2 = graft.streaming.CorpusStream.curateStream(
       stream2, () => fps, () => sigs, () => ctoks) { (v, _) =>
       val rows = v.collect().map(r => r.getLong(0) -> r.getLong(1))
       verdicts2.synchronized { verdicts2 ++= rows }
@@ -410,7 +417,7 @@ class EventWindowsSpec extends AnyFunSuite {
       .option("maxFilesPerTrigger", "1").parquet(dir)
     val microBatches =
       scala.collection.mutable.ArrayBuffer.empty[Seq[(Long, String)]]
-    val q3 = graft.streaming.CorpusStream.curateStreamIndexed(
+    val q3 = graft.streaming.CorpusStream.curateStream(
       stream3, () => fps, () => sigs, () => ctoks,
       corpusGrams = Some(() => grams)) { (v, _) =>
       val rows = v.select("doc_id", "keep", "n_dup_spans", "n_dup_tokens")
@@ -449,7 +456,7 @@ class EventWindowsSpec extends AnyFunSuite {
     val contam = scala.collection.mutable.Map.empty[Long, (Long, Long, Long)]
     val stream4 = spark.readStream.schema(b1.schema)
       .option("maxFilesPerTrigger", "1").parquet(dir)
-    val q4 = graft.streaming.CorpusStream.curateStreamIndexed(
+    val q4 = graft.streaming.CorpusStream.curateStream(
       stream4, () => fps, () => sigs, () => ctoks,
       benchGrams = Some(() => benchArt)) { (v, _) =>
       val rows = v.select("doc_id", "keep", "n_contam_spans", "n_contam_tokens")

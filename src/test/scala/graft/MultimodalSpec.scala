@@ -475,6 +475,18 @@ class MultimodalSpec extends AnyFunSuite {
     Multimodal.resetFeatures(spark, "spec#media:memo")
   }
 
+  test("a warm trainedFeatures fetch never plans its docs argument") {
+    val docs = Tables.load(spark, SparkTestSession.sf0001, "documents").limit(20)
+    Multimodal.resetFeatures(spark, "spec#media:warm")
+    val a = Multimodal.trainedFeatures(docs, "spec#media:warm")
+    // an aggregate is what the build's spreadForCpu rejects: a warm fetch
+    // that still spread its input would throw here
+    val aggregated = docs.groupBy("doc_id").agg(first("text").as("text"))
+    assert(Multimodal.trainedFeatures(aggregated, "spec#media:warm") eq a,
+      "warm fetch must serve the memoized artifact")
+    Multimodal.resetFeatures(spark, "spec#media:warm")
+  }
+
   test("resizeMeta caps the longer side, keeps payload untouched") {
     val resized = Multimodal.resizeMeta(media, 128)
     val r = resized.select(col("meta.width"), col("meta.height")).collect()

@@ -11,17 +11,7 @@ class SessionsSpec extends AnyFunSuite {
     "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
 
   test("src/main/scala builds a SparkSession in exactly one place") {
-    val root = new java.io.File("src/main/scala")
-    def scalaFiles(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory) f.listFiles.toSeq.flatMap(scalaFiles)
-      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
-    val builderCall = """SparkSession\s*\.\s*builder\b""".r
-    val sites = for {
-      f <- scalaFiles(root)
-      src = new String(java.nio.file.Files.readAllBytes(f.toPath),
-        java.nio.charset.StandardCharsets.UTF_8)
-      _ <- builderCall.findAllIn(src)
-    } yield f.getPath.stripPrefix("src/main/scala/")
+    val sites = MainSources.sitesOf("""SparkSession\s*\.\s*builder\b""".r)
     assert(sites == Seq("graft/Sessions.scala"),
       s"SparkSession.builder() outside graft.Sessions: $sites")
   }
